@@ -529,6 +529,13 @@ def psi_pairs_flat(
     itr, wtr, str_ = _compact_valid_pairs(st_r, it_r, wt_r, vids)
     cnt_r = np.diff(str_)
     cnt_c = np.diff(stc)
+    # reduceat over an empty segment returns the element AT its start
+    # instead of 0, and the edge lookup below would clip to -1: a valid
+    # pair (n > 0) must retain items on both sides
+    if cnt_r.min() == 0 or cnt_c.min() == 0:
+        raise ValueError(
+            "psi_pairs_flat: a pair with n > 0 has no retained items"
+        )
     seg_r = np.repeat(np.arange(V, dtype=np.int64), cnt_r)
     seg_c = np.repeat(np.arange(V, dtype=np.int64), cnt_c)
     cum_r = np.cumsum(wtr)

@@ -325,7 +325,6 @@ def _merge_stage(
     df: DataFrame,
     keys: list[str],
     sketch_col: str,
-    emit_sketch: bool = True,
     count_version: int | None = None,
     estimate_col: str = "estimate",
 ) -> DataFrame:
@@ -344,21 +343,20 @@ def _merge_stage(
     Correct for any interleaving because register-max is associative /
     commutative / idempotent (HllByteBuffer.java:341-398 semantics).
 
-    ``count_version`` (r6) additionally FUSES the PFCOUNT estimate into
-    the same Python stage — the separate pf_count_col projection is a
-    second ArrowEvalPython round-trip over the merged sketches, and the
-    fused estimate is bit-identical (same ``estimate_bytes_batch`` over
-    the same canonical bytes). ``emit_sketch=False`` drops the sketch
-    column for count-only consumers. This ONE body backs
-    pf_merge / pf_count_distinct / the north report's sketch+estimate
-    stage, so the 2GB guard and merge semantics cannot drift apart.
+    ``count_version`` (r6) FUSES the PFCOUNT estimate into the same
+    Python stage and emits (keys..., estimate) instead of the sketch —
+    the separate pf_count_col projection is a second ArrowEvalPython
+    round-trip over the merged sketches, and the fused estimate is
+    bit-identical (same ``estimate_bytes_batch`` over the same canonical
+    bytes). This ONE body backs pf_merge / pf_count_distinct / the north
+    report, so the 2GB guard and merge semantics cannot drift apart.
     """
     import pyarrow as pa
 
     out_fields = [df.schema[c] for c in keys]
-    if emit_sketch:
+    if count_version is None:
         out_fields.append(StructField(SKETCH_COL, BinaryType(), False))
-    if count_version is not None:
+    else:
         out_fields.append(StructField(estimate_col, LongType(), True))
     out_schema = StructType(out_fields)
     pruned = df.select(*keys, sketch_col)  # only keys + sketch cross the shuffle
@@ -385,13 +383,8 @@ def _merge_stage(
             merged.column(SKETCH_COL).to_pylist(), count_version
         )
         arrays = [merged.column(c) for c in keys]
-        names = list(keys)
-        if emit_sketch:
-            arrays.append(merged.column(SKETCH_COL))
-            names.append(SKETCH_COL)
         arrays.append(pa.array(est, type=pa.int64()))
-        names.append(estimate_col)
-        yield pa.record_batch(arrays, names=names)
+        yield pa.record_batch(arrays, names=keys + [estimate_col])
 
     return target.mapInArrow(fn, out_schema)
 
@@ -806,12 +799,7 @@ def _merge_count_stage(
     """Fused merge + PFCOUNT in ONE Python stage (round-6): see
     :func:`_merge_stage` (``count_version``) for the rationale."""
     return _merge_stage(
-        df,
-        keys,
-        sketch_col,
-        emit_sketch=False,
-        count_version=version,
-        estimate_col=estimate_col,
+        df, keys, sketch_col, count_version=version, estimate_col=estimate_col
     )
 
 

@@ -7,6 +7,13 @@ dominates at 10^12 rows and must not be repeated per metric.
 Output is long-form: (by..., metric, sketch) — one row per (group x
 element column); the metric column keeps the single-shuffle groupBy
 co-partitioned for all metrics at once.
+
+The report's global rows come from stage P too: each task also emits
+the register max over its groups per metric (register max is
+associative, so merging those per-task globals equals merging the
+per-group sketches), keyed apart from real groups by an internal
+``GLOBAL_COL`` discriminator. Every answer is then stage P, one
+shuffle, stage M.
 """
 
 from __future__ import annotations
@@ -16,18 +23,24 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from pfutil_spark.kernel import hll
 from pfutil_spark.operators.hll_agg import (
     SKETCH_COL,
     _group_codes,
+    _merge_count_stage,
     _out_schema,
     _tiled_binary_array,
     _varbin_buffers,
     pf_count_col,
     pf_merge,
 )
+
+# internal key column of pf_partial_multi(global_rows=True): true on the
+# per-task global partials, false on group partials — so a real group
+# whose by keys are NULL never merges into the global row
+GLOBAL_COL = "__pf_global"
 
 
 def pf_partial_multi(
@@ -37,6 +50,7 @@ def pf_partial_multi(
     version: int = 4,
     max_groups_in_flight: int = 4096,
     direct_emit_groups: int = 4096,
+    global_rows: bool = False,
 ) -> DataFrame:
     """Stage P over several element columns at once: one pass over the
     Arrow batches updates one register vector per (group, element col);
@@ -47,16 +61,29 @@ def pf_partial_multi(
     one :func:`kernel.hll.encode_groups` call per element column, no
     (groups x 16KB x elements) matrices, no per-group Python. Groups
     whose elements are all NULL for a column still emit the canonical
-    empty sketch (matching the accumulation path's semantics)."""
+    empty sketch (matching the accumulation path's semantics).
+
+    ``global_rows=True`` (needs ``by``) emits (by..., GLOBAL_COL, metric,
+    sketch): group rows carry GLOBAL_COL false, and each task that saw
+    any row adds one row per metric with every ``by`` key NULL and
+    GLOBAL_COL true, holding the register max over all its groups — on
+    both the accumulation and the direct-emit path."""
     import pyarrow as pa
 
     by = list(by)
     elements = list(elements)
+    if global_rows and not by:
+        raise ValueError("global_rows needs at least one by column")
     base = _out_schema(df, by)
+    out_keys = base.fields[:-1]
+    if global_rows:
+        # global rows carry NULL keys
+        out_keys = [StructField(f.name, f.dataType, True) for f in out_keys]
+        out_keys.append(StructField(GLOBAL_COL, BooleanType(), False))
     schema = StructType(
-        base.fields[:-1]
-        + [StructField("metric", StringType(), False), base.fields[-1]]
+        out_keys + [StructField("metric", StringType(), False), base.fields[-1]]
     )
+    out_names = by + ([GLOBAL_COL] if global_rows else []) + ["metric", SKETCH_COL]
     cast_cols = []
     for e in elements:
         t = df.schema[e].dataType.typeName()
@@ -70,18 +97,30 @@ def pf_partial_multi(
         import pyarrow.compute as pc
 
         acc: dict[tuple, np.ndarray] = {}  # (key..., metric) -> registers
+        glob: dict[str, np.ndarray] = {}  # metric -> task-global registers
         key_fields: list = []
         seen = False
 
+        def group_flags(n: int) -> list:
+            return [pa.array(np.zeros(n, dtype=bool))] if global_rows else []
+
         def flush() -> "pa.RecordBatch":
             keys = list(acc.keys())
+            if global_rows:
+                for k, regs in acc.items():
+                    g = glob.get(k[-1])
+                    if g is None:
+                        glob[k[-1]] = regs.copy()
+                    else:
+                        np.maximum(g, regs, out=g)
             arrays = [
                 pa.array([k[j] for k in keys], type=key_fields[j].type)
                 for j in range(len(by))
             ]
+            arrays += group_flags(len(keys))
             arrays.append(pa.array([k[-1] for k in keys], type=pa.string()))
             arrays.append(pa.array([hll.encode(acc[k]) for k in keys], type=pa.binary()))
-            return pa.record_batch(arrays, names=by + ["metric", SKETCH_COL])
+            return pa.record_batch(arrays, names=out_names)
 
         for batch in batches:
             if not seen:
@@ -104,9 +143,13 @@ def pf_partial_multi(
                             elem = elem.filter(mask)
                             inv = inverse[np_mask]
                         empty_bytes = hll.encode(hll.empty_registers())
+                        if global_rows and e not in glob:
+                            glob[e] = hll.empty_registers()
                         if len(elem):
                             data8, offs8 = _varbin_buffers(elem)
                             idx, patlen = hll.hash_and_patlen_flat(data8, offs8, version)
+                            if global_rows:
+                                hll.update_registers(glob[e], idx, patlen)
                             present = np.zeros(n_groups, dtype=bool)
                             present[inv] = True
                             if present.all():
@@ -150,8 +193,9 @@ def pf_partial_multi(
                             sk_arr = _tiled_binary_array(empty_bytes, n_groups)
                         yield pa.record_batch(
                             key_arrays
+                            + group_flags(n_groups)
                             + [pa.array([e] * n_groups, type=pa.string()), sk_arr],
-                            names=by + ["metric", SKETCH_COL],
+                            names=out_names,
                         )
                     continue
                 take = pa.array(first_idx)
@@ -201,6 +245,17 @@ def pf_partial_multi(
                 for e in elements:
                     acc[(e,)] = hll.empty_registers()
             yield flush()
+        if glob:
+            n = len(glob)
+            yield pa.record_batch(
+                [pa.nulls(n, type=f.type) for f in key_fields]
+                + [
+                    pa.array(np.ones(n, dtype=bool)),
+                    pa.array(list(glob), type=pa.string()),
+                    pa.array([hll.encode(r) for r in glob.values()], type=pa.binary()),
+                ],
+                names=out_names,
+            )
 
     # same python-native parquet fast path as pf_partial (see
     # operators/pyscan.py): worker-side columnar read, identical kernel
@@ -239,38 +294,17 @@ def sourcecode_distinct_report(
     version: int = 4,
 ) -> DataFrame:
     """The north-star report: distinct repos / paths / commits / content
-    hashes per language AND globally, all from ONE scan of the input.
-    The global rows (by = NULL) are re-merges of the per-lang sketches —
-    no second pass (merge associativity).
-
-    r6: estimates are FUSED into both merge stages (the checkpoint rows
-    carry sketch + estimate; the global branch uses the fused
-    merge+count stage), removing the post-union ArrowEvalPython
-    round-trip. Estimates are bit-identical — same estimator over the
-    same canonical merged bytes."""
-    from pfutil_spark.operators.hll_agg import _merge_count_stage
-
-    partials = pf_partial_multi(df, elements, (by,), version)
-    per_lang = _merge_sketch_count_stage(
-        partials, [by, "metric"], version
-    ).localCheckpoint()
-    glob = _merge_count_stage(
-        per_lang.select("metric", SKETCH_COL), ["metric"], SKETCH_COL, version, "estimate"
-    ).withColumn(by, F.lit(None).cast(df.schema[by].dataType))
-    return per_lang.select(by, "metric", "estimate").unionByName(
-        glob.select(by, "metric", "estimate")
+    hashes per language AND globally (by = NULL), all from ONE scan of
+    the input, in one plan shape: stage P (``pf_partial_multi`` with
+    ``global_rows``: per-task group partials plus per-task global
+    partials), one Exchange on (by, GLOBAL_COL, metric), and one fused
+    merge+PFCOUNT stage. No second shuffle and no checkpoint: the global
+    rows are register maxes of the same partials (merge associativity).
+    GLOBAL_COL keeps a real NULL-``by`` group apart from the global row,
+    so both appear in the output. Pre-read input: 2 jobs, 3 stages (one
+    of them the skipped re-listing of stage P in the result job)."""
+    partials = pf_partial_multi(df, elements, (by,), version, global_rows=True)
+    merged = _merge_count_stage(
+        partials, [by, GLOBAL_COL, "metric"], SKETCH_COL, version, "estimate"
     )
-
-
-def _merge_sketch_count_stage(
-    df: DataFrame, keys: list[str], version: int
-) -> DataFrame:
-    """Merge stage that emits (keys..., sketch, estimate) in ONE Python
-    stage — for reports that need both the mergeable sketch (global
-    re-merge) and its estimate (per-group rows). One parameterization
-    of hll_agg's shared merge-stage body."""
-    from pfutil_spark.operators.hll_agg import _merge_stage
-
-    return _merge_stage(
-        df, keys, SKETCH_COL, emit_sketch=True, count_version=version
-    )
+    return merged.select(by, "metric", "estimate")

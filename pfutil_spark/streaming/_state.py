@@ -2,13 +2,22 @@
 without a transactional catalog (an Iceberg/Delta MERGE would replace
 this): parquet data under ``<dir>/gen={0|1}`` plus a marker file whose
 whitespace-separated integer fields are swapped atomically via
-``os.replace``. Used by StreamingHllState (payload: generation) and
-StreamingSignatureStore (payload: generation + last batch id)."""
+``os.replace``. Used by StreamingHllState (payload: generation, plus a
+manifest of the state's parameters) and StreamingSignatureStore /
+StreamingUpsertStore (payload: generation + last batch id).
+
+The marker (and the manifest) are made durable before they become
+visible: the temp file is fsynced, renamed over the old one, then the
+directory is fsynced so the rename itself survives a crash."""
 
 from __future__ import annotations
 
+import json
 import os
 import warnings
+
+MARKER = "_GEN"
+MANIFEST = "_MANIFEST.json"
 
 
 class GenerationState:
@@ -32,18 +41,42 @@ class GenerationState:
 
     def read(self) -> list[int]:
         """Marker fields, or [] before the first commit."""
-        marker = f"{self.state_dir}/_GEN"
+        marker = f"{self.state_dir}/{MARKER}"
         if not os.path.exists(marker):
             return []
         with open(marker) as f:
             return [int(v) for v in f.read().split()]
 
-    def commit(self, *fields: int) -> None:
+    def read_manifest(self) -> dict | None:
+        """The manifest committed beside the marker, or None (no commit
+        yet, or a state dir written before manifests existed)."""
+        path = f"{self.state_dir}/{MANIFEST}"
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def commit(self, *fields: int, manifest: dict | None = None) -> None:
+        """Durably publish the marker (and ``manifest``, written first so
+        a visible marker never lacks the manifest it was committed
+        with)."""
         os.makedirs(self.state_dir, exist_ok=True)
-        tmp = f"{self.state_dir}/_GEN.tmp"
+        if manifest is not None:
+            self._replace_durably(MANIFEST, json.dumps(manifest, sort_keys=True))
+        self._replace_durably(MARKER, " ".join(str(v) for v in fields))
+        fd = os.open(self.state_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+
+    def _replace_durably(self, name: str, text: str) -> None:
+        tmp = f"{self.state_dir}/{name}.tmp"
         with open(tmp, "w") as f:
-            f.write(" ".join(str(v) for v in fields))
-        os.replace(tmp, f"{self.state_dir}/_GEN")
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, f"{self.state_dir}/{name}")
 
     def marker_pair(self) -> tuple[int, int]:
         """(generation, last committed batch id) — the two-field marker

@@ -1,13 +1,15 @@
 """Structured-Streaming distinct counting.
 
 The mergeable-state contract makes streaming a corollary of the batch
-plan: each micro-batch reduces to per-group partial sketches (the same
-``pf_partial``/``pf_merge`` pipeline), which are merged into a persistent
-sketch-state table via ``foreachBatch``. Register-max idempotence means
-at-least-once batch delivery still yields exactly-correct sketches — a
-replayed micro-batch merges to a no-op, so the sink is effectively
-exactly-once for the STATE even when the engine only guarantees
-at-least-once for the writes.
+plan: each micro-batch reduces to per-group partial sketches (stage P,
+``pf_partial``), which are unioned with the persisted sketch-state rows
+and folded by ONE merge (stage M, ``pf_merge``) into the next state
+generation via ``foreachBatch``. PFMERGE is a register-wise max —
+associative, commutative and idempotent — so the raw partials need no
+merge of their own before meeting the state, and at-least-once batch
+delivery still yields exactly-correct sketches: a replayed micro-batch
+merges to a no-op, so the sink is effectively exactly-once for the STATE
+even when the engine only guarantees at-least-once for the writes.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from pfutil_spark.operators.hll_agg import SKETCH_COL, pf_count_col, pf_merge, pf_partial
 from pfutil_spark.streaming._state import GenerationState
@@ -26,7 +28,23 @@ class StreamingHllState:
 
     State lives as a parquet sketch table at ``state_dir`` (two
     alternating generations for atomic swap without a transactional
-    catalog; with Iceberg configured this would be a single MERGE)."""
+    catalog; with Iceberg configured this would be a single MERGE) plus
+    a manifest, written at the first commit, that records the ``by``
+    names and types, the ``element`` and the HLL ``version``. Reopening
+    a state dir with different parameters raises instead of silently
+    mixing states. A state dir committed before manifests existed is
+    read once with schema inference and gains its manifest at its next
+    commit.
+
+    Plan shapes (counted by tests/test_streaming_state.py):
+
+    * ``update()`` — stage P over the batch, union with the current
+      generation, one Exchange, stage M, parquet write: 2 jobs, 3
+      stages.
+    * ``current()`` — a parquet scan with the schema pinned from the
+      manifest: no job (no schema-inference pass).
+    * ``estimates()`` — that scan plus the PFCOUNT projection: 1 job.
+    """
 
     def __init__(
         self,
@@ -45,6 +63,8 @@ class StreamingHllState:
         self.element = element
         self.by = list(by)
         self.version = version
+        self._schema: StructType | None = None  # committed table schema
+        self._table_schema()
 
     def _gen_path(self, gen: int) -> str:
         return self._state.gen_path(gen)
@@ -53,32 +73,81 @@ class StreamingHllState:
         vals = self._state.read()
         return vals[0] if vals else -1
 
-    def _commit_gen(self, gen: int) -> None:
-        self._state.commit(gen)
+    def _table_schema(self) -> StructType | None:
+        """The committed state's schema, pinned from the manifest after
+        checking it against this instance's parameters; None before the
+        first commit and for a state dir without a manifest."""
+        if self._schema is None and self._state.read():
+            manifest = self._state.read_manifest()
+            if manifest is not None:
+                got = (manifest["by"], manifest["element"], manifest["version"])
+                want = (self.by, self.element, self.version)
+                if got != want:
+                    raise ValueError(
+                        f"state dir {self.state_dir!r} holds HLL state for "
+                        f"by={got[0]}, element={got[1]!r}, version={got[2]}; "
+                        f"opened with by={want[0]}, element={want[1]!r}, "
+                        f"version={want[2]}"
+                    )
+                self._schema = StructType.fromJson(manifest["schema"])
+        return self._schema
+
+    def _read_gen(self, gen: int) -> DataFrame:
+        reader = self.spark.read
+        schema = self._table_schema()
+        if schema is not None:
+            return reader.schema(schema).parquet(self._gen_path(gen))
+        # committed without a manifest: infer once, pin for later reads
+        df = reader.parquet(self._gen_path(gen))
+        if df.columns != [*self.by, SKETCH_COL]:
+            raise ValueError(
+                f"state dir {self.state_dir!r} holds columns {df.columns}; "
+                f"opened with by={self.by}"
+            )
+        self._schema = df.schema
+        return df
 
     def current(self) -> DataFrame | None:
         gen = self._current_gen()
         if gen < 0:
             return None
-        return self.spark.read.parquet(self._gen_path(gen))
+        return self._read_gen(gen)
 
     def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        """Merge one (micro-)batch into the state. Idempotent under
-        replay of the same rows."""
-        batch_partials = pf_merge(
-            pf_partial(batch_df, self.element, self.by, self.version), self.by
-        )
-        prev = self.current()
-        if prev is not None:
-            merged = pf_merge(
-                prev.select(*self.by, SKETCH_COL).unionByName(batch_partials),
-                self.by,
+        """Merge one (micro-)batch into the state: the batch's raw
+        partials and the current generation's rows meet in ONE merge.
+        Idempotent under replay of the same rows."""
+        gen = self._current_gen()
+        schema = self._table_schema()
+        if schema is not None:
+            for c in self.by:
+                got, want = batch_df.schema[c].dataType, schema[c].dataType
+                if got != want:
+                    raise ValueError(
+                        f"batch column {c!r} is {got.simpleString()}; the state "
+                        f"in {self.state_dir!r} keys it as {want.simpleString()}"
+                    )
+        rows = pf_partial(batch_df, self.element, self.by, self.version)
+        if gen >= 0:
+            rows = self._read_gen(gen).unionByName(rows)
+        merged = pf_merge(rows, self.by)
+        merged.write.mode("overwrite").parquet(self._gen_path(gen + 1))
+        manifest = None
+        # a manifest without a marker is left from a crashed first commit
+        if gen < 0 or self._state.read_manifest() is None:
+            # parquet reads every column back as nullable
+            table = StructType(
+                [StructField(f.name, f.dataType, True, f.metadata) for f in merged.schema]
             )
-        else:
-            merged = batch_partials
-        gen = self._current_gen() + 1
-        merged.write.mode("overwrite").parquet(self._gen_path(gen))
-        self._commit_gen(gen)
+            manifest = {
+                "by": self.by,
+                "element": self.element,
+                "version": self.version,
+                "schema": table.jsonValue(),
+            }
+        self._state.commit(gen + 1, manifest=manifest)
+        if manifest is not None:
+            self._schema = table
 
     def estimates(self) -> DataFrame:
         cur = self.current()

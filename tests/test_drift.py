@@ -786,6 +786,29 @@ class TestBatchDecodedEvaluators:
                 else:
                     assert out[i] == kll.psi_distance(a, b, bins), (i, bins)
 
+    def test_psi_pairs_flat_rejects_empty_segment(self):
+        """A pair with n > 0 but no retained items on one side must raise
+        instead of reading a neighbouring segment's items."""
+
+        def parsed(n, items, starts):
+            items = np.asarray(items, dtype=np.float64)
+            return (
+                np.asarray(n, dtype=np.int64),
+                np.zeros(len(n)),
+                items,
+                np.ones(len(items), dtype=np.int64),
+                np.asarray(starts, dtype=np.int64),
+            )
+
+        cur = parsed([3, 2], [1.0, 2.0, 3.0], [0, 3, 3])  # pair 1: empty
+        ref = parsed([2, 2], [1.0, 2.0, 3.0, 4.0], [0, 2, 4])
+        with pytest.raises(ValueError, match="no retained items"):
+            kll.psi_pairs_flat(cur, ref, 4)
+        with pytest.raises(ValueError, match="no retained items"):
+            kll.psi_pairs_flat(ref, cur, 4)
+        ok = parsed([2, 2], [1.0, 2.0, 3.0, 4.0], [0, 2, 4])
+        assert np.isfinite(kll.psi_pairs_flat(ok, ref, 4)).all()
+
     def test_psi_path_has_no_per_pair_python(self, monkeypatch):
         """r6 gate (VERDICT r5 item 4 'Done' criterion): the psi column
         path must never fall back to per-pair psi_arrays."""
