@@ -370,25 +370,39 @@ def estimate_batch(regs2d: np.ndarray, version: int = 4) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 def unpack_dense(payload: np.ndarray) -> np.ndarray:
-    """(n, 12288) uint8 packed bytes -> (n, 16384) uint8 registers."""
+    """(n, 12288) uint8 packed bytes -> (n, 16384) uint8 registers.
+
+    Registers are 6 bits, LSB-first, so every 3 bytes hold exactly 4
+    registers: one shift/mask pass per register lane over (n, 4096)
+    byte triples — no 8x bit expansion."""
     if payload.ndim == 1:
         payload = payload.reshape(1, -1)
     n = payload.shape[0]
-    bits = np.unpackbits(payload, axis=1, bitorder="little")  # (n, 98304)
-    bits6 = bits.reshape(n * HLL_REGISTERS, HLL_BITS)
-    bits8 = np.zeros((n * HLL_REGISTERS, 8), dtype=np.uint8)
-    bits8[:, :HLL_BITS] = bits6
-    return np.packbits(bits8, axis=1, bitorder="little").reshape(n, HLL_REGISTERS)
+    b = payload.reshape(n, HLL_REGISTERS // 4, 3)
+    b0, b1, b2 = b[:, :, 0], b[:, :, 1], b[:, :, 2]
+    out = np.empty((n, HLL_REGISTERS // 4, 4), dtype=np.uint8)
+    np.bitwise_and(b0, 0x3F, out=out[:, :, 0])
+    out[:, :, 1] = (b0 >> 6) | ((b1 & 0x0F) << 2)
+    out[:, :, 2] = (b1 >> 4) | ((b2 & 0x03) << 4)
+    np.right_shift(b2, 2, out=out[:, :, 3])
+    return out.reshape(n, HLL_REGISTERS)
 
 
 def pack_dense(regs2d: np.ndarray) -> np.ndarray:
-    """(n, 16384) uint8 registers -> (n, 12288) uint8 packed payload."""
+    """(n, 16384) uint8 registers -> (n, 12288) uint8 packed payload.
+
+    Inverse of :func:`unpack_dense`: each 4 registers (low 6 bits each)
+    become 3 bytes with shifts and masks."""
     if regs2d.ndim == 1:
         regs2d = regs2d.reshape(1, -1)
     n = regs2d.shape[0]
-    bits8 = np.unpackbits(regs2d.reshape(n * HLL_REGISTERS, 1), axis=1, bitorder="little")
-    bits6 = bits8[:, :HLL_BITS].reshape(n, HLL_REGISTERS * HLL_BITS)
-    return np.packbits(bits6, axis=1, bitorder="little")
+    r = regs2d.reshape(n, HLL_REGISTERS // 4, 4) & np.uint8(HLL_REGISTER_MAX)
+    r0, r1, r2, r3 = r[:, :, 0], r[:, :, 1], r[:, :, 2], r[:, :, 3]
+    out = np.empty((n, HLL_REGISTERS // 4, 3), dtype=np.uint8)
+    out[:, :, 0] = r0 | (r1 << 6)
+    out[:, :, 1] = (r1 >> 2) | (r2 << 4)
+    out[:, :, 2] = (r2 >> 4) | (r3 << 2)
+    return out.reshape(n, HLL_DENSE_SIZE - HEADER_LEN)
 
 
 # ---------------------------------------------------------------------------
@@ -437,7 +451,7 @@ def encode_sparse_payload(regs: np.ndarray) -> bytes | None:
     (any value > 32) or not smaller than the dense payload."""
     nz = np.flatnonzero(regs)
     if len(nz) == 0:
-        return _empty_sparse_payload()
+        return _EMPTY_SPARSE
     vals = regs[nz].astype(np.int64)
     if vals.max() > 32:
         return None
@@ -486,6 +500,9 @@ def _empty_sparse_payload() -> bytes:
     out = bytearray()
     _emit_zero_runs(out, HLL_REGISTERS)
     return bytes(out)
+
+
+_EMPTY_SPARSE = _empty_sparse_payload()
 
 
 # ---------------------------------------------------------------------------
@@ -663,21 +680,117 @@ def encode_groups(
     data[tpos[t2] + 1] = (lt & 0xFF).astype(np.uint8)
 
     # ---- dense fallback (rare: patlen > 32 or pathologically full) ----
-    for gi in np.flatnonzero(~sparse_ok):
-        s = gs_i[gi]
-        e = gs_i[gi + 1] if gi + 1 < n_groups else n_items
-        regs = np.zeros(R, dtype=np.uint8)
-        regs[r[s:e]] = vals[s:e].astype(np.uint8)
-        o = offsets[gi] + HEADER_LEN
-        data[o : o + dense_payload] = pack_dense(regs)[0]
+    # one scatter + pack_dense per block of dense groups
+    dense_g = np.flatnonzero(~sparse_ok)
+    for b in range(0, len(dense_g), _DENSE_BLOCK):
+        dg = dense_g[b : b + _DENSE_BLOCK]
+        slot = np.full(n_groups, -1, dtype=np.int64)
+        slot[dg] = np.arange(len(dg))
+        item_slot = slot[g]
+        m = item_slot >= 0
+        regs = np.zeros((len(dg), R), dtype=np.uint8)
+        regs[item_slot[m], r[m]] = vals[m]
+        _place_dense(data, offsets, dg, regs)
 
+    return data, offsets
+
+
+# sketches per dense-encode block: bounds the register matrix (4MB) when
+# a whole batch goes dense
+_DENSE_BLOCK = 256
+_DENSE_HEADER = np.frombuffer(bytes(_header(ENC_DENSE, None)), dtype=np.uint8)
+
+
+def _fixed_offsets(n: int, size: int) -> np.ndarray:
+    return np.arange(n + 1, dtype=np.int64) * size
+
+
+def _place_dense(
+    data: np.ndarray, offsets: np.ndarray, rows: np.ndarray, regs: np.ndarray
+) -> None:
+    """Write the dense encoding (invalid cache) of ``regs[i]`` to output
+    row ``rows[i]``: one :func:`pack_dense` call for all of them."""
+    out = np.empty((len(rows), HLL_DENSE_SIZE), dtype=np.uint8)
+    out[:, :HEADER_LEN] = _DENSE_HEADER
+    out[:, HEADER_LEN:] = pack_dense(regs)
+    _place_rows(
+        data, offsets, rows, out.reshape(-1), _fixed_offsets(len(rows), HLL_DENSE_SIZE)
+    )
+
+
+def _place_rows(
+    data: np.ndarray,
+    offsets: np.ndarray,
+    rows: np.ndarray,
+    src: np.ndarray,
+    src_offs: np.ndarray,
+) -> None:
+    """Copy item ``i`` of ``(src, src_offs)`` to output row ``rows[i]`` of
+    ``(data, offsets)``, where the items are in ascending row order: one
+    slice copy per run of consecutive rows, not per item."""
+    if len(rows) == 0:
+        return
+    brk = np.flatnonzero(np.diff(rows) != 1) + 1
+    firsts = np.concatenate(([0], brk)).tolist()
+    ends = np.concatenate((brk, [len(rows)])).tolist()
+    for a, e in zip(firsts, ends):
+        lo, hi = int(offsets[rows[a]]), int(offsets[rows[e - 1] + 1])
+        data[lo:hi] = src[src_offs[a] : src_offs[e]]
+
+
+def encode_many(regs2d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Batched :func:`encode` (``cache=None``) over a ``(n, 16384)``
+    register matrix: returns ``(data, offsets)`` like
+    :func:`encode_groups`, byte-identical to ``[encode(r) for r in
+    regs2d]`` with no Python loop over register runs: each class of row
+    is encoded in one batched call, then copied into place with one
+    slice copy per run of consecutive rows of that class.
+
+    Rows are split by the sparse encoder's own pre-checks: all-zero rows
+    get the canonical empty sparse payload; rows with a value above 32 or
+    ``nnz*3 + 4 >= 12288`` go dense through one :func:`pack_dense` call
+    per block of 256 rows; the rest go through :func:`encode_groups` on their nonzero registers
+    (which applies the final strictly-smaller-than-dense check itself).
+    """
+    regs2d = np.ascontiguousarray(regs2d, dtype=np.uint8)
+    n = regs2d.shape[0]
+    dense_payload = HLL_DENSE_SIZE - HEADER_LEN
+    nnz = np.count_nonzero(regs2d, axis=1)
+    maxval = regs2d.max(axis=1, initial=0)
+    zero = nnz == 0
+    dense = ~zero & ((maxval > 32) | (nnz * 3 + 4 >= dense_payload))
+    rows = np.flatnonzero(~zero & ~dense)
+    sub = regs2d[rows]
+    ig, ir = np.nonzero(sub)
+    if len(rows):
+        sdata, soffs = encode_groups(ig, ir, sub[ig, ir], len(rows))
+    else:
+        sdata, soffs = np.zeros(0, np.uint8), np.zeros(1, np.int64)
+    empty = bytes(_header(ENC_SPARSE, None)) + _EMPTY_SPARSE
+    lens = np.full(n, HLL_DENSE_SIZE, dtype=np.int64)
+    lens[zero] = len(empty)
+    lens[rows] = np.diff(soffs)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    data = np.empty(int(offsets[-1]), dtype=np.uint8)
+    _place_rows(data, offsets, rows, sdata, soffs)
+    zrows = np.flatnonzero(zero)
+    _place_rows(
+        data, offsets, zrows,
+        np.tile(np.frombuffer(empty, np.uint8), len(zrows)),
+        _fixed_offsets(len(zrows), len(empty)),
+    )
+    drows = np.flatnonzero(dense)
+    for b in range(0, len(drows), _DENSE_BLOCK):
+        dr = drows[b : b + _DENSE_BLOCK]
+        _place_dense(data, offsets, dr, regs2d[dr])
     return data, offsets
 
 
 def encode_empty(cache: int | None = 0) -> bytes:
     """The reference's fresh 18-byte sparse buffer (header all zero =>
     cache 0 and VALID, so a fresh pfCount returns 0 from cache)."""
-    return bytes(_header(ENC_SPARSE, cache)) + _empty_sparse_payload()
+    return bytes(_header(ENC_SPARSE, cache)) + _EMPTY_SPARSE
 
 
 def is_valid_hll(buf: bytes) -> bool:
@@ -709,7 +822,7 @@ def decode_many(bufs: list[bytes]) -> np.ndarray:
     """Decode a batch of wire buffers -> (n, 16384) uint8.
 
     Fully vectorized: headers validated flat, dense payloads unpacked in
-    ONE unpackbits call, sparse payloads parsed by the flat opcode
+    ONE :func:`unpack_dense` call, sparse payloads parsed by the flat opcode
     scanner and scattered in one fancy-index write — no per-sketch
     opcode walks (the r2 path decoded sparse buffers one by one)."""
     n = len(bufs)

@@ -98,11 +98,11 @@ LINEAGE_COLS = ("_partition_id", "_rows_seen")
 # merge-stage strategy knobs: a work group is HEAVY (matrix max-reduceat)
 # when it has any dense partial or at least this many sparse items;
 # heavy chunks cap their register-matrix allocation at this many bytes.
-# The budget is deliberately SMALL (64 matrix rows): unpack_dense's
-# temporaries run ~230KB per row, glibc only recycles freed mmap'd
-# blocks up to ~32MB back into the arena, and this host faults fresh
-# pages at ~0.12GB/s (NOTES.md) — bounded chunks keep every merge
-# task's working set in warm, reused memory
+# The budget is deliberately SMALL (64 matrix rows): glibc only
+# recycles freed mmap'd blocks up to ~32MB back into the arena, and
+# first-touch page faults were measured at ~0.12GB/s (NOTES.md) —
+# bounded chunks keep every merge task's working set in warm, reused
+# memory
 _HEAVY_ITEMS = 4096
 _MATRIX_BUDGET = 1 << 20
 
@@ -124,6 +124,26 @@ def _tiled_binary_array(item: bytes, n: int) -> "pa.Array":
     offs = np.arange(n + 1, dtype=np.int32) * np.int32(len(b))
     return pa.Array.from_buffers(
         pa.binary(), n, [None, pa.py_buffer(offs), pa.py_buffer(np.tile(b, n))]
+    )
+
+
+def _binary_array(data: np.ndarray, offsets: np.ndarray) -> "pa.Array":
+    """A kernel encoder's ``(data, int64 offsets)`` as an Arrow binary
+    array, zero-copy."""
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def _encoded_array(regs: list[np.ndarray]) -> "pa.Array":
+    """Canonical wire bytes of each register vector, one
+    :func:`kernel.hll.encode_many` call for the lot."""
+    return _binary_array(
+        *hll.encode_many(np.array(regs, dtype=np.uint8).reshape(-1, hll.HLL_REGISTERS))
     )
 
 
@@ -159,8 +179,6 @@ def pf_partial(
     ``lineage=True`` appends per-partial provenance/metrics columns
     (_partition_id, _rows_seen) for checkpoint audit tables.
     """
-    import pyarrow as pa
-
     by = list(by)
     schema = _out_schema(df, by)
     if lineage:
@@ -180,6 +198,43 @@ def pf_partial(
         else F.col(element).cast("string").alias(element)
     )
     pruned = df.select(*by, elem_col)
+
+    partial_fn = _partial_fn(
+        element, by, version, max_groups_in_flight, direct_emit_groups, lineage
+    )
+
+    # python-native parquet scan fast path (guide §4): when the input is
+    # exactly a projection over a small local parquet relation, read the
+    # columns with pyarrow inside the workers — no JVM scan, no
+    # row->Arrow boundary, tasks balanced by rows rather than by row
+    # groups. Feeds the SAME partial_fn, so kernel semantics are
+    # identical; falls back to the JVM scan in every other case
+    # (lineage needs real scan partition ids, so it always falls back).
+    if not lineage:
+        from pfutil_spark.operators import pyscan
+
+        ps = pyscan.try_parquet_pyscan(pruned, by + [element])
+        if ps is not None:
+
+            def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+                yield from partial_fn(pyscan.read_spec_batches(ps, id_batches))
+
+            return pyscan.task_frame(df.sparkSession, ps).mapInArrow(
+                pyscan_fn, schema
+            )
+    return pruned.mapInArrow(partial_fn, schema)
+
+
+def _partial_fn(
+    element: str,
+    by: list[str],
+    version: int,
+    max_groups_in_flight: int,
+    direct_emit_groups: int,
+    lineage: bool,
+):
+    """The ``mapInArrow`` body of :func:`pf_partial`: Arrow batches with
+    columns (by..., element) in, (by..., sketch[, lineage]) batches out."""
 
     def partial_fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -201,7 +256,7 @@ def pf_partial(
                 f = key_fields[j]
                 arrays.append(pa.array([k[j] for k in keys], type=f.type))
                 names.append(c)
-            arrays.append(pa.array([hll.encode(acc[k]) for k in keys], type=pa.binary()))
+            arrays.append(_encoded_array(list(acc.values())))
             names.append(SKETCH_COL)
             if lineage:
                 arrays.append(pa.array([pid] * len(keys), type=pa.int64()))
@@ -233,15 +288,7 @@ def pf_partial(
                             "sketch bytes; lower "
                             "spark.sql.execution.arrow.maxRecordsPerBatch"
                         )
-                    sk_arr = pa.Array.from_buffers(
-                        pa.binary(),
-                        n_groups,
-                        [
-                            None,
-                            pa.py_buffer(offs.astype(np.int32)),
-                            pa.py_buffer(buf),
-                        ],
-                    )
+                    sk_arr = _binary_array(buf, offs)
                     take = pa.array(first_idx)
                     arrays = [batch.column(c).take(take) for c in by] + [sk_arr]
                     names = by + [SKETCH_COL]
@@ -281,26 +328,7 @@ def pf_partial(
         if acc:
             yield flush()
 
-    # python-native parquet scan fast path (guide §4): when the input is
-    # exactly a projection over a small local parquet relation, read the
-    # columns with pyarrow inside the workers — no JVM scan, no
-    # row->Arrow boundary, row-group-slice parallelism finer than any
-    # JVM split. Feeds the SAME partial_fn, so kernel semantics are
-    # identical; falls back to the JVM scan in every other case
-    # (lineage needs real scan partition ids, so it always falls back).
-    if not lineage:
-        from pfutil_spark.operators import pyscan
-
-        ps = pyscan.try_parquet_pyscan(pruned, by + [element])
-        if ps is not None:
-
-            def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-                yield from partial_fn(pyscan.read_spec_batches(ps, id_batches))
-
-            return pyscan.task_frame(df.sparkSession, ps).mapInArrow(
-                pyscan_fn, schema
-            )
-    return pruned.mapInArrow(partial_fn, schema)
+    return partial_fn
 
 
 def _repartition_for_merge(pruned: DataFrame, keys: list[str]) -> DataFrame:
@@ -336,8 +364,8 @@ def _merge_stage(
       canonical invalid-cache header PASS THROUGH untouched (an Arrow
       ``take`` — zero decode/encode; in the near-unique-key regime that
       is ~every group, which is what makes 10^6-group merges cheap)
-    * remaining groups batch-decode (one vectorized unpackbits for the
-      dense ones), register-max via ``np.maximum.reduceat`` over the
+    * remaining groups batch-decode (one shift/mask ``unpack_dense`` for
+      the dense ones), register-max via ``np.maximum.reduceat`` over the
       group-sorted stack, and re-encode canonically.
 
     Correct for any interleaving because register-max is associative /
@@ -617,17 +645,7 @@ def merge_record_batch(
             from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
 
             check_arrow_binary_size(int(moffs[-1]))
-            arrays.append(
-                pa.Array.from_buffers(
-                    pa.binary(),
-                    n_present,
-                    [
-                        None,
-                        pa.py_buffer(moffs.astype(np.int32)),
-                        pa.py_buffer(mdata),
-                    ],
-                )
-            )
+            arrays.append(_binary_array(mdata, moffs))
         hd_mask = np.zeros(len(work_ids), dtype=bool)
         hd_mask[hd_codes] = True
         n_hd = len(hd_codes)
@@ -649,16 +667,8 @@ def merge_record_batch(
             out2d[:, 4] = hll.ENC_DENSE
             out2d[:, 15] = 0x80  # invalid-cache flag
             out2d[:, hll.HEADER_LEN :] = np.vstack(hd_pay_parts)
-            hoffs = np.arange(n_hd + 1, dtype=np.int32) * np.int32(
-                hll.HLL_DENSE_SIZE
-            )
-            arrays.append(
-                pa.Array.from_buffers(
-                    pa.binary(),
-                    n_hd,
-                    [None, pa.py_buffer(hoffs), pa.py_buffer(out2d.reshape(-1))],
-                )
-            )
+            hoffs = np.arange(n_hd + 1, dtype=np.int64) * hll.HLL_DENSE_SIZE
+            arrays.append(_binary_array(out2d.reshape(-1), hoffs))
     concat = pa.concat_arrays([a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays])
     perm = np.empty(n_groups, dtype=np.int64)
     perm[pass_ids] = np.arange(len(pass_ids))

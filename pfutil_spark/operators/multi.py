@@ -29,6 +29,8 @@ from pfutil_spark.kernel import hll
 from pfutil_spark.operators.hll_agg import (
     SKETCH_COL,
     _group_codes,
+    _binary_array,
+    _encoded_array,
     _merge_count_stage,
     _out_schema,
     _tiled_binary_array,
@@ -68,8 +70,6 @@ def pf_partial_multi(
     any row adds one row per metric with every ``by`` key NULL and
     GLOBAL_COL true, holding the register max over all its groups — on
     both the accumulation and the direct-emit path."""
-    import pyarrow as pa
-
     by = list(by)
     elements = list(elements)
     if global_rows and not by:
@@ -83,7 +83,6 @@ def pf_partial_multi(
     schema = StructType(
         out_keys + [StructField("metric", StringType(), False), base.fields[-1]]
     )
-    out_names = by + ([GLOBAL_COL] if global_rows else []) + ["metric", SKETCH_COL]
     cast_cols = []
     for e in elements:
         t = df.schema[e].dataType.typeName()
@@ -91,6 +90,37 @@ def pf_partial_multi(
             F.col(e) if t in ("string", "binary") else F.col(e).cast("string").alias(e)
         )
     pruned = df.select(*by, *cast_cols)
+
+    fn = _partial_multi_fn(
+        by, elements, version, max_groups_in_flight, direct_emit_groups, global_rows
+    )
+
+    # same python-native parquet fast path as pf_partial (see
+    # operators/pyscan.py): worker-side columnar read, identical kernel
+    from pfutil_spark.operators import pyscan
+
+    ps = pyscan.try_parquet_pyscan(pruned, by + elements)
+    if ps is not None:
+
+        def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+            yield from fn(pyscan.read_spec_batches(ps, id_batches))
+
+        return pyscan.task_frame(df.sparkSession, ps).mapInArrow(pyscan_fn, schema)
+    return pruned.mapInArrow(fn, schema)
+
+
+def _partial_multi_fn(
+    by: list[str],
+    elements: list[str],
+    version: int,
+    max_groups_in_flight: int,
+    direct_emit_groups: int,
+    global_rows: bool,
+):
+    """The ``mapInArrow`` body of :func:`pf_partial_multi`: Arrow batches
+    with columns (by..., elements...) in, (by..., [GLOBAL_COL,] metric,
+    sketch) batches out."""
+    out_names = by + ([GLOBAL_COL] if global_rows else []) + ["metric", SKETCH_COL]
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -119,7 +149,7 @@ def pf_partial_multi(
             ]
             arrays += group_flags(len(keys))
             arrays.append(pa.array([k[-1] for k in keys], type=pa.string()))
-            arrays.append(pa.array([hll.encode(acc[k]) for k in keys], type=pa.binary()))
+            arrays.append(_encoded_array(list(acc.values())))
             return pa.record_batch(arrays, names=out_names)
 
         for batch in batches:
@@ -153,11 +183,8 @@ def pf_partial_multi(
                             present = np.zeros(n_groups, dtype=bool)
                             present[inv] = True
                             if present.all():
-                                data, offs = hll.encode_groups(inv, idx, patlen, n_groups)
-                                sk_arr = pa.Array.from_buffers(
-                                    pa.binary(), n_groups,
-                                    [None, pa.py_buffer(offs.astype(np.int32)),
-                                     pa.py_buffer(data)],
+                                sk_arr = _binary_array(
+                                    *hll.encode_groups(inv, idx, patlen, n_groups)
                                 )
                             else:
                                 # all-NULL groups get the canonical empty
@@ -167,13 +194,8 @@ def pf_partial_multi(
                                 # bytes()-slice list comprehension)
                                 remap = np.cumsum(present) - 1
                                 n_present = int(present.sum())
-                                data, offs = hll.encode_groups(
-                                    remap[inv], idx, patlen, n_present
-                                )
-                                present_arr = pa.Array.from_buffers(
-                                    pa.binary(), n_present,
-                                    [None, pa.py_buffer(offs.astype(np.int32)),
-                                     pa.py_buffer(data)],
+                                present_arr = _binary_array(
+                                    *hll.encode_groups(remap[inv], idx, patlen, n_present)
                                 )
                                 concat = pa.concat_arrays(
                                     [
@@ -252,23 +274,12 @@ def pf_partial_multi(
                 + [
                     pa.array(np.ones(n, dtype=bool)),
                     pa.array(list(glob), type=pa.string()),
-                    pa.array([hll.encode(r) for r in glob.values()], type=pa.binary()),
+                    _encoded_array(list(glob.values())),
                 ],
                 names=out_names,
             )
 
-    # same python-native parquet fast path as pf_partial (see
-    # operators/pyscan.py): worker-side columnar read, identical kernel
-    from pfutil_spark.operators import pyscan
-
-    ps = pyscan.try_parquet_pyscan(pruned, by + elements)
-    if ps is not None:
-
-        def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            yield from fn(pyscan.read_spec_batches(ps, id_batches))
-
-        return pyscan.task_frame(df.sparkSession, ps).mapInArrow(pyscan_fn, schema)
-    return pruned.mapInArrow(fn, schema)
+    return fn
 
 
 def pf_count_distinct_multi(

@@ -12,10 +12,18 @@ no matter how many splits Spark plans, so 26 of 32 local cores idle.
 When the input plan is *exactly* a column projection over a local
 parquet relation, none of that boundary is necessary: the Python workers
 can read the parquet columns themselves (pyarrow, columnar, zero JVM
-involvement), split work at row-group-slice granularity (finer than any
-JVM scan can), and feed the identical kernel code. Measured: the
+involvement) and feed the identical kernel code. Measured: the
 flagship-shape global count over 6M rows went 1.68s -> 0.61s with a
 bit-identical estimate.
+
+Tasks are balanced by rows, not by row groups: the plan splits the
+input's rows into ``ceil(total / rows_per_task)`` tasks of equal size,
+where ``rows_per_task = max(minRowsPerTask, ceil(total / targetTasks))``.
+A task may read slices of several row groups (each slice stays inside
+one row group) and feeds them to the partial function as successive
+batches, so it still emits one partial per group. 300k rows in 4 row
+groups of 75k on 3 cores become 3 tasks of 100k rows — one wave, where
+one task per row group left the fourth task running alone.
 
 Scale honesty: this path is gated on total input size
 (``pfutil.pyscan.maxInputBytes``, default cores x 128MB). Big inputs
@@ -24,7 +32,10 @@ the fast path exists precisely for the small-file / few-row-group regime
 where the JVM plan cannot reach the available parallelism. Detection is
 conservative — any plan feature beyond Project(attrs | cast(int->string))
 over a non-partitioned local parquet relation falls back to the JVM scan
-(same results either way; sketch merges are partitioning-independent).
+(same results either way; sketch merges are partitioning-independent),
+and so do footers the pyarrow read could decode differently: a codec
+pyarrow lacks in any row group, or Spark's legacy (hybrid Julian) date
+rebase marker when a date column is read.
 """
 
 from __future__ import annotations
@@ -53,15 +64,26 @@ _PASSTHROUGH_TYPES = {
 _CASTABLE_TYPES = {"long", "integer", "short", "byte"}
 
 
+# codecs pyarrow decodes without extra plugins; anything else (LZO,
+# custom) must fall back to the JVM scan
+_OK_CODECS = {"UNCOMPRESSED", "SNAPPY", "GZIP", "ZSTD", "LZ4", "LZ4_RAW", "BROTLI"}
+# footer key Spark writes when it rebased dates to the hybrid Julian
+# calendar; the JVM scan rebases them back, a pyarrow read would not
+_LEGACY_DATETIME_KEY = b"org.apache.spark.legacyDateTime"
+
+
 @dataclass
 class PyScanPlan:
     """Driver-side description of a python-native scan, shipped to tasks
-    via closure capture. ``specs`` is the task list: (file_idx,
-    row_group, slice_start, slice_len); a retried/speculated task
+    via closure capture. ``specs`` are row-group slices (file_idx,
+    row_group, slice_start, slice_len); task ``t`` reads
+    ``specs[tasks[t][0]:tasks[t][1]]``. A retried/speculated task
     re-reads exactly the same rows, so the scan is idempotent."""
 
     files: list[str]
     specs: list[tuple[int, int, int, int]]
+    # per task: [first, end) range into specs
+    tasks: list[tuple[int, int]]
     # output column name -> (parquet column name, cast_to_string)
     columns: dict[str, tuple[str, bool]]
     # output column name -> arrow type string mapInArrow expects
@@ -169,85 +191,102 @@ def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | N
     except Exception:
         return None  # introspection must never break a query
 
-    # plan tasks from footers: ~one slice per core, never splitting a
-    # slice across row groups (each task decodes only its own row
-    # group's needed column chunks)
+    # plan tasks from footers; every parse and footer read sits inside
+    # the fallback: a malformed conf value or an unreadable footer means
+    # the JVM scan decides the query's fate
     import pyarrow.parquet as pq
 
-    target = int(
-        spark.conf.get(
-            "pfutil.pyscan.targetTasks", str(spark.sparkContext.defaultParallelism)
-        )
-    )
     src_cols = {src for src, _ in columns.values()}
-    # codecs pyarrow decodes without extra plugins; anything else (LZO,
-    # custom) must fall back to the JVM scan
-    _OK_CODECS = {
-        "UNCOMPRESSED", "SNAPPY", "GZIP", "ZSTD", "LZ4", "LZ4_RAW", "BROTLI"
-    }
+    reads_dates = "date32[day]" in arrow_types.values()
     rg_rows: list[tuple[int, int, int]] = []  # (file_idx, rg, rows)
-    total_rows = 0
     try:
+        target = int(
+            spark.conf.get(
+                "pfutil.pyscan.targetTasks", str(spark.sparkContext.defaultParallelism)
+            )
+        )
+        # floor on rows/task: a slice decodes its whole row group's
+        # column chunks, so oversplitting duplicates decode — measured at
+        # 100k-row events, a 32-way oversplit LOSES 0.2s to duplicated
+        # decode + task overhead while 8 tasks match the JVM scan; 65536
+        # keeps tiny files at a handful of tasks
+        min_rows = int(spark.conf.get("pfutil.pyscan.minRowsPerTask", "65536"))
         for fi, path in enumerate(files):
             pf = pq.ParquetFile(path)
             # schema-evolved directories: a file missing one of the
             # needed columns would KeyError on the worker where the JVM
             # scan null-fills — only the JVM scan handles that correctly
-            names = set(pf.schema_arrow.names)
-            if not src_cols <= names:
+            if not src_cols <= set(pf.schema_arrow.names):
                 return None
             md = pf.metadata
+            if reads_dates and _LEGACY_DATETIME_KEY in (md.metadata or {}):
+                return None
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
-                if rg == 0:  # codec is per column chunk; files uniform
-                    for j in range(rgm.num_columns):
-                        col = rgm.column(j)
-                        if (
-                            col.path_in_schema.split(".")[0] in src_cols
-                            and col.compression not in _OK_CODECS
-                        ):
-                            return None
-                r = rgm.num_rows
-                rg_rows.append((fi, rg, r))
-                total_rows += r
+                for j in range(rgm.num_columns):  # codec is per column chunk
+                    col = rgm.column(j)
+                    if (
+                        col.path_in_schema.split(".")[0] in src_cols
+                        and col.compression not in _OK_CODECS
+                    ):
+                        return None
+                rg_rows.append((fi, rg, rgm.num_rows))
     except Exception:
-        return None  # unreadable footer: the JVM scan decides its fate
-    # floor on rows/task: splitting a row group means every task decodes
-    # the whole group's column chunks and slices — measured at 100k-row
-    # events, a 32-way oversplit LOSES 0.2s to duplicated decode + task
-    # overhead while 8 tasks match the JVM scan; 65536 keeps tiny files
-    # at a handful of tasks and million-row groups at full fan-out
-    min_rows = int(spark.conf.get("pfutil.pyscan.minRowsPerTask", "65536"))
-    specs: list[tuple[int, int, int, int]] = []
-    rows_per_task = max(min_rows, -(-total_rows // max(1, target)))
-    for fi, rg, rows in rg_rows:
-        if rows == 0:
-            continue
-        n_slices = max(1, -(-rows // rows_per_task))
-        step = -(-rows // n_slices)
-        for s in range(0, rows, step):
-            specs.append((fi, rg, s, min(step, rows - s)))
-    if not specs:
-        specs.append((0, -1, 0, 0))  # empty relation: one no-op task
+        return None
+    total = sum(r for _, _, r in rg_rows)
+    rows_per_task = max(min_rows, 1, -(-total // max(1, target)))
+    specs, tasks = _balanced_tasks(rg_rows, rows_per_task)
     return PyScanPlan(
         files=files,
         specs=specs,
+        tasks=tasks,
         columns=columns,
         arrow_types=arrow_types,
         out_order=list(out_cols),
     )
 
 
+def _balanced_tasks(
+    rg_rows: list[tuple[int, int, int]], rows_per_task: int
+) -> tuple[list[tuple[int, int, int, int]], list[tuple[int, int]]]:
+    """Split the rows of ``rg_rows`` ((file_idx, row_group, rows) in read
+    order) into ``ceil(total / rows_per_task)`` tasks whose row counts
+    differ by at most one. Returns ``(specs, tasks)`` as in
+    :class:`PyScanPlan`; an empty input plans one no-op task."""
+    total = sum(r for _, _, r in rg_rows)
+    if total == 0:
+        return [(0, -1, 0, 0)], [(0, 1)]
+    n_tasks = -(-total // rows_per_task)
+    groups = iter([g for g in rg_rows if g[2]])
+    specs: list[tuple[int, int, int, int]] = []
+    tasks: list[tuple[int, int]] = []
+    fi = rg = pos = left = 0
+    for t in range(n_tasks):
+        want = total * (t + 1) // n_tasks - total * t // n_tasks
+        first = len(specs)
+        while want:
+            if not left:
+                fi, rg, left = next(groups)
+                pos = 0
+            take = min(want, left)
+            specs.append((fi, rg, pos, take))
+            pos += take
+            left -= take
+            want -= take
+        tasks.append((first, len(specs)))
+    return specs, tasks
+
+
 def task_frame(spark, plan: PyScanPlan) -> DataFrame:
-    """One int64 row per task spec, one spec per partition."""
-    return spark.range(0, len(plan.specs), 1, len(plan.specs))
+    """One int64 row per task, one task per partition."""
+    return spark.range(0, len(plan.tasks), 1, len(plan.tasks))
 
 
 def read_spec_batches(plan: PyScanPlan, id_batches) -> Iterator:
-    """Worker-side: turn this task's spec ids into record batches shaped
+    """Worker-side: turn this task's ids into record batches shaped
     exactly like the JVM scan's mapInArrow input (same column names,
-    same Arrow types), so the downstream kernel code is byte-for-byte
-    the same code path."""
+    same Arrow types), one batch per row-group slice, so the downstream
+    kernel code is byte-for-byte the same code path."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -258,20 +297,20 @@ def read_spec_batches(plan: PyScanPlan, id_batches) -> Iterator:
     src_cols = sorted({src for src, _ in plan.columns.values()})
     open_files: dict[int, "pq.ParquetFile"] = {}
     for i in ids:
-        fi, rg, start, length = plan.specs[i]
-        if rg < 0:
-            continue  # empty-relation no-op task
-        f = open_files.get(fi)
-        if f is None:
-            f = open_files[fi] = pq.ParquetFile(plan.files[fi])
-        tbl = f.read_row_group(rg, columns=src_cols)
-        tbl = tbl.slice(start, length)
-        arrays = []
-        for name in plan.out_order:
-            src, cast = plan.columns[name]
-            arr = tbl.column(src).combine_chunks()
-            want = pa.type_for_alias(plan.arrow_types[name])
-            if cast or not arr.type.equals(want):
-                arr = pc.cast(arr, want)
-            arrays.append(arr)
-        yield pa.record_batch(arrays, names=plan.out_order)
+        first, end = plan.tasks[i]
+        for fi, rg, start, length in plan.specs[first:end]:
+            if rg < 0:
+                continue  # empty-relation no-op task
+            f = open_files.get(fi)
+            if f is None:
+                f = open_files[fi] = pq.ParquetFile(plan.files[fi])
+            tbl = f.read_row_group(rg, columns=src_cols).slice(start, length)
+            arrays = []
+            for name in plan.out_order:
+                src, cast = plan.columns[name]
+                arr = tbl.column(src).combine_chunks()
+                want = pa.type_for_alias(plan.arrow_types[name])
+                if cast or not arr.type.equals(want):
+                    arr = pc.cast(arr, want)
+                arrays.append(arr)
+            yield pa.record_batch(arrays, names=plan.out_order)

@@ -10,19 +10,25 @@ shape tests pin counts, not seconds.
     with spark_counts(spark) as c:
         df.collect()
     assert c.jobs <= 2
+
+``stage_tasks`` maps each stage id to the tasks it planned, so a test
+can pin how many tasks a stage runs (the first stage id of a query is
+its scan / stage P).
 """
 
 from __future__ import annotations
 
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 
 @dataclass
 class SparkCounts:
     jobs: int = 0
     stages: int = 0
+    # stage id -> planned tasks, for the stages the tracker still knows
+    stage_tasks: dict[int, int] = field(default_factory=dict)
 
 
 @contextmanager
@@ -47,3 +53,7 @@ def spark_counts(spark):
                 stages.update(info.stageIds)
         counts.jobs = len(job_ids)
         counts.stages = len(stages)
+        for sid in stages:
+            info = tracker.getStageInfo(sid)
+            if info is not None:
+                counts.stage_tasks[sid] = info.numTasks

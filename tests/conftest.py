@@ -8,6 +8,17 @@ os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
 
 TESTDATA = "/root/testdata"
 
+# Redis-recorded golden dumps (v4/*.dat, v5/*.dat) of the pfutil
+# reference implementation, checked out beside this repository as
+# ``reference/``; PFUTIL_REDIS_FIXTURES points elsewhere
+REDIS_FIXTURES = os.environ.get(
+    "PFUTIL_REDIS_FIXTURES",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        "reference", "core", "src", "test", "resources",
+    ),
+)
+
 
 def plan_of(df, mode: str = "formatted") -> str:
     """Physical-plan text for plan gates (shared by the plan-gating

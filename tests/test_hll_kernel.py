@@ -10,8 +10,7 @@ import numpy as np
 import pytest
 
 from pfutil_spark.kernel import hll
-
-FIXTURES = "/root/reference/core/src/test/resources"
+from tests.conftest import REDIS_FIXTURES as FIXTURES
 
 
 def fixture(name: str) -> bytes:

@@ -5,6 +5,8 @@ independence under Spark's nondeterministic partition orders), and
 estimates must match exact COUNT(DISTINCT) within the published bound.
 """
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -20,6 +22,7 @@ from pfutil_spark.operators import (
     pf_restore_col,
     pf_sketch,
 )
+from tests.conftest import REDIS_FIXTURES
 
 
 def make_df(spark, n=5000, n_groups=7, dup=3, partitions=None):
@@ -106,7 +109,7 @@ def test_dump_restore_roundtrip_through_spark(spark):
 
 
 def test_restore_golden_redis_dump_in_spark(spark):
-    with open("/root/reference/core/src/test/resources/v4/dense_cached_55527.dat", "rb") as f:
+    with open(os.path.join(REDIS_FIXTURES, "v4", "dense_cached_55527.dat"), "rb") as f:
         wire = f.read()
     pdf = pd.DataFrame({"raw": [wire]})
     df = spark.createDataFrame(pdf)

@@ -158,3 +158,62 @@ def test_sourcecode_report_plan_counts(spark, tmp_path):
         rows = sourcecode_distinct_report(df).collect()
     assert c.jobs <= 2, c
     assert sum(1 for r in rows if r["lang"] is None) == 4
+
+
+def test_accumulate_partials_run_no_per_run_python(monkeypatch):
+    """Stage P's accumulate-path flushes (group rows, global rows, and
+    pf_partial's) encode through the batched encoder: with the scalar
+    sparse encoder's run loop made to raise, both partial functions
+    still finish, and their bytes equal the scalar encoder's."""
+    import numpy as np
+    import pyarrow as pa
+
+    from pfutil_spark.kernel import hll
+    from pfutil_spark.operators import hll_agg, multi
+
+    n = 20_000
+    ids = np.arange(n)
+    # group x: dense (20k/3 distinct); y: sparse; z: all-NULL column "a"
+    grp = np.where(ids % 3 == 0, "x", np.where(ids % 3 == 1, "y", "z"))
+    a = [None if g == "z" else (str(i) if g == "x" else str(i % 50)) for i, g in zip(ids, grp)]
+    b = [str(i % 700) for i in ids]
+    batches = [
+        pa.record_batch({"g": pa.array(grp[s : s + 5000]), "a": pa.array(a[s : s + 5000]),
+                         "b": pa.array(b[s : s + 5000])})
+        for s in range(0, n, 5000)
+    ]
+
+    def boom(*_args, **_kwargs):
+        raise AssertionError("per-run scalar encoder called")
+
+    monkeypatch.setattr(hll, "encode_sparse_payload", boom)
+    monkeypatch.setattr(hll, "_emit_zero_runs", boom)
+    fn = multi._partial_multi_fn(["g"], ["a", "b"], 4, 4096, 4096, True)
+    multi_rows = pa.Table.from_batches(list(fn(iter(batches)))).to_pylist()
+    single = {}
+    for by in (["g"], []):
+        pfn = hll_agg._partial_fn("a", by, 4, 8192, 4096, False)
+        single[tuple(by)] = pa.Table.from_batches(list(pfn(iter(batches)))).to_pylist()
+    monkeypatch.undo()
+
+    def expect(mask_rows, col):
+        regs = hll.empty_registers()
+        vals = [v.encode() for v, m in zip(col, mask_rows) if m and v is not None]
+        if vals:
+            hll.update_registers(regs, *hll.hash_and_patlen(vals, 4))
+        return hll.encode(regs)
+
+    got = {(r["g"], r[multi.GLOBAL_COL], r["metric"]): r["sketch"] for r in multi_rows}
+    assert len(got) == 3 * 2 + 2
+    for metric, col in (("a", a), ("b", b)):
+        assert got[(None, True, metric)] == expect([True] * n, col)
+        for g in ("x", "y", "z"):
+            assert got[(g, False, metric)] == expect(grp == g, col)
+    assert {r["g"]: r["sketch"] for r in single[("g",)]} == {
+        g: expect(grp == g, a) for g in ("x", "y")
+    }
+    assert [r["sketch"] for r in single[()]] == [expect([True] * n, a)]
+    # the cases the flushes hit: dense, sparse and empty sketches
+    kinds = {bytes(v)[4] for v in got.values()}
+    assert kinds == {hll.ENC_DENSE, hll.ENC_SPARSE}
+    assert got[("z", False, "a")] == hll.encode(hll.empty_registers())

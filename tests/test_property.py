@@ -185,6 +185,82 @@ def test_encode_groups_matches_canonical_encoder(updates):
         assert bytes(data[offs[g] : offs[g + 1]]) == hll.encode(regs)
 
 
+# a register row: either scattered (position, value) updates, or a
+# seeded fill at an nnz/value edge of the sparse encoder (the
+# nnz*3 + 4 >= 12288 bail sits between 4094 and 4095; VAL opcodes stop
+# at 32)
+_scattered_row = st.dictionaries(
+    st.integers(min_value=0, max_value=hll.HLL_REGISTERS - 1),
+    st.integers(min_value=1, max_value=63),
+    max_size=300,
+)
+_edge_row = st.tuples(
+    st.sampled_from([0, 1, 64, 65, 4093, 4094, 4095, 4096, 8000, hll.HLL_REGISTERS]),
+    st.sampled_from([1, 2, 31, 32, 33, 50]),
+    st.integers(0, 2**31 - 1),
+)
+
+
+def _row(spec) -> np.ndarray:
+    regs = hll.empty_registers()
+    if isinstance(spec, dict):
+        for k, v in spec.items():
+            regs[k] = v
+        return regs
+    nnz, vmax, seed = spec
+    rng = np.random.default_rng(seed)
+    pos = rng.choice(hll.HLL_REGISTERS, size=nnz, replace=False)
+    regs[pos] = rng.integers(1, vmax + 1, size=nnz)
+    return regs
+
+
+@settings(max_examples=120, deadline=None)
+@given(st.lists(st.one_of(_scattered_row, _edge_row), min_size=1, max_size=10))
+def test_encode_many_matches_canonical_encoder(rows):
+    """The batched accumulate-path encoder is byte-identical to encode()
+    row by row, whichever mix of empty, sparse, bailed and dense rows
+    (and in whichever order) the batch holds."""
+    regs2d = np.stack([_row(r) for r in rows])
+    data, offs = hll.encode_many(regs2d)
+    assert len(offs) == len(rows) + 1
+    for i, regs in enumerate(regs2d):
+        assert bytes(data[offs[i] : offs[i + 1]]) == hll.encode(regs)
+
+
+def _pack_dense_unpackbits(regs2d: np.ndarray) -> np.ndarray:
+    """Reference 6-bit packer: expand every register to bits, keep the
+    low 6, repack LSB-first (the codec's original formulation)."""
+    n = regs2d.shape[0]
+    bits8 = np.unpackbits(
+        regs2d.reshape(n * hll.HLL_REGISTERS, 1), axis=1, bitorder="little"
+    )
+    bits6 = bits8[:, : hll.HLL_BITS].reshape(n, hll.HLL_REGISTERS * hll.HLL_BITS)
+    return np.packbits(bits6, axis=1, bitorder="little")
+
+
+def _unpack_dense_unpackbits(payload: np.ndarray) -> np.ndarray:
+    n = payload.shape[0]
+    bits = np.unpackbits(payload, axis=1, bitorder="little")
+    bits8 = np.zeros((n * hll.HLL_REGISTERS, 8), dtype=np.uint8)
+    bits8[:, : hll.HLL_BITS] = bits.reshape(n * hll.HLL_REGISTERS, hll.HLL_BITS)
+    return np.packbits(bits8, axis=1, bitorder="little").reshape(n, hll.HLL_REGISTERS)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(1, 6), st.integers(0, 2**31 - 1), st.sampled_from([1, 32, 63, 255]))
+def test_dense_codec_matches_unpackbits_reference(n, seed, vmax):
+    rng = np.random.default_rng(seed)
+    regs = rng.integers(0, vmax + 1, size=(n, hll.HLL_REGISTERS), dtype=np.uint8)
+    packed = hll.pack_dense(regs)
+    np.testing.assert_array_equal(packed, _pack_dense_unpackbits(regs))
+    payload = rng.integers(0, 256, size=(n, hll.HLL_DENSE_SIZE - hll.HEADER_LEN),
+                           dtype=np.uint8)
+    np.testing.assert_array_equal(
+        hll.unpack_dense(payload), _unpack_dense_unpackbits(payload)
+    )
+    np.testing.assert_array_equal(hll.unpack_dense(packed), regs & 0x3F)
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(

@@ -33,8 +33,8 @@ def _with_pyscan(spark, enabled: bool):
 @pytest.fixture(autouse=True)
 def _reset_conf(spark):
     yield
-    spark.conf.unset("pfutil.pyscan.enabled")
-    spark.conf.unset("pfutil.pyscan.maxInputBytes")
+    for key in ("enabled", "maxInputBytes", "targetTasks", "minRowsPerTask"):
+        spark.conf.unset(f"pfutil.pyscan.{key}")
 
 
 def _li(spark):
@@ -212,3 +212,188 @@ def test_fused_count_matches_two_stage(spark):
         merged.select("l_returnflag", pf_count_col(SKETCH_COL, 4).alias("estimate"))
     )
     assert fused == two_stage
+
+
+# ---------------------------------------------------------------------------
+# balanced task planning
+# ---------------------------------------------------------------------------
+
+
+def _row_groups(path: str) -> list[int]:
+    md = pq.ParquetFile(path).metadata
+    return [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+
+
+def _check_slices(plan, files_rgs: dict[int, list[int]], total: int) -> None:
+    """Every slice lies inside one row group; slices tile the input."""
+    assert sum(ln for _, _, _, ln in plan.specs) == total
+    for fi, rg, start, ln in plan.specs:
+        assert ln > 0 and start >= 0 and start + ln <= files_rgs[fi][rg]
+    # tasks partition the slice list in order
+    assert plan.tasks[0][0] == 0 and plan.tasks[-1][1] == len(plan.specs)
+    assert all(a[1] == b[0] for a, b in zip(plan.tasks, plan.tasks[1:]))
+
+
+def test_pyscan_balances_tasks_across_row_groups(spark, tmp_path):
+    """300k rows in 4 row groups of 75k on targetTasks=3: 3 tasks of
+    100k rows (one wave), not one task per row group."""
+    p = str(tmp_path / "rg.parquet")
+    pq.write_table(
+        pa.table({"v": pa.array(range(300_000), type=pa.int64())}),
+        p,
+        row_group_size=75_000,
+    )
+    assert _row_groups(p) == [75_000] * 4
+    spark.conf.set("pfutil.pyscan.targetTasks", "3")
+    df = spark.read.parquet(p).withColumn("vs", F.col("v").cast("string"))
+    plan = pyscan.try_parquet_pyscan(df.select("vs"), ["vs"])
+    assert plan is not None
+    rows = [sum(plan.specs[i][3] for i in range(a, b)) for a, b in plan.tasks]
+    assert rows == [100_000] * 3
+    _check_slices(plan, {0: _row_groups(p)}, 300_000)
+
+
+def test_pyscan_merged_bytes_match_jvm_for_any_task_count(spark, tmp_path):
+    p = str(tmp_path / "small.parquet")
+    n = 30_000
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([f"g{i % 7}" for i in range(n)]),
+                "v": pa.array(range(n), type=pa.int64()),
+            }
+        ),
+        p,
+        row_group_size=7_500,
+    )
+    df = spark.read.parquet(p).withColumn("vs", F.col("v").cast("string"))
+    _with_pyscan(spark, False)
+    jvm = _rows(pf_sketch(df, "vs", by=("k",)))
+    _with_pyscan(spark, True)
+    spark.conf.set("pfutil.pyscan.minRowsPerTask", "1000")
+    for target in range(1, 6):
+        spark.conf.set("pfutil.pyscan.targetTasks", str(target))
+        plan = pyscan.try_parquet_pyscan(df.select("k", "vs"), ["k", "vs"])
+        assert plan is not None and len(plan.tasks) == target
+        _check_slices(plan, {0: _row_groups(p)}, n)
+        assert _rows(pf_sketch(df, "vs", by=("k",))) == jvm, target
+
+
+def _benchmark_shaped_corpus(d: str, files: int = 4, rows_per_file: int = 75_000) -> None:
+    """The north report's input shape: 300k source-file rows in 4 parquet
+    files of one row group each."""
+    langs = ["JavaScript", "Python", "Java", "C", "Go"]
+    os.makedirs(d)
+    for f in range(files):
+        ids = range(f * rows_per_file, (f + 1) * rows_per_file)
+        pq.write_table(
+            pa.table(
+                {
+                    "lang": pa.array([langs[i % 5] for i in ids]),
+                    "repo": pa.array([f"repo{i // 40}" for i in ids]),
+                    "path": pa.array([f"src/{i // 10}.x" for i in ids]),
+                    "commit": pa.array([f"{i * 2654435761 % 2**40:010x}" for i in ids]),
+                    "content_sha": pa.array([f"{i // 5:064x}" for i in ids]),
+                }
+            ),
+            f"{d}/part-{f:05d}.parquet",
+        )
+
+
+def test_report_stage_p_runs_one_wave(spark, tmp_path):
+    """On 3 cores (targetTasks=3) the north report's stage P over 4
+    row groups of 75k rows runs 3 tasks, where one task per row group
+    ran 4 — and answers as the JVM scan does."""
+    from pfutil_spark.operators.multi import sourcecode_distinct_report
+    from tests._spark_counts import spark_counts
+
+    d = str(tmp_path / "corpus")
+    _benchmark_shaped_corpus(d)
+    spark.conf.set("pfutil.pyscan.targetTasks", "3")
+    df = spark.read.parquet(d)
+    with spark_counts(spark) as c:
+        got = _rows(sourcecode_distinct_report(df))
+    assert c.stage_tasks[min(c.stage_tasks)] == 3
+    _with_pyscan(spark, False)
+    assert _rows(sourcecode_distinct_report(spark.read.parquet(d))) == got
+
+
+# ---------------------------------------------------------------------------
+# footers and confs the pyarrow read must not take
+# ---------------------------------------------------------------------------
+
+
+def test_pyscan_falls_back_on_legacy_date_rebase(spark, tmp_path):
+    """Spark marks files whose dates it rebased to the hybrid Julian
+    calendar; only the JVM scan rebases them back."""
+    import datetime
+
+    tbl = pa.table(
+        {
+            "d": pa.array([datetime.date(1500, 1, 1), datetime.date(2020, 1, 1)]),
+            "v": pa.array([1, 2], type=pa.int64()),
+        }
+    )
+    plain = str(tmp_path / "plain.parquet")
+    legacy = str(tmp_path / "legacy.parquet")
+    pq.write_table(tbl, plain)
+    pq.write_table(
+        tbl.replace_schema_metadata({"org.apache.spark.legacyDateTime": ""}), legacy
+    )
+    for path, engages in ((plain, True), (legacy, False)):
+        df = spark.read.parquet(path).withColumn("vs", F.col("v").cast("string"))
+        plan = pyscan.try_parquet_pyscan(df.select("d", "vs"), ["d", "vs"])
+        assert (plan is not None) == engages, path
+        # no date column read: the marker does not matter
+        assert pyscan.try_parquet_pyscan(df.select("vs"), ["vs"]) is not None
+
+
+def test_pyscan_checks_codecs_in_every_row_group(spark, tmp_path, monkeypatch):
+    """A codec pyarrow cannot decode in a LATER row group must fall back
+    too (the footer check used to look at row group 0 only)."""
+    p = str(tmp_path / "codecs.parquet")
+    pq.write_table(
+        pa.table({"v": pa.array(range(100), type=pa.int64())}), p, row_group_size=50
+    )
+    df = spark.read.parquet(p).withColumn("vs", F.col("v").cast("string"))
+    assert pyscan.try_parquet_pyscan(df.select("vs"), ["vs"]) is not None
+
+    class _Col:
+        def __init__(self, col, codec):
+            self.path_in_schema = col.path_in_schema
+            self.compression = codec or col.compression
+
+    class _RowGroup:
+        def __init__(self, rgm, codec):
+            self._rgm, self._codec = rgm, codec
+            self.num_rows, self.num_columns = rgm.num_rows, rgm.num_columns
+
+        def column(self, j):
+            return _Col(self._rgm.column(j), self._codec)
+
+    class _Meta:
+        def __init__(self, md):
+            self._md = md
+            self.num_row_groups, self.metadata = md.num_row_groups, md.metadata
+
+        def row_group(self, i):
+            return _RowGroup(self._md.row_group(i), "LZO" if i == 1 else None)
+
+    class _LzoInRowGroup1(pq.ParquetFile):
+        @property
+        def metadata(self):
+            return _Meta(super().metadata)
+
+    monkeypatch.setattr(pq, "ParquetFile", _LzoInRowGroup1)
+    assert pyscan.try_parquet_pyscan(df.select("vs"), ["vs"]) is None
+
+
+@pytest.mark.parametrize("key", ["targetTasks", "minRowsPerTask"])
+def test_pyscan_malformed_conf_falls_back(spark, key):
+    li = _li(spark)
+    spark.conf.set(f"pfutil.pyscan.{key}", "three")
+    assert pyscan.try_parquet_pyscan(li.select("ok"), ["ok"]) is None
+    # the query itself still answers, through the JVM scan
+    got = _rows(pf_count_distinct(li, "ok", by=()))
+    _with_pyscan(spark, False)
+    assert _rows(pf_count_distinct(_li(spark), "ok", by=())) == got
