@@ -4,15 +4,21 @@ plan.
 
 Why hand-rolled two-phase instead of a GROUPED_AGG pandas UDF: Spark does
 NOT apply partial aggregation (map-side combine) to pandas UDAFs — every
-row of a group would cross the shuffle.  Here stage P (``mapInPandas``)
-reduces each input partition to ONE constant-size sketch per group before
-any shuffle, so shuffle bytes are O(groups x partitions x sketch), not
-O(rows) — the property that makes the plan survive a 100x scale-up.
+row of a group would cross the shuffle.  Here stage P reduces each input
+partition to ONE constant-size sketch per group before any shuffle, so
+shuffle bytes are O(groups x partitions x sketch), not O(rows) — the
+property that makes the plan survive a 100x scale-up.
 
-    stage P  mapInPandas(partial)        per-partition PFADD accumulation
-    stage S  groupBy(keys[, salt])       the only shuffle
-    stage M  applyInPandas(merge)        register-wise max (PFMERGE)
+    stage P  mapInArrow(partial)         per-task PFADD accumulation
+                                         (multi.pf_partial_multi's body)
+    stage S  repartition(keys)           the only shuffle
+    stage M  mapInArrow(merge)           register-wise max (PFMERGE),
+                                         optionally fused with PFCOUNT
     eval     pf_count_col()              scalar pandas UDF (PFCOUNT)
+
+Stage M (:func:`_arrow_merge_stage`) is also the merge stage of the
+extension sketches (``sketch_agg``): one exchange helper and one 2GB
+guard for both families.
 
 Skew: one hot key's partials (one per input partition) can be spread over
 ``salt_buckets`` intermediate merge tasks — legal because register-max is
@@ -32,16 +38,6 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 from pfutil_spark.kernel import hll
 
 SKETCH_COL = "sketch"
-
-
-def _to_bytes_list(col: pd.Series) -> list[bytes]:
-    """String/binary pandas column -> list of bytes (C-level encode)."""
-    if len(col) == 0:
-        return []
-    first = col.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        return list(col)
-    return list(col.astype("string").str.encode("utf-8"))
 
 
 def _out_schema(df: DataFrame, by: Sequence[str]) -> StructType:
@@ -156,239 +152,44 @@ def pf_partial(
     lineage: bool = False,
     direct_emit_groups: int = 4096,
 ) -> DataFrame:
-    """Stage P: per-partition PFADD into per-group register vectors; emits
-    one ``(by..., sketch)`` row per (partition, group).
-
-    Arrow-native (``mapInArrow``): element bytes are hashed straight out
-    of the Arrow value/offset buffers — zero copies, zero per-row Python.
-    The kernel accumulates ACROSS batches of the partition (bounded by
-    ``max_groups_in_flight`` x 16KB memory; above that it flushes and
-    keeps going), so the number of partial states per group is at most
-    the number of input partitions, not the number of Arrow batches.
-
-    HIGH-CARDINALITY ``by`` (>= ``direct_emit_groups`` distinct keys in a
-    batch — the near-unique-key regime where cross-batch accumulation
-    buys nothing): the batch short-circuits to
-    :func:`kernel.hll.encode_groups`, which writes canonical sparse
-    encodings for ALL groups of the batch into one flat buffer with pure
-    numpy — no (n_groups x 16KB) register matrix (131072 groups would be
-    a 2GB allocation), no per-group Python, keys passed through as Arrow
-    arrays. Output bytes are identical to the accumulation path
-    (both funnel through the canonical encoder).
+    """Stage P: per-task PFADD into per-group register vectors; emits one
+    ``(by..., sketch)`` row per (task, group) — the one-element case of
+    :func:`multi.pf_partial_multi` (accumulation, high-cardinality direct
+    emit, NULL rule and the python-native parquet scan all live there),
+    with its metric column projected away.
 
     ``lineage=True`` appends per-partial provenance/metrics columns
-    (_partition_id, _rows_seen) for checkpoint audit tables.
-    """
-    by = list(by)
-    schema = _out_schema(df, by)
-    if lineage:
-        schema = StructType(
-            schema.fields
-            + [
-                StructField(LINEAGE_COLS[0], LongType(), False),
-                StructField(LINEAGE_COLS[1], LongType(), False),
-            ]
-        )
-    # column pruning before Arrow transfer; non-string/binary elements are
-    # PFADDed by their canonical string form (like redis-cli would send)
-    elem_type = df.schema[element].dataType.typeName()
-    elem_col = (
-        F.col(element)
-        if elem_type in ("string", "binary")
-        else F.col(element).cast("string").alias(element)
-    )
-    pruned = df.select(*by, elem_col)
+    (_partition_id, _rows_seen) for checkpoint audit tables."""
+    from pfutil_spark.operators.multi import _partial_multi
 
-    partial_fn = _partial_fn(
-        element, by, version, max_groups_in_flight, direct_emit_groups, lineage
-    )
-
-    # python-native parquet scan fast path (guide §4): when the input is
-    # exactly a projection over a small local parquet relation, read the
-    # columns with pyarrow inside the workers — no JVM scan, no
-    # row->Arrow boundary, tasks balanced by rows rather than by row
-    # groups. Feeds the SAME partial_fn, so kernel semantics are
-    # identical; falls back to the JVM scan in every other case
-    # (lineage needs real scan partition ids, so it always falls back).
-    if not lineage:
-        from pfutil_spark.operators import pyscan
-
-        ps = pyscan.try_parquet_pyscan(pruned, by + [element])
-        if ps is not None:
-
-            def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-                yield from partial_fn(pyscan.read_spec_batches(ps, id_batches))
-
-            return pyscan.task_frame(df.sparkSession, ps).mapInArrow(
-                pyscan_fn, schema
-            )
-    return pruned.mapInArrow(partial_fn, schema)
+    return _partial_multi(
+        df,
+        [element],
+        by,
+        version,
+        max_groups_in_flight,
+        direct_emit_groups,
+        lineage=lineage,
+        metric_col="__pf_metric",
+    ).drop("__pf_metric")
 
 
-def _partial_fn(
-    element: str,
-    by: list[str],
-    version: int,
-    max_groups_in_flight: int,
-    direct_emit_groups: int,
-    lineage: bool,
-):
-    """The ``mapInArrow`` body of :func:`pf_partial`: Arrow batches with
-    columns (by..., element) in, (by..., sketch[, lineage]) batches out."""
-
-    def partial_fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark import TaskContext
-
-        acc: dict[tuple, np.ndarray] = {}
-        rows_seen: dict[tuple, int] = {}
-        key_fields: list = []
-        seen_schema = False
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-
-        def flush() -> "pa.RecordBatch":
-            keys = list(acc.keys())
-            arrays = []
-            names = []
-            for j, c in enumerate(by):
-                f = key_fields[j]
-                arrays.append(pa.array([k[j] for k in keys], type=f.type))
-                names.append(c)
-            arrays.append(_encoded_array(list(acc.values())))
-            names.append(SKETCH_COL)
-            if lineage:
-                arrays.append(pa.array([pid] * len(keys), type=pa.int64()))
-                arrays.append(pa.array([rows_seen[k] for k in keys], type=pa.int64()))
-                names.extend(LINEAGE_COLS)
-            return pa.record_batch(arrays, names=names)
-
-        for batch in batches:
-            if not seen_schema:
-                key_fields = [batch.schema.field(c) for c in by]
-                seen_schema = True
-            elem = batch.column(element)
-            if elem.null_count:
-                batch = batch.filter(pc.is_valid(elem))
-                elem = batch.column(element)
-            if len(batch) == 0:
-                continue
-            data, offsets = _varbin_buffers(elem)
-            idx, patlen = hll.hash_and_patlen_flat(data, offsets, version)
-            if by:
-                inverse, first_idx = _group_codes(batch, by)
-                n_groups = len(first_idx)
-                if n_groups >= direct_emit_groups:
-                    # high-cardinality batch: vectorized direct emit
-                    buf, offs = hll.encode_groups(inverse, idx, patlen, n_groups)
-                    if offs[-1] > (1 << 31) - 1:  # pathological: ~all dense
-                        raise ValueError(
-                            "pf_partial direct-emit batch exceeds 2GB of "
-                            "sketch bytes; lower "
-                            "spark.sql.execution.arrow.maxRecordsPerBatch"
-                        )
-                    sk_arr = _binary_array(buf, offs)
-                    take = pa.array(first_idx)
-                    arrays = [batch.column(c).take(take) for c in by] + [sk_arr]
-                    names = by + [SKETCH_COL]
-                    if lineage:
-                        counts = np.bincount(inverse, minlength=n_groups)
-                        arrays.append(pa.array(np.full(n_groups, pid, dtype=np.int64)))
-                        arrays.append(pa.array(counts.astype(np.int64)))
-                        names = names + list(LINEAGE_COLS)
-                    yield pa.record_batch(arrays, names=names)
-                    continue
-                local = np.zeros((n_groups, hll.HLL_REGISTERS), dtype=np.uint8)
-                hll.update_registers_grouped(local, inverse, idx, patlen)
-                take = pa.array(first_idx)
-                key_cols = [batch.column(c).take(take).to_pylist() for c in by]
-                counts = np.bincount(inverse, minlength=n_groups)
-                for i in range(n_groups):
-                    k = tuple(col[i] for col in key_cols)
-                    prev = acc.get(k)
-                    if prev is None:
-                        acc[k] = local[i]
-                    else:
-                        np.maximum(prev, local[i], out=prev)
-                    rows_seen[k] = rows_seen.get(k, 0) + int(counts[i])
-            else:
-                regs = acc.get(())
-                if regs is None:
-                    regs = acc[()] = hll.empty_registers()
-                hll.update_registers(regs, idx, patlen)
-                rows_seen[()] = rows_seen.get((), 0) + len(batch)
-            if len(acc) > max_groups_in_flight:
-                yield flush()
-                acc = {}
-                rows_seen = {}
-        if not acc and not by:
-            acc[()] = hll.empty_registers()
-            rows_seen[()] = 0
-        if acc:
-            yield flush()
-
-    return partial_fn
-
-
-def _repartition_for_merge(pruned: DataFrame, keys: list[str]) -> DataFrame:
-    """The merge exchange. Default: hash repartition on the keys and let
-    AQE size the partition count (round-6 interleaved A/B on the
-    17-group x 64-partial flagship merge: explicit 2/17/32 partitions
-    all land within noise of AQE's choice — 1.58-1.72s best reps — so
-    the adaptive default stays). ``pfutil.merge.partitions`` remains as
-    an explicit override for merges whose per-partition sketch bytes
-    approach the 2GB Arrow bound (AQE advisory sizing cannot see that
-    the merge cost is per-sketch CPU, not bytes)."""
-    if not keys:
-        return pruned.repartition(1)
-    spark = pruned.sparkSession
-    n = spark.conf.get("pfutil.merge.partitions", None)
-    if n is not None:
-        return pruned.repartition(int(n), *[F.col(c) for c in keys])
-    return pruned.repartition(*[F.col(c) for c in keys])
-
-
-def _merge_stage(
+def _arrow_merge_stage(
     df: DataFrame,
     keys: list[str],
-    sketch_col: str,
-    count_version: int | None = None,
-    estimate_col: str = "estimate",
+    cols: list[str],
+    schema: StructType,
+    merge_batch,
 ) -> DataFrame:
-    """One hash-partitioned Arrow merge stage: repartition on ``keys``
-    (the only Exchange — no per-partition Sort, unlike applyInPandas),
-    then merge ALL groups of a partition in one vectorized pass:
-
-    * groups with a single partial whose bytes already carry the
-      canonical invalid-cache header PASS THROUGH untouched (an Arrow
-      ``take`` — zero decode/encode; in the near-unique-key regime that
-      is ~every group, which is what makes 10^6-group merges cheap)
-    * remaining groups batch-decode (one shift/mask ``unpack_dense`` for
-      the dense ones), register-max via ``np.maximum.reduceat`` over the
-      group-sorted stack, and re-encode canonically.
-
-    Correct for any interleaving because register-max is associative /
-    commutative / idempotent (HllByteBuffer.java:341-398 semantics).
-
-    ``count_version`` (r6) FUSES the PFCOUNT estimate into the same
-    Python stage and emits (keys..., estimate) instead of the sketch —
-    the separate pf_count_col projection is a second ArrowEvalPython
-    round-trip over the merged sketches, and the fused estimate is
-    bit-identical (same ``estimate_bytes_batch`` over the same canonical
-    bytes). This ONE body backs pf_merge / pf_count_distinct / the north
-    report, so the 2GB guard and merge semantics cannot drift apart.
-    """
-    import pyarrow as pa
-
-    out_fields = [df.schema[c] for c in keys]
-    if count_version is None:
-        out_fields.append(StructField(SKETCH_COL, BinaryType(), False))
-    else:
-        out_fields.append(StructField(estimate_col, LongType(), True))
-    out_schema = StructType(out_fields)
-    pruned = df.select(*keys, sketch_col)  # only keys + sketch cross the shuffle
-    target = _repartition_for_merge(pruned, keys)
+    """The merge stage of every sketch family: hash-repartition
+    ``(keys..., cols...)`` on ``keys`` — the only Exchange, with no
+    per-partition Sort (unlike applyInPandas) and a partition count AQE
+    chooses (explicit counts measured within noise of its choice,
+    NOTES.md) — then combine each partition's Arrow batches into one
+    and yield ``merge_batch(batch)``. Sketch bytes cross Arrow with int32
+    offsets, so a partition over 2GB raises with the fix."""
+    pruned = df.select(*keys, *cols)
+    target = pruned.repartition(*[F.col(c) for c in keys]) if keys else pruned.repartition(1)
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -403,22 +204,60 @@ def _merge_stage(
                 "merge partition exceeds 2GB of sketch bytes; raise "
                 "spark.sql.shuffle.partitions"
             ) from e
+        yield merge_batch(batch)
+
+    return target.mapInArrow(fn, schema)
+
+
+def _merge_stage(
+    df: DataFrame,
+    keys: list[str],
+    sketch_col: str,
+    count_version: int | None = None,
+    estimate_col: str = "estimate",
+) -> DataFrame:
+    """The HLL merge stage (:func:`_arrow_merge_stage`), merging ALL
+    groups of a partition in one vectorized pass:
+
+    * groups with a single partial whose bytes already carry the
+      canonical invalid-cache header PASS THROUGH untouched (an Arrow
+      ``take`` — zero decode/encode; in the near-unique-key regime that
+      is ~every group, which is what makes 10^6-group merges cheap)
+    * remaining groups batch-decode (one shift/mask ``unpack_dense`` for
+      the dense ones), register-max via ``np.maximum.reduceat`` over the
+      group-sorted stack, and re-encode canonically.
+
+    Correct for any interleaving because register-max is associative /
+    commutative / idempotent (HllByteBuffer.java:341-398 semantics).
+
+    ``count_version`` FUSES the PFCOUNT estimate into the same Python
+    stage and emits (keys..., estimate) instead of the sketch — a
+    separate pf_count_col projection would be a second ArrowEvalPython
+    round-trip over the merged sketches, and the fused estimate is
+    bit-identical (same ``estimate_bytes_batch`` over the same canonical
+    bytes). This ONE body backs pf_merge / pf_count_distinct /
+    pf_count_distinct_multi / the north report.
+    """
+    out_fields = [df.schema[c] for c in keys]
+    if count_version is None:
+        out_fields.append(StructField(SKETCH_COL, BinaryType(), False))
+    else:
+        out_fields.append(StructField(estimate_col, LongType(), True))
+
+    def merge_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+        import pyarrow as pa
+
         merged = merge_record_batch(batch, keys, sketch_col)
         if count_version is None:
-            yield merged
-            return
+            return merged
         est = hll.estimate_bytes_batch(
             merged.column(SKETCH_COL).to_pylist(), count_version
         )
         arrays = [merged.column(c) for c in keys]
         arrays.append(pa.array(est, type=pa.int64()))
-        yield pa.record_batch(arrays, names=keys + [estimate_col])
+        return pa.record_batch(arrays, names=keys + [estimate_col])
 
-    return target.mapInArrow(fn, out_schema)
-
-
-def _merge_stage_arrow(df: DataFrame, keys: list[str], sketch_col: str) -> DataFrame:
-    return _merge_stage(df, keys, sketch_col)
+    return _arrow_merge_stage(df, keys, [sketch_col], StructType(out_fields), merge_batch)
 
 
 def _salted_premerge(
@@ -543,8 +382,8 @@ def merge_record_batch(
         #   matrix (memory-bounded chunks) and np.maximum.reduceat —
         #   dense merges are memory-bandwidth-bound there, while
         #   item-ifying them costs a multi-million-item sort (measured
-        #   4x slower than the pandas engine on a 68-group x 64-partial
-        #   dense merge before this split).
+        #   4x slower than a per-group decode + register-max fold on a
+        #   68-group x 64-partial dense merge before this split).
         work_code = np.repeat(
             np.arange(len(work_ids), dtype=np.int64), counts[work_ids]
         )  # dense code per work ROW, group-sorted like `rows`
@@ -609,7 +448,7 @@ def merge_record_batch(
                 # item-ification entirely: pack the matrix rows straight
                 # to wire payloads (in the dense-partial regime that is
                 # ~every heavy group — the multi-million-item sort this
-                # avoids was the arrow engine's cost cliff there)
+                # avoids was this merge's cost cliff there)
                 nnz_m = np.count_nonzero(merged, axis=1)
                 sp_ok = (merged.max(axis=1) <= 32) & (
                     nnz_m * 3 + 4 < dense_payload
@@ -692,15 +531,10 @@ def pf_merge(
     by: Sequence[str] = (),
     sketch_col: str = SKETCH_COL,
     salt_buckets: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """Stage M: PFMERGE all partial sketches of a group into one.
-
-    ``engine='arrow'`` (default) merges every group of a partition in one
-    vectorized pass (see :func:`_merge_stage_arrow`) — same bytes as the
-    pandas engine (asserted by tests), but no per-group pandas calls, so
-    it survives millions of groups. ``engine='pandas'`` keeps the
-    original ``applyInPandas`` fold.
+    """Stage M: PFMERGE all partial sketches of a group into one, every
+    group of a partition in one vectorized pass (see :func:`_merge_stage`)
+    — no per-group Python, so it survives millions of groups.
 
     ``salt_buckets=S`` inserts an intermediate merge keyed by
     ``(by..., pmod(xxhash64(sketch), S))`` so a hot group's partials are
@@ -715,51 +549,10 @@ def pf_merge(
     partitions); leave it off there.
     """
     by = list(by)
-    if engine == "arrow":
-        if salt_buckets and salt_buckets > 1:
-            df = _salted_premerge(df, by, sketch_col, salt_buckets)
-            sketch_col = SKETCH_COL
-        return _merge_stage(df, by, sketch_col)
-
-    schema = _out_schema(df, by)
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = hll.merge_registers(hll.decode_many(list(pdf[sketch_col])))
-        head = pdf.iloc[[0]][by].reset_index(drop=True)
-        head[SKETCH_COL] = [hll.encode(merged)]
-        return head
-
     if salt_buckets and salt_buckets > 1:
-        salted = df.withColumn(
-            "__pf_salt", F.pmod(F.xxhash64(F.col(sketch_col)), F.lit(salt_buckets))
-        )
-        mid_schema = StructType(
-            [df.schema[c] for c in by]
-            + [StructField("__pf_salt", LongType(), False),
-               StructField(SKETCH_COL, BinaryType(), False)]
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            merged = hll.merge_registers(hll.decode_many(list(pdf[sketch_col])))
-            head = pdf.iloc[[0]][by + ["__pf_salt"]].reset_index(drop=True)
-            head[SKETCH_COL] = [hll.encode(merged)]
-            return head
-
-        df = (
-            salted.groupBy(*(by + ["__pf_salt"]))
-            .applyInPandas(merge_salted, mid_schema)
-            .drop("__pf_salt")
-        )
-
-    if by:
-        return df.groupBy(*by).applyInPandas(merge_fn, schema)
-    # global merge: single constant group (tiny — one row per partition)
-    return (
-        df.withColumn("__pf_g", F.lit(1))
-        .groupBy("__pf_g")
-        .applyInPandas(merge_fn, schema)
-        .select(SKETCH_COL)
-    )
+        df = _salted_premerge(df, by, sketch_col, salt_buckets)
+        sketch_col = SKETCH_COL
+    return _merge_stage(df, by, sketch_col)
 
 
 def pf_count_col(sketch_col: str | Column = SKETCH_COL, version: int = 4) -> Column:
@@ -799,20 +592,6 @@ def pf_restore_col(raw_col: str | Column, version: int = 4) -> Column:
     return _restore(F.col(raw_col) if isinstance(raw_col, str) else raw_col)
 
 
-def _merge_count_stage(
-    df: DataFrame,
-    keys: list[str],
-    sketch_col: str,
-    version: int,
-    estimate_col: str,
-) -> DataFrame:
-    """Fused merge + PFCOUNT in ONE Python stage (round-6): see
-    :func:`_merge_stage` (``count_version``) for the rationale."""
-    return _merge_stage(
-        df, keys, sketch_col, count_version=version, estimate_col=estimate_col
-    )
-
-
 def pf_count_distinct(
     df: DataFrame,
     element: str,
@@ -827,7 +606,9 @@ def pf_count_distinct(
     partials = pf_partial(df, element, by, version)
     if salt_buckets and salt_buckets > 1:
         partials = _salted_premerge(partials, by, SKETCH_COL, salt_buckets)
-    return _merge_count_stage(partials, by, SKETCH_COL, version, estimate_col)
+    return _merge_stage(
+        partials, by, SKETCH_COL, count_version=version, estimate_col=estimate_col
+    )
 
 
 def pf_sketch(

@@ -23,20 +23,20 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StringType, StructField, StructType
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
 from pfutil_spark.kernel import hll
 from pfutil_spark.operators.hll_agg import (
+    LINEAGE_COLS,
     SKETCH_COL,
-    _group_codes,
     _binary_array,
     _encoded_array,
-    _merge_count_stage,
+    _group_codes,
+    _merge_stage,
     _out_schema,
+    _salted_premerge,
     _tiled_binary_array,
     _varbin_buffers,
-    pf_count_col,
-    pf_merge,
 )
 
 # internal key column of pf_partial_multi(global_rows=True): true on the
@@ -56,20 +56,52 @@ def pf_partial_multi(
 ) -> DataFrame:
     """Stage P over several element columns at once: one pass over the
     Arrow batches updates one register vector per (group, element col);
-    emits (by..., metric, sketch).
+    emits (by..., metric, sketch). :func:`hll_agg.pf_partial` is the
+    one-element case, so this is the only HLL stage-P body.
 
-    High-cardinality ``by`` (>= ``direct_emit_groups`` keys per batch):
-    same vectorized sparse direct-emit as :func:`hll_agg.pf_partial` —
-    one :func:`kernel.hll.encode_groups` call per element column, no
-    (groups x 16KB x elements) matrices, no per-group Python. Groups
-    whose elements are all NULL for a column still emit the canonical
-    empty sketch (matching the accumulation path's semantics).
+    Arrow-native (``mapInArrow``): element bytes are hashed straight out
+    of the Arrow value/offset buffers, with no per-row Python. Groups
+    accumulate ACROSS the batches of a task (flushing when more than
+    ``max_groups_in_flight`` (group, metric) vectors of 16KB are held),
+    so a group has at most one partial per task, not one per batch.
+
+    High-cardinality ``by`` (>= ``direct_emit_groups`` keys per batch,
+    the near-unique-key regime where accumulating buys nothing): each
+    element column goes through one :func:`kernel.hll.encode_groups`
+    call, with no (groups x 16KB x elements) matrices and no per-group
+    Python. Both paths emit canonical bytes.
+
+    NULL elements are dropped per column. A group whose elements are all
+    NULL for a column still emits the canonical empty sketch on either
+    path, so it reaches the answer with estimate 0, as in SQL's
+    ``COUNT(DISTINCT e) ... GROUP BY``.
 
     ``global_rows=True`` (needs ``by``) emits (by..., GLOBAL_COL, metric,
     sketch): group rows carry GLOBAL_COL false, and each task that saw
     any row adds one row per metric with every ``by`` key NULL and
     GLOBAL_COL true, holding the register max over all its groups — on
     both the accumulation and the direct-emit path."""
+    return _partial_multi(
+        df, elements, by, version, max_groups_in_flight, direct_emit_groups, global_rows
+    )
+
+
+def _partial_multi(
+    df: DataFrame,
+    elements: Sequence[str],
+    by: Sequence[str],
+    version: int,
+    max_groups_in_flight: int,
+    direct_emit_groups: int,
+    global_rows: bool = False,
+    lineage: bool = False,
+    metric_col: str = "metric",
+) -> DataFrame:
+    """:func:`pf_partial_multi`, plus what :func:`hll_agg.pf_partial`
+    needs: ``lineage=True`` appends per-partial provenance columns
+    (``_partition_id``, and ``_rows_seen``: the partial's non-NULL
+    element rows) for checkpoint audit tables, and ``metric_col`` names
+    the metric column, so that it cannot collide with a ``by`` column."""
     by = list(by)
     elements = list(elements)
     if global_rows and not by:
@@ -80,9 +112,14 @@ def pf_partial_multi(
         # global rows carry NULL keys
         out_keys = [StructField(f.name, f.dataType, True) for f in out_keys]
         out_keys.append(StructField(GLOBAL_COL, BooleanType(), False))
+    lineage_fields = [StructField(c, LongType(), False) for c in LINEAGE_COLS]
     schema = StructType(
-        out_keys + [StructField("metric", StringType(), False), base.fields[-1]]
+        out_keys
+        + [StructField(metric_col, StringType(), False), base.fields[-1]]
+        + (lineage_fields if lineage else [])
     )
+    # non-string/binary elements are PFADDed by their canonical string
+    # form (like redis-cli would send)
     cast_cols = []
     for e in elements:
         t = df.schema[e].dataType.typeName()
@@ -92,21 +129,55 @@ def pf_partial_multi(
     pruned = df.select(*by, *cast_cols)
 
     fn = _partial_multi_fn(
-        by, elements, version, max_groups_in_flight, direct_emit_groups, global_rows
+        by, elements, version, max_groups_in_flight, direct_emit_groups, global_rows,
+        lineage, metric_col,
     )
 
-    # same python-native parquet fast path as pf_partial (see
-    # operators/pyscan.py): worker-side columnar read, identical kernel
-    from pfutil_spark.operators import pyscan
+    # python-native parquet fast path (operators/pyscan.py): worker-side
+    # columnar read feeding the same body. Lineage needs the JVM scan's
+    # real partition ids, so it always reads through the JVM.
+    if not lineage:
+        from pfutil_spark.operators import pyscan
 
-    ps = pyscan.try_parquet_pyscan(pruned, by + elements)
-    if ps is not None:
+        ps = pyscan.try_parquet_pyscan(pruned, by + elements)
+        if ps is not None:
 
-        def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            yield from fn(pyscan.read_spec_batches(ps, id_batches))
+            def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+                yield from fn(pyscan.read_spec_batches(ps, id_batches))
 
-        return pyscan.task_frame(df.sparkSession, ps).mapInArrow(pyscan_fn, schema)
+            return pyscan.task_frame(df.sparkSession, ps).mapInArrow(pyscan_fn, schema)
     return pruned.mapInArrow(fn, schema)
+
+
+def _group_sketches(inv: np.ndarray, idx: np.ndarray, patlen: np.ndarray, n_groups: int):
+    """Canonical sketch of each of ``n_groups`` groups from the register
+    updates ``(idx, patlen)`` of group ``inv``, as one Arrow array. Groups
+    with no update (all their elements NULL) get the canonical empty
+    sketch through one tiled buffer and a permutation take — no
+    per-group Python."""
+    import pyarrow as pa
+
+    present = np.zeros(n_groups, dtype=bool)
+    present[inv] = True
+    n_present = int(present.sum())
+    arrays = []
+    if n_present:
+        codes = inv if n_present == n_groups else (np.cumsum(present) - 1)[inv]
+        data, offs = hll.encode_groups(codes, idx, patlen, n_present)
+        if offs[-1] > (1 << 31) - 1:  # pathological: ~all dense
+            raise ValueError(
+                "stage-P direct-emit batch exceeds 2GB of sketch bytes; lower "
+                "spark.sql.execution.arrow.maxRecordsPerBatch"
+            )
+        if n_present == n_groups:
+            return _binary_array(data, offs)
+        arrays.append(_binary_array(data, offs))
+    arrays.append(
+        _tiled_binary_array(hll.encode(hll.empty_registers()), n_groups - n_present)
+    )
+    perm = np.cumsum(present) - 1
+    perm[~present] = n_present + np.arange(n_groups - n_present)
+    return pa.concat_arrays(arrays).take(pa.array(perm))
 
 
 def _partial_multi_fn(
@@ -116,23 +187,40 @@ def _partial_multi_fn(
     max_groups_in_flight: int,
     direct_emit_groups: int,
     global_rows: bool,
+    lineage: bool = False,
+    metric_col: str = "metric",
 ):
     """The ``mapInArrow`` body of :func:`pf_partial_multi`: Arrow batches
     with columns (by..., elements...) in, (by..., [GLOBAL_COL,] metric,
-    sketch) batches out."""
-    out_names = by + ([GLOBAL_COL] if global_rows else []) + ["metric", SKETCH_COL]
+    sketch[, LINEAGE_COLS...]) batches out."""
+    out_names = (
+        by
+        + ([GLOBAL_COL] if global_rows else [])
+        + [metric_col, SKETCH_COL]
+        + (list(LINEAGE_COLS) if lineage else [])
+    )
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark import TaskContext
 
         acc: dict[tuple, np.ndarray] = {}  # (key..., metric) -> registers
+        rows_seen: dict[tuple, int] = {}  # (key..., metric) -> element rows
         glob: dict[str, np.ndarray] = {}  # metric -> task-global registers
         key_fields: list = []
         seen = False
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else -1
 
         def group_flags(n: int) -> list:
             return [pa.array(np.zeros(n, dtype=bool))] if global_rows else []
+
+        def lineage_arrays(counts) -> list:
+            if not lineage:
+                return []
+            counts = np.asarray(counts, dtype=np.int64)
+            return [pa.array(np.full(len(counts), pid, dtype=np.int64)), pa.array(counts)]
 
         def flush() -> "pa.RecordBatch":
             keys = list(acc.keys())
@@ -150,6 +238,7 @@ def _partial_multi_fn(
             arrays += group_flags(len(keys))
             arrays.append(pa.array([k[-1] for k in keys], type=pa.string()))
             arrays.append(_encoded_array(list(acc.values())))
+            arrays += lineage_arrays([rows_seen[k] for k in keys])
             return pa.record_batch(arrays, names=out_names)
 
         for batch in batches:
@@ -161,111 +250,67 @@ def _partial_multi_fn(
             if by:
                 inverse, first_idx = _group_codes(batch, by)
                 n_groups = len(first_idx)
-                if n_groups >= direct_emit_groups:
-                    take = pa.array(first_idx)
-                    key_arrays = [batch.column(c).take(take) for c in by]
-                    for e in elements:
-                        elem = batch.column(e)
-                        inv = inverse
-                        if elem.null_count:
-                            mask = pc.is_valid(elem)
-                            np_mask = mask.to_numpy(zero_copy_only=False)
-                            elem = elem.filter(mask)
-                            inv = inverse[np_mask]
-                        empty_bytes = hll.encode(hll.empty_registers())
-                        if global_rows and e not in glob:
-                            glob[e] = hll.empty_registers()
-                        if len(elem):
-                            data8, offs8 = _varbin_buffers(elem)
-                            idx, patlen = hll.hash_and_patlen_flat(data8, offs8, version)
-                            if global_rows:
-                                hll.update_registers(glob[e], idx, patlen)
-                            present = np.zeros(n_groups, dtype=bool)
-                            present[inv] = True
-                            if present.all():
-                                sk_arr = _binary_array(
-                                    *hll.encode_groups(inv, idx, patlen, n_groups)
-                                )
-                            else:
-                                # all-NULL groups get the canonical empty
-                                # sketch via one tiled buffer + a
-                                # permutation take — no per-group Python
-                                # (r3 VERDICT item 2; was an O(n_groups)
-                                # bytes()-slice list comprehension)
-                                remap = np.cumsum(present) - 1
-                                n_present = int(present.sum())
-                                present_arr = _binary_array(
-                                    *hll.encode_groups(remap[inv], idx, patlen, n_present)
-                                )
-                                concat = pa.concat_arrays(
-                                    [
-                                        present_arr,
-                                        _tiled_binary_array(
-                                            empty_bytes, n_groups - n_present
-                                        ),
-                                    ]
-                                )
-                                perm = np.empty(n_groups, dtype=np.int64)
-                                perm[present] = np.arange(n_present)
-                                perm[~present] = n_present + np.arange(
-                                    n_groups - n_present
-                                )
-                                sk_arr = concat.take(pa.array(perm))
-                        else:
-                            sk_arr = _tiled_binary_array(empty_bytes, n_groups)
-                        yield pa.record_batch(
-                            key_arrays
-                            + group_flags(n_groups)
-                            + [pa.array([e] * n_groups, type=pa.string()), sk_arr],
-                            names=out_names,
-                        )
-                    continue
                 take = pa.array(first_idx)
-                key_cols = [batch.column(c).take(take).to_pylist() for c in by]
-                group_keys = [
-                    tuple(col[i] for col in key_cols) for i in range(n_groups)
-                ]
+                direct = n_groups >= direct_emit_groups
+                if direct:
+                    key_arrays = [batch.column(c).take(take) for c in by]
+                else:
+                    key_cols = [batch.column(c).take(take).to_pylist() for c in by]
+                    group_keys = [
+                        tuple(col[i] for col in key_cols) for i in range(n_groups)
+                    ]
             else:
                 inverse = np.zeros(len(batch), dtype=np.int64)
                 n_groups = 1
+                direct = False
                 group_keys = [()]
             for e in elements:
                 elem = batch.column(e)
                 inv = inverse
                 if elem.null_count:
                     mask = pc.is_valid(elem)
-                    np_mask = mask.to_numpy(zero_copy_only=False)
                     elem = elem.filter(mask)
-                    inv = inverse[np_mask]
-                if len(elem) == 0:
-                    # EVERY value null for this column: the groups still
-                    # get their (empty) accumulator — matching both the
-                    # partial-null case (zero local rows below) and the
-                    # direct-emit path, so the output ROW SET never
-                    # depends on which path / batch split ran
-                    for g in range(n_groups):
-                        k = group_keys[g] + (e,)
-                        if k not in acc:
-                            acc[k] = hll.empty_registers()
+                    inv = inverse[mask.to_numpy(zero_copy_only=False)]
+                idx, patlen = hll.hash_and_patlen_flat(*_varbin_buffers(elem), version)
+                if direct:
+                    if global_rows:
+                        regs = glob.setdefault(e, hll.empty_registers())
+                        hll.update_registers(regs, idx, patlen)
+                    yield pa.record_batch(
+                        key_arrays
+                        + group_flags(n_groups)
+                        + [
+                            pa.repeat(pa.scalar(e, pa.string()), n_groups),
+                            _group_sketches(inv, idx, patlen, n_groups),
+                        ]
+                        + lineage_arrays(np.bincount(inv, minlength=n_groups)),
+                        names=out_names,
+                    )
                     continue
-                data, offsets = _varbin_buffers(elem)
-                idx, patlen = hll.hash_and_patlen_flat(data, offsets, version)
+                # a group with no non-NULL row here still gets its
+                # (empty) accumulator: the output ROW SET never depends
+                # on which path / batch split ran
                 local = np.zeros((n_groups, hll.HLL_REGISTERS), dtype=np.uint8)
                 hll.update_registers_grouped(local, inv, idx, patlen)
+                counts = np.bincount(inv, minlength=n_groups)
                 for g in range(n_groups):
                     k = group_keys[g] + (e,)
                     prev = acc.get(k)
                     if prev is None:
                         acc[k] = local[g]
+                        rows_seen[k] = int(counts[g])
                     else:
                         np.maximum(prev, local[g], out=prev)
+                        rows_seen[k] += int(counts[g])
             if len(acc) > max_groups_in_flight:
                 yield flush()
                 acc = {}
+                rows_seen = {}
         if acc or not by:
             if not acc:
                 for e in elements:
                     acc[(e,)] = hll.empty_registers()
+                    rows_seen[(e,)] = 0
             yield flush()
         if glob:
             n = len(glob)
@@ -289,13 +334,13 @@ def pf_count_distinct_multi(
     version: int = 4,
     salt_buckets: int | None = None,
 ) -> DataFrame:
-    """(by..., metric, estimate) for every element column — one scan."""
-    by = list(by)
+    """(by..., metric, estimate) for every element column — one scan, one
+    shuffle, and one fused merge+PFCOUNT stage."""
+    keys = list(by) + ["metric"]
     partials = pf_partial_multi(df, elements, by, version)
-    merged = pf_merge(partials, by + ["metric"], salt_buckets=salt_buckets)
-    return merged.select(
-        *by, "metric", pf_count_col(SKETCH_COL, version).alias("estimate")
-    )
+    if salt_buckets and salt_buckets > 1:
+        partials = _salted_premerge(partials, keys, SKETCH_COL, salt_buckets)
+    return _merge_stage(partials, keys, SKETCH_COL, count_version=version)
 
 
 def sourcecode_distinct_report(
@@ -315,7 +360,7 @@ def sourcecode_distinct_report(
     so both appear in the output. Pre-read input: 2 jobs, 3 stages (one
     of them the skipped re-listing of stage P in the result job)."""
     partials = pf_partial_multi(df, elements, (by,), version, global_rows=True)
-    merged = _merge_count_stage(
-        partials, [by, GLOBAL_COL, "metric"], SKETCH_COL, version, "estimate"
+    merged = _merge_stage(
+        partials, [by, GLOBAL_COL, "metric"], SKETCH_COL, count_version=version
     )
     return merged.select(by, "metric", "estimate")

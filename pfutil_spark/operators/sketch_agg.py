@@ -1,7 +1,18 @@
 """Generic two-phase distributed aggregation for the extension sketches
-(count-min, Bloom, KLL, t-digest) — same plan shape as the HLL operator
-(see hll_agg.py: mapInArrow partial -> single shuffle -> applyInPandas
-merge), parameterized by a small kernel spec.
+(count-min, Bloom, KLL, t-digest, KMV, SpaceSaving) — the plan shape of
+the HLL operator, parameterized by a small kernel spec:
+
+    stage P  mapInArrow(partial)         per-task fold, one binary
+                                         column per metric
+    stage S  repartition(keys)           the only shuffle
+    stage M  mapInArrow(merge)           every metric column merged in
+                                         the same task
+
+``sketch_multi_partial`` / ``sketch_multi_merge`` hold the only stage-P
+body and merge engine; the single-sketch calls (``sketch_agg``,
+``sketch_partial``, ``sketch_merge``) are their one-metric case. Stage M
+runs on ``hll_agg._arrow_merge_stage``, the exchange both sketch families
+share.
 
 Transfer-frugal by design: hash-keyed sketches (CMS, Bloom) consume a
 JVM-side ``xxhash64(col)`` (8 bytes/row over Arrow, computed in codegen);
@@ -22,8 +33,6 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, Struc
 from pfutil_spark.kernel import bloom, cms, kll, kmv, tdigest
 
 SKETCH_COL = "sketch"
-_ELEM = "__pf_elem"
-_WT = "__pf_wt"
 
 
 @dataclass
@@ -258,10 +267,10 @@ def tdigest_spec(delta: int = tdigest.DEFAULT_DELTA) -> KernelSpec:
 # generic two-phase plan
 # ---------------------------------------------------------------------------
 
-def _out_schema(df: DataFrame, by: Sequence[str]) -> StructType:
-    return StructType(
-        [df.schema[c] for c in by] + [StructField(SKETCH_COL, BinaryType(), False)]
-    )
+def _one_metric(element: Column, spec: KernelSpec, weight: Column | None) -> dict:
+    """The ``sketch_multi`` metrics dict of a single-sketch call: one
+    metric named ``SKETCH_COL``."""
+    return {SKETCH_COL: (element, spec) if weight is None else (element, spec, weight)}
 
 
 def sketch_agg(
@@ -271,38 +280,17 @@ def sketch_agg(
     by: Sequence[str] = (),
     max_groups_in_flight: int = 2048,
     direct_emit_groups: int = 4096,
-    engine: str = "arrow",
     weight: Column | None = None,
 ) -> DataFrame:
-    """(by..., sketch) via partial (mapInArrow, per-partition accumulation)
-    -> one shuffle -> merge. ``element`` must evaluate to LONG (pre-hash)
-    or DOUBLE (values) — both cross Arrow as fixed 8-byte columns.
-
-    Scale posture mirrors the HLL operator (hll_agg.py):
-
-    * LOW-cardinality ``by`` (< ``direct_emit_groups`` distinct keys per
-      batch): per-partition cross-batch accumulation — one partial per
-      (partition, group), the shape that keeps shuffle bytes at
-      O(groups x partitions x sketch).
-    * HIGH-cardinality batches with a ``spec.fold_groups`` hook: the
-      whole batch folds to per-group encoded sketches in one vectorized
-      pass (flat buffers, zero per-group Python) and emits directly —
-      the near-unique-key regime where accumulation buys nothing. As of
-      r5 every spec has the hook (SpaceSaving folds its object-string
-      summaries via factorize+reduceat).
-    * ``engine='arrow'`` (default) merge: repartition on the keys (the
-      only Exchange, no per-partition Sort) + a single vectorized pass
-      per partition — validated single-partial groups PASS THROUGH
-      untouched (an Arrow take; at 10^6 near-unique groups that is
-      ~every group), multi-partial groups batch-merge via
-      ``spec.merge_groups`` or, lacking one, a per-GROUP fold over just
-      those groups. ``engine='pandas'`` keeps the r1-era applyInPandas
-      fold (differential-test oracle)."""
-    partials = sketch_partial(
-        df, element, spec, by, max_groups_in_flight, direct_emit_groups,
-        weight=weight,
+    """(by..., sketch): the one-metric case of :func:`sketch_multi`.
+    ``element`` must evaluate to LONG (pre-hash) or DOUBLE (values) —
+    both cross Arrow as fixed 8-byte columns. With ``weight`` (a DOUBLE
+    column; requires ``spec.update_weighted``) each element carries that
+    much rank mass."""
+    return sketch_multi(
+        df, _one_metric(element, spec, weight), by, max_groups_in_flight,
+        direct_emit_groups,
     )
-    return sketch_merge(partials, spec, by, engine=engine)
 
 
 def sketch_partial(
@@ -314,138 +302,15 @@ def sketch_partial(
     direct_emit_groups: int = 4096,
     weight: Column | None = None,
 ) -> DataFrame:
-    """Stage P alone: one ``(by..., sketch)`` partial row per
-    (partition, group) — checkpointable (see
-    sources.checkpoint.ResumableSketchJob) and mergeable later via
-    :func:`sketch_merge` in any order/partitioning.
-
-    With ``weight`` (a DOUBLE column; requires ``spec.update_weighted``)
-    each element carries that much rank mass; rows with a null element
-    OR null weight are dropped (non-positive weights drop kernel-side)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from pfutil_spark.operators.hll_agg import _group_codes
-
-    by = list(by)
-    if weight is not None and spec.update_weighted is None:
-        raise ValueError("this sketch spec does not support weighted elements")
-    weighted = weight is not None  # plain bool: the Column itself must
-    # NOT be captured by partial_fn (a JVM handle — unpicklable)
-    wt_cols = [weight.alias(_WT)] if weighted else []
-    pruned = df.select(*by, element.alias(_ELEM), *wt_cols)
-    schema = _out_schema(pruned.select(*by, _ELEM), by)
-
-    def partial_fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        acc: dict[tuple, object] = {}
-        key_fields: list = []
-        seen = False
-
-        def flush() -> "pa.RecordBatch":
-            keys = list(acc.keys())
-            arrays = [
-                pa.array([k[j] for k in keys], type=key_fields[j].type)
-                for j in range(len(by))
-            ]
-            arrays.append(pa.array([spec.encode(acc[k]) for k in keys], type=pa.binary()))
-            return pa.record_batch(arrays, names=by + [SKETCH_COL])
-
-        for batch in batches:
-            if not seen:
-                key_fields = [batch.schema.field(c) for c in by]
-                seen = True
-            elem = batch.column(_ELEM)
-            if weighted and batch.column(_WT).null_count:
-                batch = batch.filter(pc.is_valid(batch.column(_WT)))
-                elem = batch.column(_ELEM)
-            if elem.null_count:
-                batch = batch.filter(pc.is_valid(elem))
-                elem = batch.column(_ELEM)
-            if len(batch) == 0:
-                continue
-            values = elem.to_numpy(zero_copy_only=False)
-            wts = (
-                batch.column(_WT).to_numpy(zero_copy_only=False)
-                if weighted
-                else None
-            )
-            fold = spec.fold_groups_weighted if weighted else spec.fold_groups
-            if by:
-                inverse, first_idx = _group_codes(batch, by)
-                n_groups = len(first_idx)
-                # bound evaluated only after the cheap gates pass: the
-                # weighted-KLL popcount bound is itself a batch-sized
-                # scan, wasted work on low-cardinality batches that take
-                # the accumulation path anyway
-                bound = (
-                    _emit_bytes_bound(spec, weighted, n_groups, len(values), wts)
-                    if fold is not None and n_groups >= direct_emit_groups
-                    else 0
-                )
-                if (
-                    fold is not None
-                    and n_groups >= direct_emit_groups
-                    and (bound is None or bound <= DIRECT_EMIT_BYTES_CAP)
-                ):
-                    # high-cardinality batch: vectorized direct emit
-                    data, offs = (
-                        fold(values, wts, inverse, n_groups)
-                        if weighted
-                        else fold(values, inverse, n_groups)
-                    )
-                    if offs[-1] > (1 << 31) - 1:
-                        raise ValueError(
-                            "sketch_agg direct-emit batch exceeds 2GB of "
-                            "sketch bytes; lower spark.sql.execution.arrow."
-                            "maxRecordsPerBatch or the sketch width"
-                        )
-                    sk_arr = pa.Array.from_buffers(
-                        pa.binary(),
-                        n_groups,
-                        [None, pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(data)],
-                    )
-                    take = pa.array(first_idx)
-                    yield pa.record_batch(
-                        [batch.column(c).take(take) for c in by] + [sk_arr],
-                        names=by + [SKETCH_COL],
-                    )
-                    continue
-                order = np.argsort(inverse, kind="stable")
-                sorted_inv = inverse[order]
-                bounds = np.flatnonzero(np.diff(sorted_inv)) + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [len(sorted_inv)]))
-                take = pa.array(first_idx)
-                key_cols = [batch.column(c).take(take).to_pylist() for c in by]
-                for g, (s, e) in enumerate(zip(starts, ends)):
-                    k = tuple(col[g] for col in key_cols)
-                    st = acc.get(k)
-                    if st is None:
-                        st = acc[k] = spec.zero()
-                    sel = order[s:e]
-                    acc[k] = (
-                        spec.update_weighted(st, values[sel], wts[sel])
-                        if weighted
-                        else spec.update(st, values[sel])
-                    )
-            else:
-                st = acc.get(())
-                if st is None:
-                    st = acc[()] = spec.zero()
-                acc[()] = (
-                    spec.update_weighted(st, values, wts)
-                    if weighted
-                    else spec.update(st, values)
-                )
-            if len(acc) > max_groups_in_flight:
-                yield flush()
-                acc = {}
-        if not acc and not by:
-            acc[()] = spec.zero()
-        if acc:
-            yield flush()
-
-    return pruned.mapInArrow(partial_fn, schema)
+    """Stage P alone: one ``(by..., sketch)`` partial row per (task,
+    group) — checkpointable (see sources.checkpoint.ResumableSketchJob)
+    and mergeable later via :func:`sketch_merge` in any
+    order/partitioning. The one-metric case of
+    :func:`sketch_multi_partial`."""
+    return sketch_multi_partial(
+        df, _one_metric(element, spec, weight), by, max_groups_in_flight,
+        direct_emit_groups,
+    )
 
 
 def sketch_merge(
@@ -453,54 +318,13 @@ def sketch_merge(
     spec: KernelSpec,
     by: Sequence[str] = (),
     sketch_col: str = SKETCH_COL,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Merge partial sketches per group (usable standalone on
-    checkpointed partial tables, like hll_agg.pf_merge)."""
+    checkpointed partial tables, like hll_agg.pf_merge): the one-metric
+    case of :func:`sketch_multi_merge`."""
     by = list(by)
-    schema = StructType(
-        [partials.schema[c] for c in by]
-        + [StructField(SKETCH_COL, BinaryType(), False)]
-    )
-    if engine == "arrow":
-        import pyarrow as pa
-
-        pruned = partials.select(*by, sketch_col)
-        target = (
-            pruned.repartition(*[F.col(c) for c in by]) if by else pruned.repartition(1)
-        )
-
-        def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
-            got = [b for b in batches if b.num_rows]
-            if not got:
-                return
-            try:
-                batch = pa.Table.from_batches(got).combine_chunks().to_batches()[0]
-            except pa.lib.ArrowInvalid as e:  # int32 binary-offset overflow
-                raise ValueError(
-                    "merge partition exceeds 2GB of sketch bytes; raise "
-                    "spark.sql.shuffle.partitions (or shrink the sketch "
-                    "parameters)"
-                ) from e
-            yield merge_sketch_batch(batch, by, sketch_col, spec)
-
-        return target.mapInArrow(fn, schema)
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.merge([spec.decode(b) for b in pdf[sketch_col]])
-        head = pdf.iloc[[0]][by].reset_index(drop=True)
-        head[SKETCH_COL] = [spec.encode(merged)]
-        return head
-
-    if by:
-        return partials.groupBy(*by).applyInPandas(merge_fn, schema)
-    return (
-        partials.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(merge_fn, schema)
-        .select(SKETCH_COL)
+    return sketch_multi_merge(
+        partials.select(*by, F.col(sketch_col).alias(SKETCH_COL)), {SKETCH_COL: spec}, by
     )
 
 
@@ -526,7 +350,7 @@ def merge_sketch_batch(
     object-state sketches)."""
     import pyarrow as pa
 
-    from pfutil_spark.operators.hll_agg import _group_codes, _varbin_buffers
+    from pfutil_spark.operators.hll_agg import _binary_array, _group_codes, _varbin_buffers
 
     n = batch.num_rows
     sk = batch.column(sketch_col)
@@ -570,13 +394,7 @@ def merge_sketch_batch(
 
             mdata, moffs = spec.merge_groups(wdata, woffs, work_code, len(work_ids))
             check_arrow_binary_size(int(moffs[-1]))
-            arrays.append(
-                pa.Array.from_buffers(
-                    pa.binary(),
-                    len(work_ids),
-                    [None, pa.py_buffer(moffs.astype(np.int32)), pa.py_buffer(mdata)],
-                )
-            )
+            arrays.append(_binary_array(mdata, moffs))
         else:
             gb = np.flatnonzero(np.diff(work_code, prepend=-1))
             gends = np.append(gb[1:], len(work_code))
@@ -629,14 +447,23 @@ def sketch_multi(
     rows are all null for one metric still gets that metric's canonical
     empty sketch.
 
-    Scale posture matches :func:`sketch_agg`: low-cardinality batches
-    accumulate per (partition, group) across batches; high-cardinality
-    batches direct-emit via each spec's vectorized ``fold_groups`` (all
-    metrics must provide one, and the summed ``fold_bytes_bound`` must
-    fit the cap — else the batch falls back to accumulation). The merge
-    stage repartitions ONCE on the keys and merges every metric column
-    inside the same task via :func:`merge_sketch_batch` (validated
-    singles passthrough per column)."""
+    Scale posture mirrors the HLL operator:
+
+    * LOW-cardinality ``by`` (< ``direct_emit_groups`` distinct keys per
+      batch): per-task cross-batch accumulation — one partial per (task,
+      group), the shape that keeps shuffle bytes at O(groups x tasks x
+      sketch).
+    * HIGH-cardinality batches direct-emit via each spec's vectorized
+      ``fold_groups`` (flat buffers, zero per-group Python); all metrics
+      must provide one, and the summed ``fold_bytes_bound`` must fit
+      ``DIRECT_EMIT_BYTES_CAP`` — else the batch falls back to
+      accumulation.
+    * The merge stage repartitions ONCE on the keys and merges every
+      metric column inside the same task via :func:`merge_sketch_batch`:
+      validated single-partial groups PASS THROUGH untouched (an Arrow
+      take; at 10^6 near-unique groups that is ~every group),
+      multi-partial groups batch-merge via ``spec.merge_groups`` or,
+      lacking one, a per-GROUP fold over just those groups."""
     partials = sketch_multi_partial(
         df, metrics, by, max_groups_in_flight, direct_emit_groups
     )
@@ -658,7 +485,7 @@ def sketch_multi_partial(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from pfutil_spark.operators.hll_agg import _group_codes
+    from pfutil_spark.operators.hll_agg import _binary_array, _group_codes
 
     by = list(by)
     names = list(metrics.keys())
@@ -755,9 +582,9 @@ def sketch_multi_partial(
             if direct_ok:
                 # the byte gate sums over metrics: k folds co-reside in
                 # the same output batch, so the cap must bound their
-                # TOTAL (specs without a bound contribute 0, as in
-                # sketch_agg). Evaluated only after the cheap gates —
-                # weighted-KLL's popcount bound is a batch-sized scan.
+                # TOTAL (specs without a bound contribute 0). Evaluated
+                # only after the cheap gates — weighted-KLL's popcount
+                # bound is a batch-sized scan.
                 total_bound = sum(
                     b
                     for b in (
@@ -787,17 +614,7 @@ def sketch_multi_partial(
                             "sketch bytes; lower spark.sql.execution.arrow."
                             "maxRecordsPerBatch or the sketch widths"
                         )
-                    arrays.append(
-                        pa.Array.from_buffers(
-                            pa.binary(),
-                            n_groups,
-                            [
-                                None,
-                                pa.py_buffer(offs.astype(np.int32)),
-                                pa.py_buffer(data),
-                            ],
-                        )
-                    )
+                    arrays.append(_binary_array(data, offs))
                 yield pa.record_batch(arrays, names=by + names)
                 continue
             if by:
@@ -853,9 +670,7 @@ def sketch_multi_merge(
     ONE repartition on the keys, every metric column merges inside the
     same task (group codes computed once, validated singles passthrough
     per column)."""
-    import pyarrow as pa
-
-    from pfutil_spark.operators.hll_agg import _group_codes
+    from pfutil_spark.operators.hll_agg import _arrow_merge_stage, _group_codes
 
     by = list(by)
     names = list(metric_specs.keys())
@@ -864,49 +679,23 @@ def sketch_multi_merge(
         [partials.schema[c] for c in by]
         + [StructField(m, BinaryType(), False) for m in names]
     )
-    pruned = partials.select(*by, *names)
-    target = (
-        pruned.repartition(*[F.col(c) for c in by])
-        if by
-        else pruned.repartition(1)
-    )
 
-    def merge_fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+    def merge_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
         import pyarrow as pa
 
-        got = [b for b in batches if b.num_rows]
-        if not got:
-            return
-        try:
-            batch = pa.Table.from_batches(got).combine_chunks().to_batches()[0]
-        except pa.lib.ArrowInvalid as e:
-            raise ValueError(
-                "sketch_multi merge partition exceeds 2GB of sketch bytes; "
-                "raise spark.sql.shuffle.partitions"
-            ) from e
         # group codes computed ONCE per partition, shared by all metrics
-        if by:
-            shared_codes = _group_codes(batch, by)
-        else:
-            shared_codes = (
-                np.zeros(batch.num_rows, dtype=np.int64),
-                np.array([0], dtype=np.int64),
-            )
-        merged_cols = []
-        key_arrays = None
-        for m, spec in zip(names, specs):
-            sub = pa.record_batch(
-                [batch.column(c) for c in by] + [batch.column(m)],
-                names=by + [m],
-            )
-            out = merge_sketch_batch(sub, by, m, spec, codes=shared_codes)
-            if key_arrays is None:
-                key_arrays = [out.column(c) for c in by]
-            # merge_sketch_batch names its sketch output SKETCH_COL
-            merged_cols.append(out.column(SKETCH_COL))
-        yield pa.record_batch(key_arrays + merged_cols, names=by + names)
+        codes = _group_codes(batch, by) if by else None
+        outs = [
+            merge_sketch_batch(batch, by, m, spec, codes=codes)
+            for m, spec in zip(names, specs)
+        ]
+        # merge_sketch_batch names its sketch output SKETCH_COL
+        return pa.record_batch(
+            [outs[0].column(c) for c in by] + [o.column(SKETCH_COL) for o in outs],
+            names=by + names,
+        )
 
-    return target.mapInArrow(merge_fn, schema)
+    return _arrow_merge_stage(partials, by, names, schema, merge_batch)
 
 
 def tdigest_edges(

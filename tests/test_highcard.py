@@ -1,5 +1,5 @@
 """High-cardinality `by` hardening (VERDICT r1 item 4) and the Arrow
-merge engine: byte parity with the pandas engine, canonical-encoder
+merge engine: byte parity with a kernel-only reference, canonical-encoder
 parity for the vectorized group encoder, and the wall-time gate —
 near-unique keys within 3x of the low-cardinality case at 1M rows."""
 
@@ -59,14 +59,23 @@ def keyed_df(spark):
 
 
 def test_arrow_and_pandas_merge_engines_byte_identical(keyed_df):
+    """pf_merge equals an in-process, kernel-only reference over the same
+    collected partials (decode, register max, canonical encode — the fold
+    the retired applyInPandas engine ran), per group and globally."""
     partials = pf_partial(keyed_df, "elem", by=("lo",)).localCheckpoint()
-    a = {r["lo"]: bytes(r[SKETCH_COL]) for r in pf_merge(partials, ["lo"], engine="arrow").collect()}
-    p = {r["lo"]: bytes(r[SKETCH_COL]) for r in pf_merge(partials, ["lo"], engine="pandas").collect()}
-    assert a == p
+    rows = partials.collect()
+
+    def reference(sketches):
+        return hll.encode(hll.merge_registers(hll.decode_many(sketches)))
+
+    by_lo: dict = {}
+    for r in rows:
+        by_lo.setdefault(r["lo"], []).append(bytes(r[SKETCH_COL]))
+    a = {r["lo"]: bytes(r[SKETCH_COL]) for r in pf_merge(partials, ["lo"]).collect()}
+    assert a == {k: reference(v) for k, v in by_lo.items()}
     # global merge too
-    ga = bytes(pf_merge(partials.select(SKETCH_COL), engine="arrow").collect()[0][0])
-    gp = bytes(pf_merge(partials.select(SKETCH_COL), engine="pandas").collect()[0][0])
-    assert ga == gp
+    ga = bytes(pf_merge(partials.select(SKETCH_COL)).collect()[0][0])
+    assert ga == reference([bytes(r[SKETCH_COL]) for r in rows])
 
 
 def test_arrow_salted_merge_matches_plain(keyed_df):

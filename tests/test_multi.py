@@ -2,12 +2,14 @@
 
 from pyspark.sql import functions as F
 
-from pfutil_spark.operators import pf_count_distinct, pf_merge
+from pfutil_spark.operators import pf_count_col, pf_count_distinct, pf_merge
+from pfutil_spark.operators.hll_agg import SKETCH_COL
 from pfutil_spark.operators.multi import (
     pf_count_distinct_multi,
     sourcecode_distinct_report,
 )
 from pfutil_spark.sources import sourcecode_table
+from tests.conftest import plan_of
 
 
 def test_multi_matches_single_column_runs(spark):
@@ -22,6 +24,23 @@ def test_multi_matches_single_column_runs(spark):
         single = pf_count_distinct(src, metric, by=("lang",)).collect()
         for r in single:
             assert got[(r["lang"], metric)] == r["estimate"], (metric, r["lang"])
+
+
+def test_count_distinct_multi_fuses_merge_and_count(spark):
+    """pf_count_distinct_multi runs the fused merge+PFCOUNT stage: no
+    separate ArrowEvalPython node, and the same estimates as pf_merge
+    followed by pf_count_col over the same partials."""
+    from pfutil_spark.operators.multi import pf_partial_multi
+
+    src = sourcecode_table(spark, 5_000, partitions=4)
+    elements = ["repo", "path"]
+    fused = pf_count_distinct_multi(src, elements, by=("lang",))
+    assert "ArrowEvalPython" not in plan_of(fused, "simple")
+    partials = pf_partial_multi(src, elements, ("lang",)).localCheckpoint()
+    old = pf_merge(partials, ["lang", "metric"]).select(
+        "lang", "metric", pf_count_col(SKETCH_COL).alias("estimate")
+    )
+    assert sorted(fused.collect()) == sorted(old.collect())
 
 
 def test_sourcecode_report_global_rows_and_bounds(spark):
@@ -162,14 +181,14 @@ def test_sourcecode_report_plan_counts(spark, tmp_path):
 
 def test_accumulate_partials_run_no_per_run_python(monkeypatch):
     """Stage P's accumulate-path flushes (group rows, global rows, and
-    pf_partial's) encode through the batched encoder: with the scalar
-    sparse encoder's run loop made to raise, both partial functions
-    still finish, and their bytes equal the scalar encoder's."""
+    pf_partial's one-element case) encode through the batched encoder:
+    with the scalar sparse encoder's run loop made to raise, the partial
+    function still finishes, and its bytes equal the scalar encoder's."""
     import numpy as np
     import pyarrow as pa
 
     from pfutil_spark.kernel import hll
-    from pfutil_spark.operators import hll_agg, multi
+    from pfutil_spark.operators import multi
 
     n = 20_000
     ids = np.arange(n)
@@ -192,7 +211,7 @@ def test_accumulate_partials_run_no_per_run_python(monkeypatch):
     multi_rows = pa.Table.from_batches(list(fn(iter(batches)))).to_pylist()
     single = {}
     for by in (["g"], []):
-        pfn = hll_agg._partial_fn("a", by, 4, 8192, 4096, False)
+        pfn = multi._partial_multi_fn(by, ["a"], 4, 8192, 4096, False)
         single[tuple(by)] = pa.Table.from_batches(list(pfn(iter(batches)))).to_pylist()
     monkeypatch.undo()
 
@@ -209,8 +228,9 @@ def test_accumulate_partials_run_no_per_run_python(monkeypatch):
         assert got[(None, True, metric)] == expect([True] * n, col)
         for g in ("x", "y", "z"):
             assert got[(g, False, metric)] == expect(grp == g, col)
+    # the all-NULL group z keeps its (empty) sketch, as in the multi rows
     assert {r["g"]: r["sketch"] for r in single[("g",)]} == {
-        g: expect(grp == g, a) for g in ("x", "y")
+        g: expect(grp == g, a) for g in ("x", "y", "z")
     }
     assert [r["sketch"] for r in single[()]] == [expect([True] * n, a)]
     # the cases the flushes hit: dense, sparse and empty sketches

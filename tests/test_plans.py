@@ -90,7 +90,8 @@ def test_semi_join_dedup_uses_broadcast(spark):
 def test_extension_sketch_plan_single_shuffle_no_sort(spark):
     """r4: the generic sketch_agg plan must match the HLL shape — one
     Exchange (the repartition-on-keys merge), NO per-partition Sort
-    (the applyInPandas plan had one), and no shuffle in the partial."""
+    (an applyInPandas fold would plan one), and no shuffle in the
+    partial."""
     from pfutil_spark.operators.sketch_agg import kmv_spec, sketch_agg, sketch_partial
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -101,18 +102,6 @@ def test_extension_sketch_plan_single_shuffle_no_sort(spark):
     assert "Sort " not in plan and "+- Sort" not in plan, plan
     p = sketch_partial(ev, F.xxhash64("user_id"), spec, by=("event_type",))
     assert "Exchange" not in plan_of(p, "simple")
-
-
-def test_extension_sketch_pandas_engine_has_sort(spark):
-    """Documents WHY the arrow engine is the default: the applyInPandas
-    fold plans an extra per-partition Sort the arrow stage avoids."""
-    from pfutil_spark.operators.sketch_agg import kmv_spec, sketch_agg
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    df = sketch_agg(
-        ev, F.xxhash64("user_id"), kmv_spec(256), by=("event_type",), engine="pandas"
-    )
-    assert "Sort" in plan_of(df, "simple")
 
 
 def test_word_repetition_zero_python_two_shuffles(spark):

@@ -1,6 +1,7 @@
 """Vectorized extension-sketch aggregation (VERDICT r3 top item): the
 flat grouped fold/merge kernels must be byte-identical to the scalar
-update/merge paths, the Arrow merge stage must match the pandas engine,
+update/merge paths, the Arrow merge stage must match an in-process
+kernel-only fold of the same partials,
 high-cardinality direct emit must match accumulation, and — structurally
 — the merge stage must run zero per-group Python for the vectorized
 specs (monkeypatch gate, mirroring tests/test_highcard.py's HLL gate)."""
@@ -19,6 +20,7 @@ from pfutil_spark.operators.sketch_agg import (
     merge_sketch_batch,
     sketch_agg,
     sketch_merge,
+    sketch_partial,
     spacesaving_spec,
     tdigest_spec,
 )
@@ -162,24 +164,32 @@ def _element(kind):
     return F.col("e").cast("string")
 
 
+def _reference_merge(partials, spec, by=None):
+    """In-process, kernel-only merge of collected partials per group:
+    ``spec.merge([spec.decode(b) ...])`` — the fold the retired
+    applyInPandas engine ran, with no Spark stage in between."""
+    groups: dict = {}
+    for r in partials.collect():
+        key = r[by] if by else None
+        groups.setdefault(key, []).append(spec.decode(bytes(r[SKETCH_COL])))
+    return {k: spec.encode(spec.merge(v)) for k, v in groups.items()}
+
+
 class TestArrowEngineSpark:
     @pytest.mark.parametrize("name,mkspec,kind", ALL_SPECS)
     def test_arrow_equals_pandas_engine(self, spark, name, mkspec, kind):
-        """Both merge engines over the same input: byte-stable sketches
-        (KMV/CMS/Bloom — merge is a set/sum/OR function) must agree byte
-        for byte; order-dependent ones (KLL/t-digest/SpaceSaving, whose
-        bytes depend on shuffle arrival order) must agree on totals and
-        estimates."""
+        """The merge stage against the kernel-only reference fold of the
+        partials: byte-stable sketches (KMV/CMS/Bloom — merge is a
+        set/sum/OR function) must agree byte for byte; order-dependent
+        ones (KLL/t-digest/SpaceSaving, whose bytes depend on shuffle
+        arrival order) must agree on totals and estimates."""
         df = _mk_df(spark, n=8000, groups=40)
         spec = mkspec()
         a = {
             r["k"]: bytes(r[SKETCH_COL])
-            for r in sketch_agg(df, _element(kind), spec, by=("k",), engine="arrow").collect()
+            for r in sketch_agg(df, _element(kind), spec, by=("k",)).collect()
         }
-        p = {
-            r["k"]: bytes(r[SKETCH_COL])
-            for r in sketch_agg(df, _element(kind), spec, by=("k",), engine="pandas").collect()
-        }
+        p = _reference_merge(sketch_partial(df, _element(kind), spec, by=("k",)), spec, "k")
         assert a.keys() == p.keys() and len(a) == 40
         if name in ("kmv", "cms", "bloom"):
             assert a == p  # byte-stable sketches: exact parity
@@ -233,9 +243,9 @@ class TestArrowEngineSpark:
     def test_global_merge(self, spark):
         df = _mk_df(spark, n=5000, groups=10)
         spec = kmv_spec(256)
-        a = bytes(sketch_agg(df, F.xxhash64("e"), spec, engine="arrow").collect()[0][0])
-        p = bytes(sketch_agg(df, F.xxhash64("e"), spec, engine="pandas").collect()[0][0])
-        assert a == p
+        a = bytes(sketch_agg(df, F.xxhash64("e"), spec).collect()[0][0])
+        p = _reference_merge(sketch_partial(df, F.xxhash64("e"), spec), spec)
+        assert p == {None: a}
 
     def test_corrupt_partials_raise(self, spark):
         """Invalid buffers must fail with the kernel's validation error,
