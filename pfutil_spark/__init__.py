@@ -10,6 +10,13 @@ public DataFrame API (two-phase partial/merge aggregation, salted skew
 handling, checkpointable sketch tables).
 """
 
+import sys
+
 from pfutil_spark.kernel import hll, murmur  # noqa: F401
+
+if "pyspark.worker" in sys.modules:  # inside a Spark Python worker only
+    from pfutil_spark import _zipcache
+
+    _zipcache.install()
 
 __version__ = "0.1.0"

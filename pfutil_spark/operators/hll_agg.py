@@ -143,6 +143,18 @@ def _encoded_array(regs: list[np.ndarray]) -> "pa.Array":
     )
 
 
+def _check_reserved(by: Sequence[str], reserved: Sequence[str]) -> None:
+    """Fail before planning when a ``by`` column shares its name with an
+    output column the operator adds (Spark would only report an
+    ambiguous reference, or fail at ``collect``)."""
+    for c in by:
+        if c in reserved:
+            raise ValueError(
+                f"by column {c!r} collides with an output column this operator "
+                f"adds; reserved names here: {sorted(set(reserved))}"
+            )
+
+
 def pf_partial(
     df: DataFrame,
     element: str,
@@ -238,6 +250,7 @@ def _merge_stage(
     bytes). This ONE body backs pf_merge / pf_count_distinct /
     pf_count_distinct_multi / the north report.
     """
+    _check_reserved(keys, [SKETCH_COL] if count_version is None else [estimate_col])
     out_fields = [df.schema[c] for c in keys]
     if count_version is None:
         out_fields.append(StructField(SKETCH_COL, BinaryType(), False))

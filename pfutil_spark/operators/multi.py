@@ -30,6 +30,7 @@ from pfutil_spark.operators.hll_agg import (
     LINEAGE_COLS,
     SKETCH_COL,
     _binary_array,
+    _check_reserved,
     _encoded_array,
     _group_codes,
     _merge_stage,
@@ -106,6 +107,12 @@ def _partial_multi(
     elements = list(elements)
     if global_rows and not by:
         raise ValueError("global_rows needs at least one by column")
+    _check_reserved(
+        by,
+        [metric_col, SKETCH_COL]
+        + ([GLOBAL_COL] if global_rows else [])
+        + (list(LINEAGE_COLS) if lineage else []),
+    )
     base = _out_schema(df, by)
     out_keys = base.fields[:-1]
     if global_rows:

@@ -209,7 +209,9 @@ def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | N
         # column chunks, so oversplitting duplicates decode — measured at
         # 100k-row events, a 32-way oversplit LOSES 0.2s to duplicated
         # decode + task overhead while 8 tasks match the JVM scan; 65536
-        # keeps tiny files at a handful of tasks
+        # keeps tiny files at a handful of tasks. That measurement
+        # predates pfutil_spark._zipcache, which took about 0.2 s off
+        # every task (NOTES.md, "Per-task floor of a Python task")
         min_rows = int(spark.conf.get("pfutil.pyscan.minRowsPerTask", "65536"))
         for fi, path in enumerate(files):
             pf = pq.ParquetFile(path)

@@ -485,10 +485,11 @@ def sketch_multi_partial(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from pfutil_spark.operators.hll_agg import _binary_array, _group_codes
+    from pfutil_spark.operators.hll_agg import _binary_array, _check_reserved, _group_codes
 
     by = list(by)
     names = list(metrics.keys())
+    _check_reserved(by, names)
     specs = [metrics[m][1] for m in names]
     wt_exprs = [metrics[m][2] if len(metrics[m]) > 2 else None for m in names]
     # plain bools/strings for the closure — never capture Column objects
@@ -670,10 +671,15 @@ def sketch_multi_merge(
     ONE repartition on the keys, every metric column merges inside the
     same task (group codes computed once, validated singles passthrough
     per column)."""
-    from pfutil_spark.operators.hll_agg import _arrow_merge_stage, _group_codes
+    from pfutil_spark.operators.hll_agg import (
+        _arrow_merge_stage,
+        _check_reserved,
+        _group_codes,
+    )
 
     by = list(by)
     names = list(metric_specs.keys())
+    _check_reserved(by, names)
     specs = [metric_specs[m] for m in names]
     schema = StructType(
         [partials.schema[c] for c in by]
@@ -999,9 +1005,13 @@ def spacesaving_topk_col(k: int, sketch_col: str = SKETCH_COL) -> Column:
 
 def _hash_literals(df: DataFrame, items: Sequence) -> np.ndarray:
     """xxhash64 of literal items, computed BY SPARK so it matches the
-    build-side hashing exactly."""
+    build-side hashing exactly. Over a one-row local relation the
+    optimizer folds the projection into a ``LocalTableScan``, so the
+    collect runs no Spark job."""
+    import pyarrow as pa
+
     spark = df.sparkSession
-    rows = spark.range(1).select(
+    rows = spark.createDataFrame(pa.table({"_": [0]})).select(
         *[F.xxhash64(F.lit(it)).alias(f"h{i}") for i, it in enumerate(items)]
     ).collect()[0]
     return np.array([rows[f"h{i}"] for i in range(len(items))], dtype=np.int64)

@@ -921,3 +921,23 @@ class TestSketchMultiWeighted:
             sketch_multi(
                 df, {"x": (F.col("v"), bloom_spec(), F.col("v"))}, by=()
             )
+
+
+def test_cms_literal_hashes_run_no_job(spark):
+    """``cms_counts_col`` hashes its items over a one-row local relation:
+    the same xxhash64 values as selecting the literals over
+    ``spark.range(1)``, with no Spark job."""
+    from pfutil_spark.operators.sketch_agg import _hash_literals
+    from tests._spark_counts import spark_counts
+
+    items = ["a", "héllo wörld ✓", "", "x" * 100, 7, 2**40, 1.5, None, b"\x00\xff", True]
+    row = spark.range(1).select(
+        *[F.xxhash64(F.lit(it)).alias(f"h{i}") for i, it in enumerate(items)]
+    ).collect()[0]
+    want = [row[f"h{i}"] for i in range(len(items))]
+    df = spark.range(3)
+    with spark_counts(spark) as c:
+        got = _hash_literals(df, items)
+    assert got.dtype == np.int64
+    assert got.tolist() == want
+    assert c.jobs == 0
