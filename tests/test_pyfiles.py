@@ -39,19 +39,22 @@ def test_zip_reproducible(pyfiles_zip, tmp_path):
 
 def test_executor_style_zipimport(pyfiles_zip, tmp_path):
     """Fresh interpreter, cwd outside the repo, zip prepended to
-    sys.path (the executor situation). Runs a real kernel round-trip
-    so the import graph — kernel, operators, murmur — actually loads
-    from the zip, not just the top-level __init__."""
+    sys.path (the executor situation). Imports EVERY module in the zip,
+    so a module that imports a missing one fails here under the same
+    zipimport executors use, then runs a real kernel round-trip."""
     script = (
-        "import sys\n"
+        "import importlib, pkgutil, sys\n"
         f"sys.path = [p for p in sys.path if not p.startswith({REPO!r})]\n"
         f"sys.path.insert(0, {pyfiles_zip!r})\n"
         "import pfutil_spark\n"
         f"assert pfutil_spark.__file__.startswith({pyfiles_zip!r}), pfutil_spark.__file__\n"
+        "names = [m.name for m in pkgutil.walk_packages(pfutil_spark.__path__, 'pfutil_spark.')]\n"
+        "for name in names:\n"
+        "    mod = importlib.import_module(name)\n"
+        f"    assert mod.__file__.startswith({pyfiles_zip!r}), mod.__file__\n"
+        "assert 'pfutil_spark.operators.sketch_agg' in names, names\n"
+        "assert 'pfutil_spark.streaming.hll_stream' in names, names\n"
         "from pfutil_spark.kernel import hll\n"
-        "import pfutil_spark.operators.hll_agg\n"
-        "import pfutil_spark.operators.sketch_agg\n"
-        "import pfutil_spark.functions.text\n"
         "regs = hll.decode(hll.encode_empty()).copy()\n"
         "idx, pat = hll.hash_and_patlen([str(i).encode() for i in range(1000)])\n"
         "hll.update_registers(regs, idx, pat)\n"

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Local emulation of the grading driver's oracle compare.
 
-For each query name (or all with oracles): run the Spark query and the
-DuckDB oracle at sf0.01, compare row count, sorted column names, and an
-order-insensitive stringified value hash (the same class of check the
-driver applies — the round-1 `sessionize` red was a stringification
-artifact, "1.0" vs "1", caught exactly by this).
+For each query name (or every query in ``queries()``; each has an
+oracle): run the Spark query and the DuckDB oracle at sf0.01, compare
+row count, sorted column names, and an order-insensitive stringified
+value hash (a DuckDB HUGEINT sum prints "1.0" where Spark prints "1",
+and only the stringified compare catches it).
 
 Usage: python tools/compare_oracle.py [name ...]
 """
@@ -13,9 +13,10 @@ Usage: python tools/compare_oracle.py [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
