@@ -37,6 +37,7 @@ import math
 import numpy as np
 
 from .murmur import HLL_SEED, murmur64a
+from .sketch_common import probe_headers, segment_ranks
 
 HLL_P = 14
 HLL_REGISTERS = 1 << HLL_P  # 16384
@@ -754,11 +755,8 @@ def encode_many(regs2d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """
     regs2d = np.ascontiguousarray(regs2d, dtype=np.uint8)
     n = regs2d.shape[0]
-    dense_payload = HLL_DENSE_SIZE - HEADER_LEN
-    nnz = np.count_nonzero(regs2d, axis=1)
-    maxval = regs2d.max(axis=1, initial=0)
-    zero = nnz == 0
-    dense = ~zero & ((maxval > 32) | (nnz * 3 + 4 >= dense_payload))
+    zero = ~regs2d.any(axis=1)
+    dense = ~zero & ~_sparse_eligible(regs2d)
     rows = np.flatnonzero(~zero & ~dense)
     sub = regs2d[rows]
     ig, ir = np.nonzero(sub)
@@ -1191,6 +1189,195 @@ def gather_dense_payloads(
     for k, st in enumerate(starts):
         out[k] = flat[st : st + dense_payload]
     return out
+
+
+def _sparse_eligible(regs2d: np.ndarray) -> np.ndarray:
+    """Per row of a register matrix: does :func:`encode_sparse_payload`
+    get past its pre-checks (values fit VAL opcodes, nnz under the
+    early bail)?"""
+    nnz = np.count_nonzero(regs2d, axis=1)
+    return (regs2d.max(axis=1) <= 32) & (nnz * 3 + 4 < HLL_DENSE_SIZE - HEADER_LEN)
+
+
+def canonical_flat(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Non-raising per-buffer gate of the merge stage's single-partial
+    pass-through: True where a wire buffer is exactly what the canonical
+    encoder (``encode(regs)``, invalid cache) emits for its registers.
+
+    The header must be precisely the ``_header(enc, None)`` bytes a
+    stage-P partial carries (bytes 5-14 zero, byte 15 exactly 0x80): a
+    third-party single with stale cache bytes or extra flag bits
+    re-routes to :func:`merge_groups_flat`, so pf_merge output bytes
+    can't depend on whether that sketch shared a group with another
+    partial. Past the header (all vectorized, no per-buffer Python):
+
+    * dense: exact length, AND not sparse-eligible — a dense-encoded but
+      sparse-ELIGIBLE sketch (``encode(force_dense=True)`` or a
+      third-party writer) is not what the encoder would emit;
+    * sparse: the flat opcode scan must cover exactly 16384 registers
+      with canonical opcodes (:func:`sparse_valid_canonical_flat`).
+
+    Corrupt or short buffers read False; the merge then raises on them."""
+    ok, hp, lens = probe_headers(data, offsets, MAGIC, HEADER_LEN + 2)
+    if not ok.any():
+        return ok
+    ok &= data[hp + 15] == _CACHE_INVALID_BIT
+    for j in range(5, 15):
+        ok &= data[hp + j] == 0
+    enc = data[hp + 4]
+    out = np.zeros(len(ok), dtype=bool)
+    d = np.flatnonzero(ok & (enc == ENC_DENSE) & (lens == HLL_DENSE_SIZE))
+    if len(d):
+        out[d] = ~_sparse_eligible(unpack_dense(gather_dense_payloads(data, offsets, d)))
+    sp = np.flatnonzero(ok & (enc == ENC_SPARSE))
+    if len(sp):
+        _, out[sp] = sparse_valid_canonical_flat(
+            data, offsets[sp] + HEADER_LEN, offsets[sp + 1]
+        )
+    return out
+
+
+# merge strategy knobs: a merge group is HEAVY (matrix max-reduceat)
+# when it has any dense partial or at least this many sparse items;
+# heavy chunks cap their register-matrix allocation at this many bytes.
+# The budget is deliberately SMALL (64 matrix rows): glibc only
+# recycles freed mmap'd blocks up to ~32MB back into the arena, and
+# first-touch page faults were measured at ~0.12GB/s (NOTES.md) —
+# bounded chunks keep every merge task's working set in warm, reused
+# memory
+_HEAVY_ITEMS = 4096
+_MATRIX_BUDGET = 1 << 20
+
+
+def merge_groups_flat(
+    data: np.ndarray, offsets: np.ndarray, codes: np.ndarray, n_groups: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """PFMERGE of many groups in one vectorized pass: ``codes``
+    (non-decreasing, every code in ``range(n_groups)`` present) assigns
+    each wire buffer of ``(data, offsets)`` to a group. Returns the
+    canonical encoding (invalid cache) of each group's register-wise max
+    as ``(data, int64 offsets)``, in code order. Raises ``Invalid HLL
+    representation`` on any corrupt buffer. Correct for any grouping of
+    the partials because register-max is associative / commutative /
+    idempotent (HllByteBuffer.java:341-398 semantics).
+
+    Two complementary strategies, chosen PER GROUP (zero per-group
+    Python either way):
+
+    * LIGHT groups (all-sparse, few items): parse partials to (group,
+      reg, val) items with the flat opcode scanner and fold through
+      :func:`encode_groups` — the near-unique long tail, where
+      materializing 16KB register rows would be a 1000x memory blowup.
+    * HEAVY groups (any dense partial, or >= ``_HEAVY_ITEMS`` sparse
+      items): stack their partials as a (rows, 16384) register matrix
+      (memory-bounded chunks) and ``np.maximum.reduceat`` — dense merges
+      are memory-bandwidth-bound there, while item-ifying them costs a
+      multi-million-item sort (measured 4x slower than a per-group
+      decode + register-max fold on a 68-group x 64-partial dense merge
+      before this split).
+    """
+    R = HLL_REGISTERS
+    dense_payload = HLL_DENSE_SIZE - HEADER_LEN
+    enc = validate_headers_flat(data, offsets)
+    dense_rows = np.flatnonzero(enc == ENC_DENSE)
+    sparse_rows = np.flatnonzero(enc == ENC_SPARSE)
+    iseg, rr_s, vv_s = decode_sparse_pairs_flat(
+        data, offsets[:-1][sparse_rows] + HEADER_LEN, offsets[1:][sparse_rows]
+    )
+    item_row = sparse_rows[iseg]  # row index per item, sorted
+    item_g = codes[item_row]
+    has_dense = np.zeros(n_groups, dtype=bool)
+    has_dense[codes[dense_rows]] = True
+    heavy = has_dense | (np.bincount(item_g, minlength=n_groups) >= _HEAVY_ITEMS)
+    light_sel = ~heavy[item_g]
+    gg_parts = [item_g[light_sel]]
+    rr_parts = [rr_s[light_sel]]
+    vv_parts = [vv_s[light_sel]]
+    hd_code_parts = [np.zeros(0, dtype=np.int64)]  # heavy groups whose MERGE is dense
+    hd_pay_parts = [np.zeros((0, dense_payload), dtype=np.uint8)]  # their payloads
+    if heavy.any():
+        hrows = np.flatnonzero(heavy[codes])  # rows of heavy groups
+        # assign heavy GROUPS to chunks by cumulative row offset so one
+        # chunk's matrix stays ~_MATRIX_BUDGET bytes (+ one group's
+        # fan-in; a group never splits across chunks)
+        hg_codes = np.flatnonzero(heavy)
+        hg_rows = np.bincount(codes[hrows], minlength=n_groups)[hg_codes]
+        cum = np.cumsum(hg_rows) - hg_rows
+        chunk_of_group = np.full(n_groups, -1, dtype=np.int64)
+        chunk_of_group[hg_codes] = cum // max(1, _MATRIX_BUDGET // R)
+        chunk_of_row = chunk_of_group[codes]  # -1 for light rows
+        slot_of_row = np.full(len(codes), -1, dtype=np.int64)
+        slot_of_row[hrows] = segment_ranks(chunk_of_row[hrows])
+        hitem_sel = np.flatnonzero(~light_sel)
+        item_chunk = chunk_of_row[item_row[hitem_sel]]
+        n_chunks = int(chunk_of_group[hg_codes].max()) + 1
+        for c in range(n_chunks):  # loop over CHUNKS, not groups
+            crows = np.flatnonzero(chunk_of_row == c)
+            mat = np.zeros((len(crows), R), dtype=np.uint8)
+            cdense = crows[enc[crows] == ENC_DENSE]
+            if len(cdense):
+                mat[slot_of_row[cdense]] = unpack_dense(
+                    gather_dense_payloads(data, offsets, cdense)
+                )
+            ci = hitem_sel[item_chunk == c]
+            if len(ci):
+                mat[slot_of_row[item_row[ci]], rr_s[ci]] = vv_s[ci]
+            cg = codes[crows]  # nondecreasing
+            gstart = np.flatnonzero(np.diff(cg, prepend=-1))
+            merged = np.maximum.reduceat(mat, gstart, axis=0)
+            # merged groups that would encode DENSE skip item-ification
+            # entirely: pack the matrix rows straight to wire payloads
+            # (in the dense-partial regime that is ~every heavy group —
+            # the multi-million-item sort this avoids was this merge's
+            # cost cliff there)
+            sp_ok = _sparse_eligible(merged)
+            hd_code_parts.append(cg[gstart][~sp_ok])
+            hd_pay_parts.append(pack_dense(merged[~sp_ok]))
+            rnz, cnz = np.nonzero(merged[sp_ok])
+            gg_parts.append(cg[gstart][sp_ok][rnz])
+            rr_parts.append(cnz.astype(np.int64))
+            vv_parts.append(merged[sp_ok][rnz, cnz])
+    gg = np.concatenate(gg_parts)
+    # output sections, each in ascending code order: item-encoded groups,
+    # all-empty groups (no nonzero register anywhere: canonical empty),
+    # dense-merged heavy groups; then copied into code order
+    present = np.zeros(n_groups, dtype=bool)
+    present[gg] = True
+    n_present = int(present.sum())
+    hd_codes = np.concatenate(hd_code_parts)  # ascending (chunks iterate codes)
+    is_empty = ~present
+    is_empty[hd_codes] = False
+    empty_codes = np.flatnonzero(is_empty)
+    empty = np.frombuffer(bytes(_header(ENC_SPARSE, None)) + _EMPTY_SPARSE, dtype=np.uint8)
+    lens = np.empty(n_groups, dtype=np.int64)
+    lens[empty_codes] = len(empty)
+    lens[hd_codes] = HLL_DENSE_SIZE
+    if n_present:
+        mdata, moffs = encode_groups(
+            (np.cumsum(present) - 1)[gg],
+            np.concatenate(rr_parts),
+            np.concatenate(vv_parts),
+            n_present,
+        )
+        lens[present] = np.diff(moffs)
+    out_offs = np.zeros(n_groups + 1, dtype=np.int64)
+    np.cumsum(lens, out=out_offs[1:])
+    out = np.empty(int(out_offs[-1]), dtype=np.uint8)
+    if n_present:
+        _place_rows(out, out_offs, np.flatnonzero(present), mdata, moffs)
+    _place_rows(
+        out, out_offs, empty_codes,
+        np.tile(empty, len(empty_codes)),
+        _fixed_offsets(len(empty_codes), len(empty)),
+    )
+    out2d = np.empty((len(hd_codes), HLL_DENSE_SIZE), dtype=np.uint8)
+    out2d[:, :HEADER_LEN] = _DENSE_HEADER
+    out2d[:, HEADER_LEN:] = np.vstack(hd_pay_parts)
+    _place_rows(
+        out, out_offs, hd_codes, out2d.reshape(-1),
+        _fixed_offsets(len(hd_codes), HLL_DENSE_SIZE),
+    )
+    return out, out_offs
 
 
 def estimate_bytes_batch(bufs: list[bytes], version: int = 4) -> np.ndarray:

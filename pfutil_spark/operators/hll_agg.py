@@ -17,8 +17,11 @@ property that makes the plan survive a 100x scale-up.
     eval     pf_count_col()              scalar pandas UDF (PFCOUNT)
 
 Stage M (:func:`_arrow_merge_stage`) is also the merge stage of the
-extension sketches (``sketch_agg``): one exchange helper and one 2GB
-guard for both families.
+extension sketches (``sketch_agg``), and :func:`merge_batch` is the one
+merge body of every family: each family hands it two flat hooks, a
+non-raising ``valid_flat`` gate that lets canonical single-partial
+groups pass through, and a ``merge_groups`` that merges the rest (here
+``hll.canonical_flat`` / ``hll.merge_groups_flat``).
 
 Skew: one hot key's partials (one per input partition) can be spread over
 ``salt_buckets`` intermediate merge tasks — legal because register-max is
@@ -90,23 +93,6 @@ def _group_codes(batch: "pa.RecordBatch", by: Sequence[str]) -> tuple[np.ndarray
 
 
 LINEAGE_COLS = ("_partition_id", "_rows_seen")
-
-# merge-stage strategy knobs: a work group is HEAVY (matrix max-reduceat)
-# when it has any dense partial or at least this many sparse items;
-# heavy chunks cap their register-matrix allocation at this many bytes.
-# The budget is deliberately SMALL (64 matrix rows): glibc only
-# recycles freed mmap'd blocks up to ~32MB back into the arena, and
-# first-touch page faults were measured at ~0.12GB/s (NOTES.md) —
-# bounded chunks keep every merge task's working set in warm, reused
-# memory
-_HEAVY_ITEMS = 4096
-_MATRIX_BUDGET = 1 << 20
-
-
-def _segment_positions(sorted_codes: np.ndarray) -> np.ndarray:
-    from pfutil_spark.kernel.sketch_common import segment_ranks
-
-    return segment_ranks(sorted_codes)
 
 
 def _tiled_binary_array(item: bytes, n: int) -> "pa.Array":
@@ -191,14 +177,14 @@ def _arrow_merge_stage(
     keys: list[str],
     cols: list[str],
     schema: StructType,
-    merge_batch,
+    merge_partition,
 ) -> DataFrame:
     """The merge stage of every sketch family: hash-repartition
     ``(keys..., cols...)`` on ``keys`` — the only Exchange, with no
     per-partition Sort (unlike applyInPandas) and a partition count AQE
     chooses (explicit counts measured within noise of its choice,
     NOTES.md) — then combine each partition's Arrow batches into one
-    and yield ``merge_batch(batch)``. Sketch bytes cross Arrow with int32
+    and yield ``merge_partition(batch)``. Sketch bytes cross Arrow with int32
     offsets, so a partition over 2GB raises with the fix."""
     pruned = df.select(*keys, *cols)
     target = pruned.repartition(*[F.col(c) for c in keys]) if keys else pruned.repartition(1)
@@ -216,9 +202,73 @@ def _arrow_merge_stage(
                 "merge partition exceeds 2GB of sketch bytes; raise "
                 "spark.sql.shuffle.partitions"
             ) from e
-        yield merge_batch(batch)
+        yield merge_partition(batch)
 
     return target.mapInArrow(fn, schema)
+
+
+def merge_batch(
+    batch: "pa.RecordBatch",
+    keys: list[str],
+    sketch_col: str,
+    valid_flat,
+    merge_groups,
+    codes: "tuple[np.ndarray, np.ndarray] | None" = None,
+) -> "pa.RecordBatch":
+    """Merge ALL groups of one Arrow batch in one vectorized pass: the
+    stage-M body of every sketch family, given its two flat hooks.
+
+    * single-partial groups whose bytes ``valid_flat(data, offsets)``
+      accepts (the family's canonical bytes, so no re-encode is needed)
+      PASS THROUGH untouched — an Arrow ``take``; in the near-unique-key
+      regime that is ~every group, which is what makes 10^6-group merges
+      cheap;
+    * every other group goes through ONE ``merge_groups(data, offsets,
+      codes, n_groups)`` call, which returns the merged groups in code
+      order (and raises on corrupt bytes).
+
+    ``codes`` = ``(inverse, first_idx)`` precomputed by a multi-metric
+    caller (one grouping shared by every metric column)."""
+    import pyarrow as pa
+
+    from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
+
+    sk = batch.column(sketch_col)
+    if codes is not None:
+        inverse, first_idx = codes
+    elif keys:
+        inverse, first_idx = _group_codes(batch, keys)
+    else:
+        inverse = np.zeros(batch.num_rows, dtype=np.int64)
+        first_idx = np.array([0], dtype=np.int64)
+    n_groups = len(first_idx)
+    counts = np.bincount(inverse, minlength=n_groups)
+    order = np.argsort(inverse, kind="stable")
+    single_row = order[np.cumsum(counts) - counts]  # the row when counts == 1
+    singles = np.flatnonzero(counts == 1)
+    passthrough = np.zeros(n_groups, dtype=bool)
+    if len(singles):
+        sdata, soffs = _varbin_buffers(sk.take(pa.array(single_row[singles])))
+        passthrough[singles] = valid_flat(sdata, soffs.astype(np.int64))
+    pass_ids = np.flatnonzero(passthrough)
+    work_ids = np.flatnonzero(~passthrough)
+    arrays = [sk.take(pa.array(single_row[pass_ids]))]
+    if len(work_ids):
+        rows = order[~passthrough[inverse[order]]]  # group-sorted work rows
+        work_code = np.repeat(np.arange(len(work_ids), dtype=np.int64), counts[work_ids])
+        wdata, woffs = _varbin_buffers(sk.take(pa.array(rows)))
+        mdata, moffs = merge_groups(wdata, woffs.astype(np.int64), work_code, len(work_ids))
+        check_arrow_binary_size(int(moffs[-1]))
+        arrays.append(_binary_array(mdata, moffs))
+    perm = np.empty(n_groups, dtype=np.int64)
+    perm[pass_ids] = np.arange(len(pass_ids))
+    perm[work_ids] = len(pass_ids) + np.arange(len(work_ids))
+    take = pa.array(first_idx)
+    key_arrays = [batch.column(c).take(take) for c in keys]
+    return pa.record_batch(
+        key_arrays + [pa.concat_arrays(arrays).take(pa.array(perm))],
+        names=keys + [SKETCH_COL],
+    )
 
 
 def _merge_stage(
@@ -228,19 +278,9 @@ def _merge_stage(
     count_version: int | None = None,
     estimate_col: str = "estimate",
 ) -> DataFrame:
-    """The HLL merge stage (:func:`_arrow_merge_stage`), merging ALL
-    groups of a partition in one vectorized pass:
-
-    * groups with a single partial whose bytes already carry the
-      canonical invalid-cache header PASS THROUGH untouched (an Arrow
-      ``take`` — zero decode/encode; in the near-unique-key regime that
-      is ~every group, which is what makes 10^6-group merges cheap)
-    * remaining groups batch-decode (one shift/mask ``unpack_dense`` for
-      the dense ones), register-max via ``np.maximum.reduceat`` over the
-      group-sorted stack, and re-encode canonically.
-
-    Correct for any interleaving because register-max is associative /
-    commutative / idempotent (HllByteBuffer.java:341-398 semantics).
+    """The HLL merge stage (:func:`_arrow_merge_stage`): every partition
+    merges in one :func:`merge_record_batch` pass — canonical singles
+    pass through, the rest go through ``hll.merge_groups_flat``.
 
     ``count_version`` FUSES the PFCOUNT estimate into the same Python
     stage and emits (keys..., estimate) instead of the sketch — a
@@ -257,7 +297,7 @@ def _merge_stage(
     else:
         out_fields.append(StructField(estimate_col, LongType(), True))
 
-    def merge_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+    def merge_partition(batch: "pa.RecordBatch") -> "pa.RecordBatch":
         import pyarrow as pa
 
         merged = merge_record_batch(batch, keys, sketch_col)
@@ -270,7 +310,7 @@ def _merge_stage(
         arrays.append(pa.array(est, type=pa.int64()))
         return pa.record_batch(arrays, names=keys + [estimate_col])
 
-    return _arrow_merge_stage(df, keys, [sketch_col], StructType(out_fields), merge_batch)
+    return _arrow_merge_stage(df, keys, [sketch_col], StructType(out_fields), merge_partition)
 
 
 def _salted_premerge(
@@ -290,253 +330,10 @@ def _salted_premerge(
 def merge_record_batch(
     batch: "pa.RecordBatch", keys: list[str], sketch_col: str
 ) -> "pa.RecordBatch":
-    """Merge ALL groups of one Arrow batch (a merge task's partition) in a
-    single vectorized pass — module-level so tests can drive it directly
-    and assert the no-per-group-Python property by monkeypatching the
-    scalar opcode walkers (which must never be called here)."""
-    import pyarrow as pa
-
-    n = batch.num_rows
-    sk = batch.column(sketch_col)
-    if keys:
-        inverse, first_idx = _group_codes(batch, keys)
-        n_groups = len(first_idx)
-    else:
-        inverse = np.zeros(n, dtype=np.int64)
-        first_idx = np.array([0], dtype=np.int64)
-        n_groups = 1
-    counts = np.bincount(inverse, minlength=n_groups)
-    order = np.argsort(inverse, kind="stable")
-    gstarts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-
-    data, offsets = _varbin_buffers(sk)
-    lens = np.diff(offsets)
-    # clamp so a (corrupt) short trailing buffer can't index past the
-    # end of the values buffer — such rows fail `lens >= 18` and fall
-    # through to the decode path, which raises the proper error
-    if len(data) < 16:
-        canon = np.zeros(n, dtype=bool)
-    else:
-        off0 = np.minimum(offsets[:-1], len(data) - 16)
-        canon = (
-            (lens >= 18)
-            & (data[off0] == hll.MAGIC[0])
-            & (data[off0 + 1] == hll.MAGIC[1])
-            & (data[off0 + 2] == hll.MAGIC[2])
-            & (data[off0 + 3] == hll.MAGIC[3])
-            & (data[off0 + 15] == 0x80)
-        )
-        # bytes 5-14 must be zero and byte 15 exactly 0x80 — precisely the
-        # _header(enc, None) bytes a stage-P partial carries. A third-party
-        # single with stale cache bytes / extra flag bits re-routes to the
-        # work path (canonical re-encode), so pf_merge output bytes can't
-        # depend on whether that sketch shared a group with another partial
-        for j in range(5, 15):
-            canon &= data[off0 + j] == 0
-    single_row = order[gstarts]  # the group's row when counts == 1
-    passthrough = (counts == 1) & canon[single_row]
-    # header probe is necessary but not sufficient — and all of the
-    # deeper checks are VECTORIZED (no per-group Python, the r3 fix):
-    # * sparse singles: flat opcode scan must cover exactly 16384
-    #   registers (corrupt bytes re-route to the decode path → raise)
-    # * dense singles: exact length, AND a sparse-eligibility probe —
-    #   a dense-encoded but sparse-ELIGIBLE sketch (encode(
-    #   force_dense=True) or a third-party writer) is re-routed to the
-    #   work path so pf_merge output bytes never depend on which
-    #   partition a partial landed in (canonical re-encode either way)
-    cand = np.flatnonzero(passthrough)
-    if len(cand):
-        rows_c = single_row[cand]
-        enc_c = data[offsets[rows_c] + 4]  # lens >= 18 via canon probe
-        ok = np.zeros(len(cand), dtype=bool)
-        d = np.flatnonzero(
-            (enc_c == hll.ENC_DENSE) & (lens[rows_c] == hll.HLL_DENSE_SIZE)
-        )
-        if len(d):
-            regs_d = hll.unpack_dense(
-                hll.gather_dense_payloads(data, offsets, rows_c[d])
-            )
-            nnz_d = (regs_d != 0).sum(axis=1)
-            sparse_eligible = (regs_d.max(axis=1) <= 32) & (
-                nnz_d * 3 + 4 < hll.HLL_DENSE_SIZE - hll.HEADER_LEN
-            )
-            ok[d[~sparse_eligible]] = True  # canonical dense: pass
-        sp = np.flatnonzero(enc_c == hll.ENC_SPARSE)
-        if len(sp):
-            rs = rows_c[sp]
-            # pass through only valid AND canonical sparse bytes: a valid
-            # but non-canonical encoding (third-party writer) re-routes to
-            # the work path and re-encodes canonically, matching what the
-            # same sketch produces when its group has >1 partial — the
-            # dense probe above enforces the same for dense singles
-            _, canon_sp = hll.sparse_valid_canonical_flat(
-                data, offsets[rs] + hll.HEADER_LEN, offsets[rs + 1]
-            )
-            ok[sp] = canon_sp
-        passthrough[cand[~ok]] = False
-
-    pass_ids = np.flatnonzero(passthrough)
-    work_ids = np.flatnonzero(~passthrough)
-    arrays = []
-    if len(pass_ids):
-        arrays.append(sk.take(pa.array(single_row[pass_ids])))
-    if len(work_ids):
-        work_row_mask = ~passthrough[inverse[order]]
-        rows = order[work_row_mask]  # group-sorted rows of work groups
-        # Two complementary vectorized merge strategies, chosen PER
-        # GROUP (zero per-group Python either way):
-        # * LIGHT groups (all-sparse, few items): parse partials to
-        #   (group, reg, val) items with the flat opcode scanner and
-        #   fold through encode_groups — the near-unique long tail,
-        #   where materializing 16KB register rows would be a 1000x
-        #   memory blowup.
-        # * HEAVY groups (any dense partial, or >= _HEAVY_ITEMS sparse
-        #   items): stack their partials as a (rows, 16384) register
-        #   matrix (memory-bounded chunks) and np.maximum.reduceat —
-        #   dense merges are memory-bandwidth-bound there, while
-        #   item-ifying them costs a multi-million-item sort (measured
-        #   4x slower than a per-group decode + register-max fold on a
-        #   68-group x 64-partial dense merge before this split).
-        work_code = np.repeat(
-            np.arange(len(work_ids), dtype=np.int64), counts[work_ids]
-        )  # dense code per work ROW, group-sorted like `rows`
-        wdata, woffs = _varbin_buffers(sk.take(pa.array(rows)))
-        enc_w = hll.validate_headers_flat(wdata, woffs)
-        dense_rows = np.flatnonzero(enc_w == hll.ENC_DENSE)
-        sparse_rows = np.flatnonzero(enc_w == hll.ENC_SPARSE)
-        iseg, rr_s, vv_s = hll.decode_sparse_pairs_flat(
-            wdata,
-            woffs[:-1][sparse_rows] + hll.HEADER_LEN,
-            woffs[1:][sparse_rows],
-        )
-        n_wg = len(work_ids)
-        item_row = sparse_rows[iseg]  # work-row index per item, sorted
-        item_g = work_code[item_row]
-        has_dense = np.zeros(n_wg, dtype=bool)
-        has_dense[work_code[dense_rows]] = True
-        heavy = has_dense | (
-            np.bincount(item_g, minlength=n_wg) >= _HEAVY_ITEMS
-        )
-        light_sel = ~heavy[item_g]
-        gg_parts = [item_g[light_sel]]
-        rr_parts = [rr_s[light_sel]]
-        vv_parts = [vv_s[light_sel]]
-        hd_code_parts: list = []  # heavy groups whose MERGE is dense
-        hd_pay_parts: list = []   # their packed 12288-byte payloads
-        if heavy.any():
-            R = hll.HLL_REGISTERS
-            dense_payload = hll.HLL_DENSE_SIZE - hll.HEADER_LEN
-            row_heavy = heavy[work_code]
-            hrows = np.flatnonzero(row_heavy)  # work rows of heavy groups
-            # assign heavy GROUPS to chunks by cumulative row offset so
-            # one chunk's matrix stays ~_MATRIX_BUDGET bytes (+ one
-            # group's fan-in; a group never splits across chunks)
-            hg_codes = np.flatnonzero(heavy)
-            hg_rows = np.bincount(work_code[hrows], minlength=n_wg)[hg_codes]
-            cum = np.cumsum(hg_rows) - hg_rows
-            rows_per_chunk = max(1, _MATRIX_BUDGET // (R * 1))
-            chunk_of_group = np.full(n_wg, -1, dtype=np.int64)
-            chunk_of_group[hg_codes] = cum // rows_per_chunk
-            chunk_of_row = chunk_of_group[work_code]  # -1 for light rows
-            slot_of_row = np.full(len(rows), -1, dtype=np.int64)
-            slot_of_row[hrows] = _segment_positions(chunk_of_row[hrows])
-            hitem_sel = np.flatnonzero(~light_sel)
-            item_chunk = chunk_of_row[item_row[hitem_sel]]
-            n_chunks = int(chunk_of_group[hg_codes].max()) + 1
-            for c in range(n_chunks):  # loop over CHUNKS, not groups
-                crows = np.flatnonzero(chunk_of_row == c)
-                mat = np.zeros((len(crows), R), dtype=np.uint8)
-                cdense = crows[enc_w[crows] == hll.ENC_DENSE]
-                if len(cdense):
-                    mat[slot_of_row[cdense]] = hll.unpack_dense(
-                        hll.gather_dense_payloads(wdata, woffs, cdense)
-                    )
-                ci = hitem_sel[item_chunk == c]
-                if len(ci):
-                    mat[slot_of_row[item_row[ci]], rr_s[ci]] = vv_s[ci]
-                cg = work_code[crows]  # nondecreasing
-                gstart = np.flatnonzero(np.diff(cg, prepend=-1))
-                merged = np.maximum.reduceat(mat, gstart, axis=0)
-                # merged groups that would encode DENSE skip
-                # item-ification entirely: pack the matrix rows straight
-                # to wire payloads (in the dense-partial regime that is
-                # ~every heavy group — the multi-million-item sort this
-                # avoids was this merge's cost cliff there)
-                nnz_m = np.count_nonzero(merged, axis=1)
-                sp_ok = (merged.max(axis=1) <= 32) & (
-                    nnz_m * 3 + 4 < dense_payload
-                )
-                if (~sp_ok).any():
-                    hd_code_parts.append(cg[gstart][~sp_ok])
-                    hd_pay_parts.append(hll.pack_dense(merged[~sp_ok]))
-                if sp_ok.any():
-                    rnz, cnz = np.nonzero(merged[sp_ok])
-                    gg_parts.append(cg[gstart][sp_ok][rnz])
-                    rr_parts.append(cnz.astype(np.int64))
-                    vv_parts.append(merged[sp_ok][rnz, cnz])
-        gg = np.concatenate(gg_parts)
-        rr = np.concatenate(rr_parts)
-        vv = np.concatenate(vv_parts)
-        hd_codes = (
-            np.concatenate(hd_code_parts)  # ascending (chunks iterate codes)
-            if hd_code_parts
-            else np.zeros(0, dtype=np.int64)
-        )
-        # groups with no nonzero register anywhere: canonical empty
-        present = np.zeros(len(work_ids), dtype=bool)
-        present[gg] = True
-        n_present = int(present.sum())
-        if n_present:
-            remap = np.cumsum(present) - 1  # identity when all present
-            mdata, moffs = hll.encode_groups(
-                remap[gg] if n_present < len(work_ids) else gg,
-                rr,
-                vv,
-                n_present,
-            )
-            from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
-
-            check_arrow_binary_size(int(moffs[-1]))
-            arrays.append(_binary_array(mdata, moffs))
-        hd_mask = np.zeros(len(work_ids), dtype=bool)
-        hd_mask[hd_codes] = True
-        n_hd = len(hd_codes)
-        n_empty = len(work_ids) - n_present - n_hd
-        if n_empty:
-            # canonical empty sketches for all-empty groups, built as
-            # one tiled buffer (no per-group list)
-            arrays.append(
-                _tiled_binary_array(hll.encode(hll.empty_registers()), n_empty)
-            )
-        if n_hd:
-            # dense-merged heavy groups: canonical dense wire rows built
-            # in one uniform buffer (header == _header(ENC_DENSE, None))
-            from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
-
-            check_arrow_binary_size(n_hd * hll.HLL_DENSE_SIZE)
-            out2d = np.zeros((n_hd, hll.HLL_DENSE_SIZE), dtype=np.uint8)
-            out2d[:, 0:4] = np.frombuffer(hll.MAGIC, dtype=np.uint8)
-            out2d[:, 4] = hll.ENC_DENSE
-            out2d[:, 15] = 0x80  # invalid-cache flag
-            out2d[:, hll.HEADER_LEN :] = np.vstack(hd_pay_parts)
-            hoffs = np.arange(n_hd + 1, dtype=np.int64) * hll.HLL_DENSE_SIZE
-            arrays.append(_binary_array(out2d.reshape(-1), hoffs))
-    concat = pa.concat_arrays([a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays])
-    perm = np.empty(n_groups, dtype=np.int64)
-    perm[pass_ids] = np.arange(len(pass_ids))
-    if len(work_ids):
-        # work section order: item-encoded groups first (encode_groups
-        # output order), then the all-empty groups, then dense-merged
-        wperm = np.empty(len(work_ids), dtype=np.int64)
-        wperm[present] = np.arange(n_present)
-        empty_mask = ~present & ~hd_mask
-        wperm[empty_mask] = n_present + np.arange(n_empty)
-        wperm[hd_mask] = n_present + n_empty + np.arange(n_hd)
-        perm[work_ids] = len(pass_ids) + wperm
-    sketch_out = concat.take(pa.array(perm))
-    take = pa.array(first_idx)
-    key_arrays = [batch.column(c).take(take) for c in keys]
-    return pa.record_batch(key_arrays + [sketch_out], names=keys + [SKETCH_COL])
+    """PFMERGE of ALL groups of one Arrow batch (a merge task's
+    partition): :func:`merge_batch` with the HLL kernel's two hooks —
+    module-level so tests can drive it directly."""
+    return merge_batch(batch, keys, sketch_col, hll.canonical_flat, hll.merge_groups_flat)
 
 
 def pf_merge(

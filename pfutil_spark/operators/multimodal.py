@@ -15,12 +15,11 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
+    BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 

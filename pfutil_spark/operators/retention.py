@@ -26,7 +26,7 @@ Scale posture
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pfutil_spark.operators.hll_agg import SKETCH_COL, pf_count_col, pf_sketch

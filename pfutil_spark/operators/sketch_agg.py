@@ -12,7 +12,10 @@ the HLL operator, parameterized by a small kernel spec:
 body and merge engine; the single-sketch calls (``sketch_agg``,
 ``sketch_partial``, ``sketch_merge``) are their one-metric case. Stage M
 runs on ``hll_agg._arrow_merge_stage``, the exchange both sketch families
-share.
+share, and merges each metric column with ``hll_agg.merge_batch``, the
+one merge body of every family: a spec supplies its two flat hooks
+(``valid_flat``, the pass-through gate, and ``merge_groups``), as the
+HLL kernel does.
 
 Transfer-frugal by design: hash-keyed sketches (CMS, Bloom) consume a
 JVM-side ``xxhash64(col)`` (8 bytes/row over Arrow, computed in codegen);
@@ -40,28 +43,29 @@ class KernelSpec:
     """zero() -> state; update(state, values) -> state (may mutate);
     merge(list[state]) -> state; encode(state) -> bytes; decode(bytes) -> state.
 
-    Optional vectorized hooks (all flat-buffer, zero per-group Python —
-    the machinery that lets per-key sketches survive 10^6+ groups, the
-    same progression the HLL path made in rounds 2-3):
+    Required vectorized hooks (all flat-buffer, zero per-group Python —
+    the machinery that lets per-key sketches survive 10^6+ groups):
 
     * ``fold_groups(values, inverse, n_groups) -> (data, offsets)`` —
       grouped partial fold straight from element values (int64 hashes or
       float64), used by the high-cardinality direct-emit partial path.
     * ``merge_groups(data, offsets, group_codes, n_groups) -> (data,
       offsets)`` — grouped merge of encoded sketches (``group_codes``
-      non-decreasing, all codes present); used by the Arrow merge stage
-      for multi-partial groups. Specs without it fall back to a
-      per-GROUP Python fold over only those groups.
+      non-decreasing, all codes present; output in code order) — the
+      merge of every group the pass-through gate does not take.
     * ``valid_flat(data, offsets) -> bool[n]`` — non-raising per-buffer
-      validity, the single-partial passthrough gate of the Arrow merge
-      stage (``encode(decode(b)) == b`` holds for every valid buffer of
-      these formats, so validity alone implies canonical bytes).
+      validity, the single-partial pass-through gate of the merge stage
+      (``encode(decode(b)) == b`` holds for every valid buffer of these
+      formats, so validity alone implies canonical bytes).
     * ``fold_bytes_bound(n_groups, n_rows) -> int`` — upper bound on the
       bytes a direct-emit fold would produce for a batch. Direct emit is
       only taken when this stays under ``DIRECT_EMIT_BYTES_CAP``: a
       sketch whose size is independent of its row count (Bloom's m/8
       bit array) would otherwise blow up as n_groups x fixed-size where
       the accumulation path was fine.
+
+    ``valid_flat`` and ``merge_groups`` are the spec's half of
+    ``hll_agg.merge_batch``, the one merge body of every sketch family.
     """
 
     zero: Callable
@@ -69,15 +73,15 @@ class KernelSpec:
     merge: Callable
     encode: Callable
     decode: Callable
-    fold_groups: Callable | None = None
-    merge_groups: Callable | None = None
-    valid_flat: Callable | None = None
-    fold_bytes_bound: Callable | None = None
+    fold_groups: Callable
+    merge_groups: Callable
+    valid_flat: Callable
+    fold_bytes_bound: Callable
     # weighted-element hooks (sketches whose rank mass can carry a
     # per-row weight, e.g. t-digest): update_weighted(state, values,
     # weights) -> state; fold_groups_weighted(values, weights, inverse,
-    # n_groups) -> (data, offsets). Required when sketch_agg is called
-    # with a weight column.
+    # n_groups) -> (data, offsets). Both are required when sketch_agg is
+    # called with a weight column.
     update_weighted: Callable | None = None
     fold_groups_weighted: Callable | None = None
     # weight-aware direct-emit byte gate: fold_bytes_bound_weighted(
@@ -94,13 +98,11 @@ DIRECT_EMIT_BYTES_CAP = 1 << 28
 
 
 def _emit_bytes_bound(spec: "KernelSpec", weighted: bool, n_groups: int,
-                      n_rows: int, wts) -> int | None:
-    """Byte bound for a direct-emit fold of one batch (None = ungated)."""
+                      n_rows: int, wts) -> int:
+    """Byte bound for a direct-emit fold of one batch."""
     if weighted and spec.fold_bytes_bound_weighted is not None:
         return spec.fold_bytes_bound_weighted(n_groups, n_rows, wts)
-    if spec.fold_bytes_bound is not None:
-        return spec.fold_bytes_bound(n_groups, n_rows)
-    return None
+    return spec.fold_bytes_bound(n_groups, n_rows)
 
 
 def cms_spec(depth: int = cms.DEFAULT_DEPTH, width: int = cms.DEFAULT_WIDTH) -> KernelSpec:
@@ -285,8 +287,9 @@ def sketch_agg(
     """(by..., sketch): the one-metric case of :func:`sketch_multi`.
     ``element`` must evaluate to LONG (pre-hash) or DOUBLE (values) —
     both cross Arrow as fixed 8-byte columns. With ``weight`` (a DOUBLE
-    column; requires ``spec.update_weighted``) each element carries that
-    much rank mass."""
+    column; requires ``spec.update_weighted`` and
+    ``spec.fold_groups_weighted``) each element carries that much rank
+    mass."""
     return sketch_multi(
         df, _one_metric(element, spec, weight), by, max_groups_in_flight,
         direct_emit_groups,
@@ -335,87 +338,13 @@ def merge_sketch_batch(
     spec: KernelSpec,
     codes: "tuple[np.ndarray, np.ndarray] | None" = None,
 ) -> "pa.RecordBatch":
-    """Merge ALL groups of one Arrow batch (a merge task's partition) in
-    one pass — module-level so tests can drive it directly and assert
-    the no-per-group-Python property by monkeypatching the scalar
-    kernels (which must never run for passthrough/vectorized regimes).
+    """Merge ALL groups of one Arrow batch (a merge task's partition):
+    ``hll_agg.merge_batch`` with the spec's ``valid_flat`` /
+    ``merge_groups`` hooks — module-level so tests can drive it
+    directly."""
+    from pfutil_spark.operators.hll_agg import merge_batch
 
-    Same skeleton as hll_agg.merge_record_batch: validated singles pass
-    through via an Arrow ``take`` (these wire formats satisfy
-    ``encode(decode(b)) == b``, so valid implies canonical — no
-    re-encode needed); everything else merges via ``spec.merge_groups``
-    when available, else a per-GROUP Python fold restricted to the
-    multi-partial/invalid groups (at high-cardinality ``by`` that set is
-    ~empty, which is what keeps 10^6-group merges cheap even for the
-    object-state sketches)."""
-    import pyarrow as pa
-
-    from pfutil_spark.operators.hll_agg import _binary_array, _group_codes, _varbin_buffers
-
-    n = batch.num_rows
-    sk = batch.column(sketch_col)
-    if codes is not None:  # precomputed by a multi-metric caller
-        inverse, first_idx = codes
-        n_groups = len(first_idx)
-    elif keys:
-        inverse, first_idx = _group_codes(batch, keys)
-        n_groups = len(first_idx)
-    else:
-        inverse = np.zeros(n, dtype=np.int64)
-        first_idx = np.array([0], dtype=np.int64)
-        n_groups = 1
-    counts = np.bincount(inverse, minlength=n_groups)
-    order = np.argsort(inverse, kind="stable")
-    gstarts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-
-    data, offsets = _varbin_buffers(sk)
-    valid = (
-        spec.valid_flat(data, offsets.astype(np.int64))
-        if spec.valid_flat is not None
-        else np.zeros(n, dtype=bool)
-    )
-    single_row = order[gstarts]
-    passthrough = (counts == 1) & valid[single_row]
-    pass_ids = np.flatnonzero(passthrough)
-    work_ids = np.flatnonzero(~passthrough)
-    arrays = []
-    if len(pass_ids):
-        arrays.append(sk.take(pa.array(single_row[pass_ids])))
-    if len(work_ids):
-        work_row_mask = ~passthrough[inverse[order]]
-        rows = order[work_row_mask]  # group-sorted rows of work groups
-        work_code = np.repeat(
-            np.arange(len(work_ids), dtype=np.int64), counts[work_ids]
-        )
-        wdata, woffs = _varbin_buffers(sk.take(pa.array(rows)))
-        woffs = woffs.astype(np.int64)
-        if spec.merge_groups is not None:
-            from pfutil_spark.kernel.sketch_common import check_arrow_binary_size
-
-            mdata, moffs = spec.merge_groups(wdata, woffs, work_code, len(work_ids))
-            check_arrow_binary_size(int(moffs[-1]))
-            arrays.append(_binary_array(mdata, moffs))
-        else:
-            gb = np.flatnonzero(np.diff(work_code, prepend=-1))
-            gends = np.append(gb[1:], len(work_code))
-            outs = []
-            for s, e in zip(gb.tolist(), gends.tolist()):
-                states = [
-                    spec.decode(bytes(wdata[woffs[i] : woffs[i + 1]]))
-                    for i in range(s, e)
-                ]
-                outs.append(spec.encode(spec.merge(states)))
-            arrays.append(pa.array(outs, type=pa.binary()))
-    concat = pa.concat_arrays(
-        [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays]
-    )
-    perm = np.empty(n_groups, dtype=np.int64)
-    perm[pass_ids] = np.arange(len(pass_ids))
-    perm[work_ids] = len(pass_ids) + np.arange(len(work_ids))
-    sketch_out = concat.take(pa.array(perm))
-    take = pa.array(first_idx)
-    key_arrays = [batch.column(c).take(take) for c in keys]
-    return pa.record_batch(key_arrays + [sketch_out], names=keys + [SKETCH_COL])
+    return merge_batch(batch, keys, sketch_col, spec.valid_flat, spec.merge_groups, codes)
 
 
 # ---------------------------------------------------------------------------
@@ -440,8 +369,9 @@ def sketch_multi(
 
     ``metrics`` maps output column name -> (element Column, spec) or
     (element, spec, weight Column) for weighted metrics (the spec must
-    provide ``update_weighted``); each element must evaluate to a fixed
-    8-byte type (pre-hashed LONG or DOUBLE). Nulls are dropped PER
+    provide ``update_weighted`` and ``fold_groups_weighted``); each
+    element must evaluate to a fixed 8-byte type (pre-hashed LONG or
+    DOUBLE). Nulls are dropped PER
     METRIC — element OR weight null drops that row for that metric only
     (a row missing one column still feeds the others); a group whose
     rows are all null for one metric still gets that metric's canonical
@@ -454,16 +384,14 @@ def sketch_multi(
       group), the shape that keeps shuffle bytes at O(groups x tasks x
       sketch).
     * HIGH-cardinality batches direct-emit via each spec's vectorized
-      ``fold_groups`` (flat buffers, zero per-group Python); all metrics
-      must provide one, and the summed ``fold_bytes_bound`` must fit
-      ``DIRECT_EMIT_BYTES_CAP`` — else the batch falls back to
-      accumulation.
+      ``fold_groups`` (flat buffers, zero per-group Python) when the
+      summed ``fold_bytes_bound`` fits ``DIRECT_EMIT_BYTES_CAP`` — else
+      the batch falls back to accumulation.
     * The merge stage repartitions ONCE on the keys and merges every
       metric column inside the same task via :func:`merge_sketch_batch`:
       validated single-partial groups PASS THROUGH untouched (an Arrow
-      take; at 10^6 near-unique groups that is ~every group),
-      multi-partial groups batch-merge via ``spec.merge_groups`` or,
-      lacking one, a per-GROUP fold over just those groups."""
+      take; at 10^6 near-unique groups that is ~every group), all other
+      groups batch-merge in one ``spec.merge_groups`` call."""
     partials = sketch_multi_partial(
         df, metrics, by, max_groups_in_flight, direct_emit_groups
     )
@@ -495,7 +423,7 @@ def sketch_multi_partial(
     # plain bools/strings for the closure — never capture Column objects
     weighted_flags = [w is not None for w in wt_exprs]
     for m, spec, wf in zip(names, specs, weighted_flags):
-        if wf and spec.update_weighted is None:
+        if wf and (spec.update_weighted is None or spec.fold_groups_weighted is None):
             raise ValueError(f"metric {m!r}: this spec does not support weighted elements")
     mcols = [f"__pf_m_{i}" for i in range(len(names))]
     wcols = [f"__pf_w_{i}" if wf else None for i, wf in enumerate(weighted_flags)]
@@ -575,26 +503,15 @@ def sketch_multi_partial(
                 (s.fold_groups_weighted if wf else s.fold_groups)
                 for s, wf in zip(specs, weighted_flags)
             ]
-            direct_ok = (
-                by
-                and n_groups >= direct_emit_groups
-                and all(f is not None for f in folds)
-            )
+            direct_ok = by and n_groups >= direct_emit_groups
             if direct_ok:
                 # the byte gate sums over metrics: k folds co-reside in
                 # the same output batch, so the cap must bound their
-                # TOTAL (specs without a bound contribute 0). Evaluated
-                # only after the cheap gates — weighted-KLL's popcount
-                # bound is a batch-sized scan.
+                # TOTAL. Evaluated only after the cheap gate —
+                # weighted-KLL's popcount bound is a batch-sized scan.
                 total_bound = sum(
-                    b
-                    for b in (
-                        _emit_bytes_bound(s, wf, n_groups, len(v), w)
-                        for s, wf, (v, w, __) in zip(
-                            specs, weighted_flags, per_metric
-                        )
-                    )
-                    if b is not None
+                    _emit_bytes_bound(s, wf, n_groups, len(v), w)
+                    for s, wf, (v, w, __) in zip(specs, weighted_flags, per_metric)
                 )
                 direct_ok = total_bound <= DIRECT_EMIT_BYTES_CAP
             if direct_ok:
@@ -686,7 +603,7 @@ def sketch_multi_merge(
         + [StructField(m, BinaryType(), False) for m in names]
     )
 
-    def merge_batch(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+    def merge_partition(batch: "pa.RecordBatch") -> "pa.RecordBatch":
         import pyarrow as pa
 
         # group codes computed ONCE per partition, shared by all metrics
@@ -701,7 +618,7 @@ def sketch_multi_merge(
             names=by + names,
         )
 
-    return _arrow_merge_stage(partials, by, names, schema, merge_batch)
+    return _arrow_merge_stage(partials, by, names, schema, merge_partition)
 
 
 def tdigest_edges(

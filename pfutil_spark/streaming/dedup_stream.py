@@ -30,8 +30,6 @@ defaults, independent of document size.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -172,7 +172,6 @@ def streaming_distinct_with_state(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    import numpy as np
     import pandas as pd
 
     from pfutil_spark.kernel import hll

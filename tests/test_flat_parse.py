@@ -178,6 +178,17 @@ class TestSparseCanonicality:
         offs[1:] = np.cumsum([len(p) for p in payloads])
         return hll.sparse_valid_canonical_flat(data, offs[:-1], offs[1:])
 
+    @staticmethod
+    def _canon(bufs):
+        """hll.canonical_flat (the merge pass-through gate) per whole
+        wire buffer."""
+        return hll.canonical_flat(*hll._flat_views(bufs))
+
+    @staticmethod
+    def _sparse(payload):
+        """``payload`` behind the canonical invalid-cache sparse header."""
+        return bytes(hll._header(hll.ENC_SPARSE, None)) + payload
+
     def test_canonical_encoder_outputs_flagged_canonical(self):
         rng = np.random.default_rng(0)
         payloads = []
@@ -194,6 +205,7 @@ class TestSparseCanonicality:
                 payloads.append(p)
         v, c = self._flags(payloads)
         assert v.all() and c.all()
+        assert self._canon([self._sparse(p) for p in payloads]).all()
 
     def test_non_canonical_valid_payloads_detected(self):
         val = lambda v, r: bytes([0x80 | ((v - 1) << 2) | (r - 1)])  # noqa: E731
@@ -210,6 +222,9 @@ class TestSparseCanonicality:
         v, c = self._flags([p for p, _ in cases])
         assert v.all()
         assert c.tolist() == [exp for _, exp in cases]
+        assert self._canon([self._sparse(p) for p, _ in cases]).tolist() == [
+            exp for _, exp in cases
+        ]
 
     def test_merge_bytes_partition_independent_for_noncanonical_input(self):
         import pyarrow as pa
@@ -246,6 +261,7 @@ class TestSparseCanonicality:
         all_ones = val4 * 4096  # all 16384 registers = 1 -> nnz 16384
         v, c = self._flags([all_ones])
         assert v[0] and not c[0]
+        assert not self._canon([self._sparse(all_ones)])[0]
         # sanity: the encoder indeed refuses sparse for this state
         assert hll.encode_sparse_payload(np.ones(16384, dtype=np.uint8)) is None
         # a state just UNDER the bail (nnz*3+4 = 12004 < 12288) stays
@@ -256,6 +272,7 @@ class TestSparseCanonicality:
         assert p is not None
         v, c = self._flags([p])
         assert v[0] and c[0]
+        assert self._canon([self._sparse(p)])[0]
 
     def _merge_single_vs_split(self, nc):
         """Merge ``nc`` alone vs split across two partials of one group;
@@ -295,9 +312,40 @@ class TestSparseCanonicality:
         regs[7] = 3
         base = hll.encode(regs)
         assert base[4] == hll.ENC_SPARSE and base[15] == 0x80
-        for mutant in (
+        mutants = (
             base[:8] + b"\x07" + base[9:],   # stale cache byte alongside flag
             base[:15] + b"\x81" + base[16:], # extra bit in byte 15
             base[:5] + b"\x01" + base[6:],   # junk in reserved byte 5
-        ):
+        )
+        assert self._canon([base, *mutants]).tolist() == [True, False, False, False]
+        for mutant in mutants:
             self._merge_single_vs_split(mutant)
+
+    def test_canonical_flat_gate(self):
+        """The pass-through gate over whole wire buffers: the canonical
+        encoder's sparse and dense output passes; a dense-encoded but
+        sparse-eligible sketch, a buffer without the invalid-cache flag
+        and a dense buffer of the wrong length do not; junk, short and
+        empty inputs read False without raising."""
+        rng = np.random.default_rng(3)
+        small, big = hll.empty_registers(), hll.empty_registers()
+        small[[3, 900]] = 5
+        np.maximum.at(big, rng.integers(0, 16384, 12000), rng.integers(1, 40, 12000).astype(np.uint8))
+        sparse, dense = hll.encode(small), hll.encode(big)
+        assert sparse[4] == hll.ENC_SPARSE and dense[4] == hll.ENC_DENSE
+        bufs = [
+            sparse,
+            dense,
+            hll.encode(small, force_dense=True),  # sparse-eligible, dense bytes
+            hll.encode(small, cache=2),           # cache valid: flag clear
+            hll.encode_empty(),                   # flag-less empty sketch
+            dense[:-1],                           # dense, short by one byte
+            b"HYLL" + bytes(100),
+            b"JUNK" + sparse[4:],
+            b"",
+            b"\xff" * 3,
+        ]
+        assert self._canon(bufs).tolist() == [True, True] + [False] * 8
+        for tiny in ([b"HYLL"], [b""], [b"\x00" * 15], [sparse[:17]]):
+            assert not self._canon(tiny).any()  # batch under 18 bytes
+        assert hll.canonical_flat(np.zeros(0, np.uint8), np.zeros(1, np.int64)).shape == (0,)

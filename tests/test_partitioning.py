@@ -1,8 +1,6 @@
 """Bucketed tables and explicit hash repartitioning: the co-location
 machinery for repeated merges/joins at scale."""
 
-import re
-
 from pyspark.sql import functions as F
 
 from tests.conftest import plan_of

@@ -386,11 +386,11 @@ class TestNoPerGroupPython:
     never call the scalar kernel entry points — passthrough singles and
     grouped merges both go through the flat machinery."""
 
-    def _drive(self, spec, data, offs, n_singles, n_multi):
-        """Build a batch of n_singles one-partial groups + n_multi
-        two-partial groups from consecutive rows of (data, offs), BREAK
-        every scalar hook on the spec object (the merge binds spec
-        attributes, so patching the spec is airtight), and merge."""
+    @staticmethod
+    def _batch(data, offs, n_singles, n_multi):
+        """A batch of n_singles one-partial groups + n_multi two-partial
+        groups from consecutive rows of (data, offs), and the singles'
+        bytes."""
         import pyarrow as pa
 
         keys, bufs = [], []
@@ -410,6 +410,24 @@ class TestNoPerGroupPython:
             [pa.array(keys), pa.array(bufs, type=pa.binary())],
             names=["k", SKETCH_COL],
         )
+        return batch, bufs[:n_singles]
+
+    @staticmethod
+    def _recording(valid_flat, seen):
+        """``valid_flat`` that records every buffer it is asked about."""
+
+        def rec(d, o):
+            seen.extend(bytes(d[o[j] : o[j + 1]]) for j in range(len(o) - 1))
+            return valid_flat(d, o)
+
+        return rec
+
+    def _drive(self, spec, data, offs, n_singles, n_multi):
+        """Merge a :meth:`_batch` with every scalar hook on the spec
+        object BROKEN (the merge binds spec attributes, so patching the
+        spec is airtight), and assert the pass-through gate saw exactly
+        the single-partial rows."""
+        batch, singles = self._batch(data, offs, n_singles, n_multi)
 
         def boom(*a, **kw):
             raise AssertionError("scalar kernel called in vectorized merge stage")
@@ -419,12 +437,40 @@ class TestNoPerGroupPython:
         spec.update = boom
         spec.encode = boom
         spec.zero = boom
+        seen: list = []
+        spec.valid_flat = self._recording(spec.valid_flat, seen)
         out = merge_sketch_batch(batch, ["k"], SKETCH_COL, spec)
+        assert sorted(seen) == sorted(singles)
         assert out.num_rows == n_singles + n_multi
         return {
             out.column("k")[j].as_py(): out.column(SKETCH_COL)[j].as_py()
             for j in range(out.num_rows)
         }
+
+    def test_hll_gate_sees_only_singles(self, monkeypatch):
+        """The HLL merge runs the same body: its pass-through gate
+        (``hll.canonical_flat``) sees exactly the single-partial rows,
+        and multi-partial groups come out as the register-max."""
+        from pfutil_spark.kernel import hll
+        from pfutil_spark.operators.hll_agg import merge_record_batch
+
+        rng = np.random.default_rng(15)
+        regs = np.zeros((300, hll.HLL_REGISTERS), dtype=np.uint8)
+        for r in regs:
+            n = int(rng.choice([5, 40, 9000]))
+            np.maximum.at(r, rng.integers(0, hll.HLL_REGISTERS, n), rng.integers(1, 30, n).astype(np.uint8))
+        data, offs = hll.encode_many(regs)
+        batch, singles = self._batch(data, offs, 100, 100)
+        seen: list = []
+        monkeypatch.setattr(hll, "canonical_flat", self._recording(hll.canonical_flat, seen))
+        out = merge_record_batch(batch, ["k"], SKETCH_COL)
+        assert sorted(seen) == sorted(singles)
+        got = dict(zip(out.column("k").to_pylist(), out.column(SKETCH_COL).to_pylist()))
+        assert len(got) == 200
+        for g in range(100):
+            assert got[f"s{g}"] == singles[g]
+            i = 100 + 2 * g
+            assert got[f"m{g}"] == hll.encode(np.maximum(regs[i], regs[i + 1]))
 
     def test_kmv(self):
         _, inv, h = _pairs(8, n=30_000, n_groups=500)

@@ -550,6 +550,23 @@ class TestWeightedKLLSpark:
         )
         assert out.count() == 3  # would raise if the bound were eager
 
+    def test_weighted_metric_needs_both_weighted_hooks(self, spark):
+        """A weighted metric is refused up front, before any job, unless
+        its spec has both ``update_weighted`` (accumulation) and
+        ``fold_groups_weighted`` (direct emit)."""
+        import dataclasses
+
+        from pfutil_spark.operators.sketch_agg import kll_spec, kmv_spec, sketch_agg
+
+        df = spark.createDataFrame([("a", 1.0, 2)], "grp string, v double, w long")
+        for spec in (
+            kmv_spec(),  # neither hook
+            dataclasses.replace(kll_spec(), fold_groups_weighted=None),
+            dataclasses.replace(kll_spec(), update_weighted=None),
+        ):
+            with pytest.raises(ValueError, match="does not support weighted"):
+                sketch_agg(df, F.col("v"), spec, by=("grp",), weight=F.col("w"))
+
 
 class TestWeightedSpaceSavingSpark:
     def test_exact_regime_weighted_totals(self, spark):

@@ -13,7 +13,6 @@ tests/test_pyfiles.py runs this exact command in a subprocess.
 """
 
 import json
-import sys
 
 
 def main() -> int:
