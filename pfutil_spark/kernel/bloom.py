@@ -27,6 +27,7 @@ from .sketch_common import (
     popcount_rows,
     probe_headers,
     read_le_flat,
+    scatter_uniform_rows,
     segment_ranks,
     to_u64,
     write_le_flat,
@@ -205,8 +206,7 @@ def encode_groups_items(
         mat = np.zeros((len(dn), m_bytes), dtype=np.uint8)
         if len(key):
             mat.reshape(-1)[key[starts]] = orred
-        posm = offsets[dn][:, None] + 16 + np.arange(m_bytes, dtype=np.int64)[None, :]
-        data[posm] = mat
+        scatter_uniform_rows(data, offsets[dn] + 16, mat)
     return data, offsets
 
 
@@ -362,14 +362,12 @@ def merge_groups_flat(
         mat = np.zeros((int(ldm.sum()), m_bytes), dtype=np.uint8)
         mat.reshape(-1)[key[st]] = np.bitwise_or.reduceat(val, st)
         ld = np.flatnonzero(ldm)
-        posm = out_offs[ld][:, None] + 16 + np.arange(m_bytes, dtype=np.int64)[None, :]
-        out[posm] = mat
+        scatter_uniform_rows(out, out_offs[ld] + 16, mat)
     # heavy-dense rows straight from the OR'd matrix
     hdm = heavy & ~sparse_ok
     if hdm.any():
         hd = np.flatnonzero(hdm)
-        posm = out_offs[hd][:, None] + 16 + np.arange(m_bytes, dtype=np.int64)[None, :]
-        out[posm] = Hmat[hrank[hd]]
+        scatter_uniform_rows(out, out_offs[hd] + 16, Hmat[hrank[hd]])
     # heavy-sparse (rare: dense partials whose union is still tiny)
     hsm = heavy & sparse_ok
     if hsm.any():

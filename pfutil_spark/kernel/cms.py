@@ -151,24 +151,24 @@ def decode(buf: bytes) -> np.ndarray:
 # are byte-identical to the scalar update/merge in any order.
 # ---------------------------------------------------------------------------
 
-def encode_groups_items(
+def _write_groups(
+    nnz: np.ndarray,
     item_g: np.ndarray,
     item_idx: np.ndarray,
     item_cnt: np.ndarray,
-    n_groups: int,
+    dense: np.ndarray,
     d: int,
     w: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Canonical wire encodings for ``n_groups`` sketches given their
-    nonzero counters as (group, flat_index, count) items — sorted by
-    (group, flat_index), counts nonzero. Never materializes an
-    (n_groups, d*w) matrix for the sparse groups (the high-cardinality
-    path: one-element sketches stay ~40 bytes end to end). Per-row bytes
-    identical to :func:`encode`."""
-    from .sketch_common import segment_ranks, write_le_flat
+    """The wire writer of both grouped encoders: group ``g`` holds
+    ``nnz[g]`` nonzero counters; the sparse-eligible groups' counters
+    come as (group, flat_index, count) items sorted by (group,
+    flat_index), and the other groups' counters as the rows of
+    ``dense`` (one (d*w,) int64 row per dense group, in group order)."""
+    from .sketch_common import scatter_uniform_rows, segment_ranks, write_le_flat
 
+    n_groups = len(nnz)
     dw = d * w
-    nnz = np.bincount(item_g, minlength=n_groups).astype(np.int64)
     sparse_ok = _sparse_eligible(nnz, dw)
     payload = np.where(sparse_ok, 4 + 12 * nnz, dw * 8)
     offsets = np.zeros(n_groups + 1, dtype=np.int64)
@@ -184,30 +184,55 @@ def encode_groups_items(
     sp = np.flatnonzero(sparse_ok)
     if len(sp):
         write_le_flat(data, hp[sp] + 16, nnz[sp], 4)
-    ok_item = sparse_ok[item_g]
-    si = np.flatnonzero(ok_item)
-    if len(si):
-        pos = offsets[item_g[si]] + 20 + 12 * segment_ranks(item_g[si])
-        write_le_flat(data, pos, item_idx[si], 4)
-        write_le_flat(data, pos + 4, item_cnt[si].view(np.uint64), 8)
+    if len(item_g):
+        pos = offsets[item_g] + 20 + 12 * segment_ranks(item_g)
+        write_le_flat(data, pos, item_idx, 4)
+        write_le_flat(data, pos + 4, item_cnt.view(np.uint64), 8)
     dn = np.flatnonzero(~sparse_ok)
     if len(dn):
-        remap = np.cumsum(~sparse_ok) - 1  # group -> dense row
-        di = np.flatnonzero(~ok_item)
-        mat = np.zeros((len(dn), dw), dtype=np.int64)
-        mat[remap[item_g[di]], item_idx[di]] = item_cnt[di]
-        posm = offsets[dn][:, None] + 16 + np.arange(dw * 8, dtype=np.int64)[None, :]
-        data[posm] = mat.astype("<i8").view(np.uint8)
+        scatter_uniform_rows(data, offsets[dn] + 16, dense.astype("<i8").view(np.uint8))
     return data, offsets
 
 
+def encode_groups_items(
+    item_g: np.ndarray,
+    item_idx: np.ndarray,
+    item_cnt: np.ndarray,
+    n_groups: int,
+    d: int,
+    w: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Canonical wire encodings for ``n_groups`` sketches given their
+    nonzero counters as (group, flat_index, count) items — sorted by
+    (group, flat_index), counts nonzero. Never materializes an
+    (n_groups, d*w) matrix for the sparse groups (the high-cardinality
+    path: one-element sketches stay ~40 bytes end to end). Per-row bytes
+    identical to :func:`encode`."""
+    dw = d * w
+    nnz = np.bincount(item_g, minlength=n_groups).astype(np.int64)
+    sparse_ok = _sparse_eligible(nnz, dw)
+    ok_item = sparse_ok[item_g]
+    di = np.flatnonzero(~ok_item)
+    dense = np.zeros((int((~sparse_ok).sum()), dw), dtype=np.int64)
+    if len(di):
+        remap = np.cumsum(~sparse_ok) - 1  # group -> dense row
+        dense[remap[item_g[di]], item_idx[di]] = item_cnt[di]
+    si = np.flatnonzero(ok_item)
+    return _write_groups(nnz, item_g[si], item_idx[si], item_cnt[si], dense, d, w)
+
+
 def encode_groups(states: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(n_groups, d, w) int64 counter stack -> flat wire buffers."""
+    """(n_groups, d, w) int64 counter stack -> flat wire buffers; the
+    dense groups' rows are written straight from the stack."""
     n_groups, d, w = states.shape
     flat2d = np.ascontiguousarray(states).reshape(n_groups, d * w)
-    r_idx, c_idx = np.nonzero(flat2d)  # row-major: sorted per group
-    return encode_groups_items(
-        r_idx, c_idx.astype(np.int64), flat2d[r_idx, c_idx], n_groups, d, w
+    nnz = np.count_nonzero(flat2d, axis=1).astype(np.int64)
+    sparse_ok = _sparse_eligible(nnz, d * w)
+    sp = np.flatnonzero(sparse_ok)
+    sub = flat2d[sp]
+    r_idx, c_idx = np.nonzero(sub)  # row-major: sorted per group
+    return _write_groups(
+        nnz, sp[r_idx], c_idx.astype(np.int64), sub[r_idx, c_idx], flat2d[~sparse_ok], d, w
     )
 
 
@@ -270,13 +295,15 @@ def fold_groups_weighted(
     return encode_groups_items(uk // dw, uk % dw, cnt, n_groups, depth, width)
 
 
-def _items_flat(
+def _parse_flat(
     data: np.ndarray, offsets: np.ndarray, depth: int, width: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Validated flat parse of many CMS buffers (dense v1 and sparse v2
-    mixed) -> nonzero-counter items ``(row_seg, flat_idx, count)``,
-    sorted by (row, flat_idx). Sparse rows never densify — the property
-    that keeps a 10^6-row merge at O(total nonzeros), not O(rows*d*w)."""
+    mixed) -> ``(dn, mats, seg, idx, cnt)``: the dense rows ``dn`` with
+    their (len(dn), d*w) counter matrix, and the sparse rows' nonzero
+    counters as items ``(row, flat_idx, count)``. Sparse rows never
+    densify — the property that keeps a 10^6-row merge at O(total
+    nonzeros), not O(rows*d*w)."""
     from .sketch_common import gather_uniform_rows, read_le_flat, segment_ranks
 
     n = len(offsets) - 1
@@ -298,43 +325,35 @@ def _items_flat(
     ww = read_le_flat(data, hp + 12, 4)
     if (dd != depth).any() or (ww != width).any():
         raise ValueError("Invalid CMS representation")  # param mismatch
-    seg_parts, idx_parts, cnt_parts = [], [], []
     dn = np.flatnonzero(ver == 1)
-    if len(dn):
-        if (lens[dn] != 16 + dw * 8).any():
-            raise ValueError("Invalid CMS representation")
-        mats = gather_uniform_rows(data, hp[dn] + 16, dw * 8).view("<i8")
-        r_idx, c_idx = np.nonzero(mats)
-        seg_parts.append(dn[r_idx])
-        idx_parts.append(c_idx.astype(np.int64))
-        cnt_parts.append(mats[r_idx, c_idx])
+    if (lens[dn] != 16 + dw * 8).any():
+        raise ValueError("Invalid CMS representation")
+    mats = gather_uniform_rows(data, hp[dn] + 16, dw * 8).view("<i8")
     sp = np.flatnonzero(ver == 2)
-    if len(sp):
-        if (lens[sp] < 20).any():
+    if (lens[sp] < 20).any():
+        raise ValueError("Invalid CMS representation")
+    nnz = read_le_flat(data, hp[sp] + 16, 4).astype(np.int64)
+    if (lens[sp] != 20 + 12 * nnz).any() or (~_sparse_eligible(nnz, dw)).any():
+        raise ValueError("Invalid CMS representation")
+    seg = np.repeat(np.arange(len(sp), dtype=np.int64), nnz)
+    pos = offsets[sp][seg] + 20 + 12 * segment_ranks(seg)
+    idx = read_le_flat(data, pos, 4).astype(np.int64)
+    cnt = read_le_flat(data, pos + 4, 8).view(np.int64)
+    if len(idx):
+        bad = (idx >= dw) | (idx < 0)
+        bad[1:] |= (seg[1:] == seg[:-1]) & (idx[1:] <= idx[:-1])
+        if bad.any():
             raise ValueError("Invalid CMS representation")
-        nnz = read_le_flat(data, hp[sp] + 16, 4).astype(np.int64)
-        if (lens[sp] != 20 + 12 * nnz).any() or (~_sparse_eligible(nnz, dw)).any():
-            raise ValueError("Invalid CMS representation")
-        seg = np.repeat(np.arange(len(sp), dtype=np.int64), nnz)
-        pos = offsets[sp][seg] + 20 + 12 * segment_ranks(seg)
-        idx = read_le_flat(data, pos, 4).astype(np.int64)
-        cnt = read_le_flat(data, pos + 4, 8).view(np.int64)
-        if len(idx):
-            bad = (idx >= dw) | (idx < 0)
-            bad[1:] |= (seg[1:] == seg[:-1]) & (idx[1:] <= idx[:-1])
-            if bad.any():
-                raise ValueError("Invalid CMS representation")
-        seg_parts.append(sp[seg])
-        idx_parts.append(idx)
-        cnt_parts.append(cnt)
-    if not seg_parts:
-        e = np.zeros(0, dtype=np.int64)
-        return e, e, e
-    seg = np.concatenate(seg_parts)
-    idx = np.concatenate(idx_parts)
-    cnt = np.concatenate(cnt_parts)
-    order = np.lexsort((idx, seg))
-    return seg[order], idx[order], cnt[order]
+    return dn, mats, sp[seg], idx, cnt
+
+
+# merge_groups_flat sums into an (n_groups, d*w) int64 matrix when it
+# takes at most _MATRIX_BUDGET bytes and holds at most _MATRIX_MAX_FILL
+# cells per counter summed; otherwise it merges sparse items. The two
+# bodies cost the same near 3 cells per counter at 17-400 groups of
+# depth 5 x width 2048 (NOTES.md, "CMS grouped merge")
+_MATRIX_BUDGET = 1 << 25
+_MATRIX_MAX_FILL = 3
 
 
 def merge_groups_flat(
@@ -346,13 +365,37 @@ def merge_groups_flat(
     width: int = DEFAULT_WIDTH,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Grouped CMS merge (``group_codes`` non-decreasing, every code
-    0..n_groups-1 present): sum the nonzero items per (group, counter)
-    with one sort + ``np.add.reduceat`` — sparse-native end to end."""
+    0..n_groups-1 present). Counter addition is exact, so both bodies
+    emit the bytes of a per-group decode / merge / encode:
+
+    * MATRIX, when the (n_groups, d*w) int64 sum matrix fits
+      ``_MATRIX_BUDGET`` and has at most ``_MATRIX_MAX_FILL`` cells
+      per counter it sums (a dense partial counts as d*w counters):
+      dense partials add in as whole rows, one ``np.add.reduceat`` per
+      group's run of them, sparse items with one ``np.add.at``, then
+      :func:`encode_groups`;
+    * SPARSE otherwise: sum the nonzero items per (group, counter) with
+      one sort + ``np.add.reduceat`` — memory O(total nonzeros), the
+      body that keeps 10^6 near-empty per-key sketches cheap."""
     dw = depth * width
-    seg, idx, cnt = _items_flat(data, offsets, depth, width)
-    g = np.asarray(group_codes, dtype=np.int64)[seg]
-    key = g * dw + idx
-    order = np.argsort(key, kind="stable")
+    codes = np.asarray(group_codes, dtype=np.int64)
+    dn, mats, seg, idx, cnt = _parse_flat(data, offsets, depth, width)
+    n_items = len(dn) * dw + len(idx)
+    if n_groups * dw * 8 <= _MATRIX_BUDGET and n_groups * dw <= _MATRIX_MAX_FILL * n_items:
+        total = np.zeros((n_groups, dw), dtype=np.int64)
+        if len(dn):
+            gd = codes[dn]
+            runs = np.flatnonzero(np.diff(gd, prepend=-1))
+            total[gd[runs]] += np.add.reduceat(mats, runs, axis=0)
+        np.add.at(total.reshape(-1), codes[seg] * dw + idx, cnt)
+        return encode_groups(total.reshape(n_groups, depth, width))
+    if len(dn):
+        r_idx, c_idx = np.nonzero(mats)
+        seg = np.concatenate((dn[r_idx], seg))
+        idx = np.concatenate((c_idx.astype(np.int64), idx))
+        cnt = np.concatenate((mats[r_idx, c_idx], cnt))
+    key = codes[seg] * dw + idx
+    order = np.argsort(key)  # integer sums: the order of equal keys is free
     ks, cs = key[order], cnt[order]
     starts = np.flatnonzero(np.diff(ks, prepend=-1))
     sums = np.add.reduceat(cs, starts) if len(ks) else np.zeros(0, dtype=np.int64)

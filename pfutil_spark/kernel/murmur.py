@@ -20,6 +20,8 @@ from collections.abc import Sequence
 
 import numpy as np
 
+from .sketch_common import flat_buffers, le_words
+
 _M = np.uint64(0xC6A4A7935BD1E995)
 _R = np.uint64(47)
 
@@ -27,69 +29,94 @@ _R = np.uint64(47)
 HLL_SEED = 0xADC83B19
 
 
-def _pack_rows(datas: Sequence[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    """Pack variable-length byte strings into an (n, width) uint64
-    little-endian chunk matrix (zero padded) plus a length vector.
-
-    No per-row Python: the scatter is one fancy-indexed assignment.
-    """
-    n = len(datas)
-    lens = np.fromiter((len(d) for d in datas), count=n, dtype=np.int64)
-    if n == 0:
-        return np.zeros((0, 1), dtype=np.uint64), lens
-    max_len = int(lens.max(initial=0))
-    width = max((max_len + 7) // 8, 1)
-
-    if max_len > 0 and bool((lens == max_len).all()):
-        # uniform-width fast path (e.g. sha256 hex = 64 bytes): no scatter
-        flat = np.frombuffer(b"".join(datas), dtype=np.uint8)
-        if max_len % 8 == 0:
-            u64 = flat.reshape(n, max_len).view("<u8")
-            return u64, lens
-        padded = np.zeros((n, width * 8), dtype=np.uint8)
-        padded[:, :max_len] = flat.reshape(n, max_len)
-        return padded.view("<u8"), lens
-
-    padded = np.zeros((n, width * 8), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        flat = np.frombuffer(b"".join(datas), dtype=np.uint8)
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-        col_idx = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-        padded[row_idx, col_idx] = flat
-    return padded.view("<u8"), lens
+# _TAIL_MASKS[k] keeps the low k bytes of a little-endian word
+_TAIL_MASKS = np.array([(1 << (8 * k)) - 1 for k in range(9)], dtype=np.uint64)
 
 
-def _pack_flat(data: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def _gather_words(
+    words: np.ndarray, total: int, starts: np.ndarray, lens: np.ndarray
+) -> np.ndarray:
+    """(n, width) zero-padded little-endian word matrix of the rows at
+    byte ``starts`` with ``lens`` bytes, read from ``words`` (the
+    unaligned 8-byte view of a buffer holding ``total`` row bytes plus 8
+    zero bytes): one unaligned 8-byte gather per row per word column,
+    the bytes past each row's end masked off."""
+    width = max((int(lens.max(initial=0)) + 7) // 8, 1)
+    out = np.empty((width, len(lens)), dtype=np.uint64)
+    for c in range(width):
+        rem = np.clip(lens - 8 * c, 0, 8)
+        np.bitwise_and(words[np.minimum(starts + 8 * c, total)], _TAIL_MASKS[rem], out=out[c])
+    return out.T
+
+
+def _pack_flat(
+    data: np.ndarray, offsets: np.ndarray
+) -> list[tuple[np.ndarray | None, np.ndarray, np.ndarray]]:
     """Pack rows described by Arrow-style (values, offsets) buffers —
-    row i is ``data[offsets[i]:offsets[i+1]]`` — into the (n, width)
-    uint64 chunk matrix. Fully zero-copy for uniform multiple-of-8 row
-    widths (e.g. sha256 hex); one vectorized scatter otherwise."""
+    row i is ``data[offsets[i]:offsets[i+1]]`` — into zero-padded
+    little-endian word matrices: a list of ``(rows, u64, lens)``, one
+    (len(rows), width) uint64 matrix and its rows' byte lengths per
+    part, where ``rows`` (None: every row, in order) are the row
+    numbers of the part.
+
+    Uniform multiple-of-8 row widths (e.g. sha256 hex) are one zero-copy
+    view, other uniform widths one padded 2-D copy. Variable widths
+    split into length classes — rows of 2^(k-1) to 2^k - 1 words share
+    class k — each packed by :func:`_gather_words`, so every matrix is
+    at most about twice its rows' bytes: one long value among many short
+    ones costs its own bytes, not (rows x longest row). A per-byte
+    scatter packer cost ~5x the time and memory on path-like columns
+    (NOTES.md)."""
     offsets = offsets.astype(np.int64, copy=False)
     lens = np.diff(offsets)
     n = len(lens)
     if n == 0:
-        return np.zeros((0, 1), dtype=np.uint64), lens
-    max_len = int(lens.max(initial=0))
-    width = max((max_len + 7) // 8, 1)
-    seg = data[int(offsets[0]) : int(offsets[-1])]
-    if max_len > 0 and bool((lens == max_len).all()):
+        return [(None, np.zeros((0, 1), dtype=np.uint64), lens)]
+    base, end = int(offsets[0]), int(offsets[-1])
+    seg = data[base:end]
+    min_len, max_len = int(lens.min()), int(lens.max())
+    if min_len == max_len > 0:
         if max_len % 8 == 0:
-            seg = np.ascontiguousarray(seg)
-            return seg.reshape(n, max_len).view("<u8"), lens
-        padded = np.zeros((n, width * 8), dtype=np.uint8)
-        padded[:, :max_len] = seg.reshape(n, max_len)
-        return padded.view("<u8"), lens
-    padded = np.zeros((n, width * 8), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-        starts_rel = offsets[:-1] - offsets[0]
-        col_idx = np.arange(total, dtype=np.int64) - np.repeat(starts_rel, lens)
-        padded[row_idx, col_idx] = seg
-    return padded.view("<u8"), lens
+            u64 = np.ascontiguousarray(seg).reshape(n, max_len).view("<u8")
+        else:
+            padded = np.zeros((n, (max_len + 7) // 8 * 8), dtype=np.uint8)
+            padded[:, :max_len] = seg.reshape(n, max_len)
+            u64 = padded.view("<u8")
+        return [(None, u64, lens)]
+    total = end - base
+    # the row bytes plus 8 zero bytes, so a word read at any position
+    # <= total stays inside the buffer
+    buf = np.zeros(total + 8, dtype=np.uint8)
+    buf[:total] = seg
+    words = le_words(buf, 8)
+    starts = offsets[:-1] - base
+    if ((min_len + 7) >> 3).bit_length() == ((max_len + 7) >> 3).bit_length():
+        return [(None, _gather_words(words, total, starts, lens), lens)]
+    cls = np.frexp((lens + 7) >> 3)[1]
+    order = np.argsort(cls, kind="stable")
+    bounds = np.flatnonzero(np.diff(cls[order])) + 1
+    return [
+        (rows, _gather_words(words, total, starts[rows], lens[rows]), lens[rows])
+        for rows in np.split(order, bounds)
+    ]
+
+
+def _hash_flat(packed, data: np.ndarray, offsets: np.ndarray, seed: int) -> np.ndarray:
+    """Run ``packed(u64, lens, seed)`` — a byte-string hash over a
+    zero-padded little-endian word matrix and its rows' byte lengths —
+    on every part of :func:`_pack_flat`. Shared by every byte-string
+    hash kernel (MurmurHash64A here, XXH64 in ``kernel/xxhash64.py``)."""
+    parts = _pack_flat(data, offsets)
+    if parts[0][0] is None:
+        return packed(parts[0][1], parts[0][2], seed)
+    out = None
+    while parts:  # popped, so each class matrix is freed once hashed
+        rows, u64, lens = parts.pop()
+        h = packed(u64, lens, seed)
+        if out is None:
+            out = np.empty(len(offsets) - 1, dtype=h.dtype)
+        out[rows] = h
+    return out
 
 
 def murmur64a_flat(
@@ -97,8 +124,7 @@ def murmur64a_flat(
 ) -> np.ndarray:
     """MurmurHash64A over Arrow (values, offsets) buffers — the zero-copy
     hot path used by the mapInArrow partial stage."""
-    u64, lens = _pack_flat(data, offsets)
-    return murmur64a_packed(u64, lens, seed)
+    return _hash_flat(murmur64a_packed, data, offsets, seed)
 
 
 def murmur64a(datas: Sequence[bytes], seed: int = HLL_SEED) -> np.ndarray:
@@ -107,8 +133,7 @@ def murmur64a(datas: Sequence[bytes], seed: int = HLL_SEED) -> np.ndarray:
     Exact parity with the Java reference including wrap-around multiply,
     unsigned right shifts, and the tail-byte handling.
     """
-    u64, lens = _pack_rows(datas)
-    return murmur64a_packed(u64, lens, seed)
+    return murmur64a_flat(*flat_buffers(datas), seed)
 
 
 def murmur64a_packed(u64: np.ndarray, lens: np.ndarray, seed: int = HLL_SEED) -> np.ndarray:

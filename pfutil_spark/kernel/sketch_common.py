@@ -2,9 +2,11 @@
 t-digest).
 
 These have no Redis wire-compat constraint (reference repo is HLL-only;
-see SURVEY.md §2.4), so hashing is free to be fast: the Spark operator
-computes ``xxhash64(col)`` JVM-side (codegen, 8 bytes/row across Arrow
-instead of raw strings) and the kernels derive the per-row hash family
+see SURVEY.md §2.4), so hashing is free to be fast: each row enters as
+one 64-bit Spark ``xxhash64(col)``, computed JVM-side in codegen (8
+bytes/row across Arrow instead of raw strings) or, when the Python
+workers read the parquet themselves, by ``kernel/xxhash64.py`` with the
+same bits; the kernels derive the per-row hash family
 from that single 64-bit value with splitmix64 finalizer chains
 (Steele, Lea & Flood, "Fast Splittable Pseudorandom Number Generators",
 OOPSLA 2014 — public algorithm).
@@ -48,22 +50,29 @@ def to_u64(col: np.ndarray) -> np.ndarray:
 # kernel/hll.py's flat opcode scanner).
 # ---------------------------------------------------------------------------
 
+def le_words(data: np.ndarray, nbytes: int) -> np.ndarray:
+    """View of contiguous uint8 ``data`` whose element ``p`` is the
+    (unaligned) little-endian ``nbytes``-wide integer at byte ``p``."""
+    return np.ndarray(
+        (len(data) - nbytes + 1,), dtype=f"<u{nbytes}", buffer=data, strides=(1,)
+    )
+
+
 def write_le_flat(data: np.ndarray, pos: np.ndarray, vals: np.ndarray, nbytes: int) -> None:
-    """Scatter little-endian ``nbytes``-wide integers ``vals`` into
-    ``data`` at byte positions ``pos`` (one value per position):
-    ``nbytes`` vectorized byte-plane writes, alignment-free."""
-    v = vals.astype(np.uint64, copy=False)
-    for b in range(nbytes):
-        data[pos + b] = ((v >> np.uint64(8 * b)) & np.uint64(0xFF)).astype(np.uint8)
+    """Scatter little-endian ``nbytes``-wide (1, 2, 4 or 8) integers
+    ``vals`` into ``data`` at byte positions ``pos`` (one value per
+    position, windows disjoint): one unaligned scatter."""
+    if len(pos):
+        le_words(data, nbytes)[pos] = vals.astype(np.uint64, copy=False)
 
 
 def read_le_flat(data: np.ndarray, pos: np.ndarray, nbytes: int) -> np.ndarray:
-    """Gather little-endian ``nbytes``-wide unsigned integers from
-    ``data`` at byte positions ``pos`` -> uint64 array."""
-    out = np.zeros(len(pos), dtype=np.uint64)
-    for b in range(nbytes):
-        out |= data[pos + b].astype(np.uint64) << np.uint64(8 * b)
-    return out
+    """Gather little-endian ``nbytes``-wide (1, 2, 4 or 8) unsigned
+    integers from ``data`` at byte positions ``pos`` -> uint64 array:
+    one unaligned gather."""
+    if len(pos) == 0:
+        return np.zeros(0, dtype=np.uint64)
+    return le_words(data, nbytes)[pos].astype(np.uint64)
 
 
 def segment_ranks(sorted_codes: np.ndarray) -> np.ndarray:
@@ -95,26 +104,34 @@ def gather_f8_runs(
     data: np.ndarray, starts: np.ndarray, counts: np.ndarray
 ) -> np.ndarray:
     """Gather ``counts[i]`` little-endian float64s starting at byte
-    ``starts[i]`` for each run -> one flat float64 array in run order.
-    One byte-level fancy gather + view (alignment-free) — ~4x the
-    8-byte-plane ``read_le_flat`` walk for contiguous item blocks, and
-    the access pattern is sequential within each run (cache-friendly).
-    """
+    ``starts[i]`` for each run -> one flat float64 array in run order:
+    one unaligned 8-byte gather, sequential within each run."""
     total = int(counts.sum())
     if total == 0:
         return np.zeros(0, dtype=np.float64)
     seg = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-    rank = segment_ranks(seg)
-    base = np.repeat(starts, counts) + 8 * rank
-    idx = (base[:, None] + np.arange(8, dtype=np.int64)[None, :]).ravel()
-    raw = np.ascontiguousarray(data[idx])
-    return raw.view("<f8")
+    base = np.repeat(starts, counts) + 8 * segment_ranks(seg)
+    return le_words(data, 8)[base].view("<f8")
 
 
 def gather_uniform_rows(data: np.ndarray, starts: np.ndarray, row_len: int) -> np.ndarray:
     """Gather equal-length byte windows ``[starts[i], starts[i]+row_len)``
-    into an (n, row_len) uint8 matrix (one fancy-index gather)."""
-    return data[starts[:, None] + np.arange(row_len, dtype=np.int64)[None, :]]
+    into an (n, row_len) uint8 matrix: one row gather over a
+    sliding-window view, so no (n, row_len) int64 index matrix is built
+    (8x the bytes it fetches)."""
+    if len(starts) == 0 or row_len == 0:
+        return np.zeros((len(starts), row_len), dtype=data.dtype)
+    return np.lib.stride_tricks.sliding_window_view(data, row_len)[starts]
+
+
+def scatter_uniform_rows(data: np.ndarray, starts: np.ndarray, rows: np.ndarray) -> None:
+    """Write the rows of an (n, row_len) uint8 matrix into ``data`` at
+    byte windows ``[starts[i], starts[i]+row_len)``, which must not
+    overlap: the inverse of :func:`gather_uniform_rows`, in place."""
+    if len(starts) and rows.shape[1]:
+        np.lib.stride_tricks.sliding_window_view(data, rows.shape[1], writeable=True)[
+            starts
+        ] = rows
 
 
 def probe_headers(

@@ -30,8 +30,12 @@ Scale honesty: this path is gated on total input size
 already saturate the cluster through the normal JVM scan and fall back;
 the fast path exists precisely for the small-file / few-row-group regime
 where the JVM plan cannot reach the available parallelism. Detection is
-conservative — any plan feature beyond Project(attrs | cast(int->string))
-over a non-partitioned local parquet relation falls back to the JVM scan
+conservative — any plan feature beyond a Project of raw columns
+(strings, binary, integers, booleans, dates, doubles), cast(int ->
+string), and Spark's ``xxhash64`` of one string or binary column (plain,
+or null-safe as the hash-keyed sketches build it; hashed on the worker
+by ``kernel/xxhash64.py``, bit for bit) over a non-partitioned local
+parquet relation falls back to the JVM scan
 (same results either way; sketch merges are partitioning-independent),
 and so do footers the pyarrow read could decode differently: a codec
 pyarrow lacks in any row group, or Spark's legacy (hybrid Julian) date
@@ -57,6 +61,7 @@ _PASSTHROUGH_TYPES = {
     "byte": "int8",
     "boolean": "bool",
     "date": "date32[day]",
+    "double": "double",
 }
 # integral source types whose cast-to-string is engine-identical
 # (decimal ASCII rendering; float/decimal/timestamp rendering is NOT
@@ -89,6 +94,10 @@ class PyScanPlan:
     # output column name -> arrow type string mapInArrow expects
     arrow_types: dict[str, str]
     out_order: list[str] = field(default_factory=list)
+    # output column name -> keep NULL as NULL, for the columns that are
+    # Spark's xxhash64 of their parquet column, computed on the worker
+    # (False: a NULL hashes to the seed, as plain xxhash64 does)
+    xxhash: dict[str, bool] = field(default_factory=dict)
 
 
 def _strip_file_uri(uri: str) -> str | None:
@@ -109,10 +118,56 @@ def _max_input_bytes(spark) -> int:
     return spark.sparkContext.defaultParallelism * (128 << 20)
 
 
+def _xxhash64_attr(e):
+    """The attribute of ``xxhash64(attr)`` over exactly one string (the
+    default UTF-8 binary collation) or binary attribute with Spark's
+    seed, else None — the shapes ``kernel/xxhash64.py`` reproduces."""
+    from pfutil_spark.kernel.xxhash64 import SPARK_SEED
+
+    if e.getClass().getSimpleName() != "XxHash64" or int(e.seed()) != SPARK_SEED:
+        return None
+    if e.children().size() != 1:
+        return None
+    a = e.children().apply(0)
+    if a.getClass().getSimpleName() != "AttributeReference":
+        return None
+    if a.dataType().sql() not in ("STRING", "BINARY"):
+        return None
+    return a
+
+
+def _null_safe_xxhash64_attr(e):
+    """The attribute of ``CASE WHEN isnotnull(a) THEN xxhash64(a) END``
+    (``sketch_agg._null_safe_hash``) with ``xxhash64(a)`` as in
+    :func:`_xxhash64_attr`, else None."""
+    if e.getClass().getSimpleName() != "CaseWhen" or e.elseValue().isDefined():
+        return None
+    if e.branches().size() != 1:
+        return None
+    branch = e.branches().apply(0)
+    cond, a = branch._1(), _xxhash64_attr(branch._2())
+    if a is None or cond.getClass().getSimpleName() != "IsNotNull":
+        return None
+    return a if cond.child().semanticEquals(a) else None
+
+
 def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | None:
     """Return a :class:`PyScanPlan` when ``pruned``'s optimized plan is
-    exactly ``Project(attr | alias(attr) | alias(cast(intattr as string)))``
-    over one non-partitioned local parquet relation, else ``None``.
+    exactly a ``Project`` over one non-partitioned local parquet relation
+    whose every output is one of
+
+    * ``attr`` or ``alias(attr)`` of a passthrough type (strings, binary,
+      integers, booleans, dates and doubles, as raw values);
+    * ``alias(cast(intattr as string))``;
+    * ``alias(xxhash64(attr))`` over one string or binary attribute with
+      Spark's seed 42 (a NULL hashes to the seed), hashed on the worker
+      by ``kernel/xxhash64.py``;
+    * ``alias(CASE WHEN isnotnull(attr) THEN xxhash64(attr) END)``, the
+      null-safe hash of ``sketch_agg``'s hash-keyed sketches (NULL stays
+      NULL);
+
+    else ``None``. Any other expression, argument count, argument type
+    or seed falls back to the JVM scan.
 
     Everything here is driver-side plan/footer metadata work; no job runs.
     """
@@ -125,6 +180,7 @@ def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | N
         plan = pruned._jdf.queryExecution().optimizedPlan()
         cls = plan.getClass().getSimpleName()
         columns: dict[str, tuple[str, bool]] = {}
+        xxhash: dict[str, bool] = {}
         if cls == "Project":
             exprs = plan.projectList()
             for i in range(exprs.size()):
@@ -146,6 +202,13 @@ def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | N
                         if gc.dataType().typeName() not in _CASTABLE_TYPES:
                             return None
                         columns[ne.name()] = (gc.name(), True)
+                    elif ccls in ("XxHash64", "CaseWhen"):
+                        null_safe = ccls == "CaseWhen"
+                        a = (_null_safe_xxhash64_attr if null_safe else _xxhash64_attr)(ch)
+                        if a is None:
+                            return None
+                        columns[ne.name()] = (a.name(), False)
+                        xxhash[ne.name()] = null_safe
                     else:
                         return None
                 else:
@@ -245,6 +308,7 @@ def try_parquet_pyscan(pruned: DataFrame, out_cols: list[str]) -> PyScanPlan | N
         columns=columns,
         arrow_types=arrow_types,
         out_order=list(out_cols),
+        xxhash=xxhash,
     )
 
 
@@ -293,6 +357,9 @@ def read_spec_batches(plan: PyScanPlan, id_batches) -> Iterator:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from pfutil_spark.kernel.xxhash64 import xxhash64_flat
+    from pfutil_spark.operators.hll_agg import _varbin_buffers
+
     ids: list[int] = []
     for b in id_batches:
         ids.extend(b.column("id").to_pylist())
@@ -311,6 +378,16 @@ def read_spec_batches(plan: PyScanPlan, id_batches) -> Iterator:
             for name in plan.out_order:
                 src, cast = plan.columns[name]
                 arr = tbl.column(src).combine_chunks()
+                if name in plan.xxhash:
+                    valid = (
+                        arr.is_valid().to_numpy(zero_copy_only=False)
+                        if arr.null_count
+                        else None
+                    )
+                    h = xxhash64_flat(*_varbin_buffers(arr), valid)
+                    keep_null = plan.xxhash[name] and valid is not None
+                    arrays.append(pa.array(h, mask=~valid if keep_null else None))
+                    continue
                 want = pa.type_for_alias(plan.arrow_types[name])
                 if cast or not arr.type.equals(want):
                     arr = pc.cast(arr, want)

@@ -17,9 +17,13 @@ one merge body of every family: a spec supplies its two flat hooks
 (``valid_flat``, the pass-through gate, and ``merge_groups``), as the
 HLL kernel does.
 
-Transfer-frugal by design: hash-keyed sketches (CMS, Bloom) consume a
-JVM-side ``xxhash64(col)`` (8 bytes/row over Arrow, computed in codegen);
-value sketches (KLL, t-digest) consume the raw double column.
+Transfer-frugal by design: hash-keyed sketches (CMS, Bloom, KMV)
+consume Spark's ``xxhash64(col)`` (8 bytes/row), value sketches (KLL,
+t-digest) the raw double column. Over a small local parquet input stage
+P reads the columns on the Python workers (``operators/pyscan.py``) and
+computes the same ``xxhash64`` there (``kernel/xxhash64.py``, bit for
+bit); otherwise the JVM scan computes it in codegen and sends it over
+Arrow.
 """
 
 from __future__ import annotations
@@ -409,7 +413,11 @@ def sketch_multi_partial(
 ) -> DataFrame:
     """Stage P of :func:`sketch_multi`: one row per (partition, group)
     with one binary column PER METRIC — checkpointable; merge later (in
-    any order/partitioning) with :func:`sketch_multi_merge`."""
+    any order/partitioning) with :func:`sketch_multi_merge`. When the
+    projection is one ``pyscan`` can read (raw key / double columns,
+    ``xxhash64`` of a string or binary column, plain or null-safe), the
+    Python workers read the parquet themselves; else the JVM scan feeds
+    the same body."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -575,6 +583,18 @@ def sketch_multi_partial(
         if acc:
             yield flush()
 
+    # python-native parquet fast path (operators/pyscan.py): the workers
+    # read the parquet columns (and xxhash64 the hashed elements)
+    # themselves and feed the same body, as multi._partial_multi does
+    from pfutil_spark.operators import pyscan
+
+    ps = pyscan.try_parquet_pyscan(pruned, pruned.columns)
+    if ps is not None:
+
+        def pyscan_fn(id_batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+            yield from partial_fn(pyscan.read_spec_batches(ps, id_batches))
+
+        return pyscan.task_frame(df.sparkSession, ps).mapInArrow(pyscan_fn, schema)
     return pruned.mapInArrow(partial_fn, schema)
 
 
@@ -717,7 +737,7 @@ def cms_sketch(
     df: DataFrame, col: str, by: Sequence[str] = (),
     depth: int = cms.DEFAULT_DEPTH, width: int = cms.DEFAULT_WIDTH,
 ) -> DataFrame:
-    """Count-min over ``col`` (any type — hashed JVM-side via xxhash64)."""
+    """Count-min over ``col`` (any type — hashed with Spark's xxhash64)."""
     return sketch_agg(df, _null_safe_hash(col), cms_spec(depth, width), by)
 
 
@@ -836,7 +856,7 @@ def spacesaving_weighted_sketch(
 def kmv_sketch(
     df: DataFrame, col: str, by: Sequence[str] = (), k: int = kmv.DEFAULT_K
 ) -> DataFrame:
-    """KMV/theta distinct sketch over ``col`` (hashed JVM-side via
+    """KMV/theta distinct sketch over ``col`` (hashed with Spark's
     xxhash64). Use when you need set OPERATIONS on the results —
     intersection / difference / Jaccard with error relative to the
     sample, not the union (HLL's inclusion-exclusion weakness)."""

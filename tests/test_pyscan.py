@@ -281,7 +281,7 @@ def test_pyscan_merged_bytes_match_jvm_for_any_task_count(spark, tmp_path):
 
 def _benchmark_shaped_corpus(d: str, files: int = 4, rows_per_file: int = 75_000) -> None:
     """The north report's input shape: 300k source-file rows in 4 parquet
-    files of one row group each."""
+    files of one row group each (plus the profile report's ``size``)."""
     langs = ["JavaScript", "Python", "Java", "C", "Go"]
     os.makedirs(d)
     for f in range(files):
@@ -294,6 +294,7 @@ def _benchmark_shaped_corpus(d: str, files: int = 4, rows_per_file: int = 75_000
                     "path": pa.array([f"src/{i // 10}.x" for i in ids]),
                     "commit": pa.array([f"{i * 2654435761 % 2**40:010x}" for i in ids]),
                     "content_sha": pa.array([f"{i // 5:064x}" for i in ids]),
+                    "size": pa.array([float(i * 7919 % 100_003) for i in ids]),
                 }
             ),
             f"{d}/part-{f:05d}.parquet",
@@ -397,3 +398,196 @@ def test_pyscan_malformed_conf_falls_back(spark, key):
     got = _rows(pf_count_distinct(li, "ok", by=()))
     _with_pyscan(spark, False)
     assert _rows(pf_count_distinct(_li(spark), "ok", by=())) == got
+
+
+# ---------------------------------------------------------------------------
+# the extension sketches: worker-side xxhash64 and double passthrough
+# ---------------------------------------------------------------------------
+
+
+def _profile_metrics():
+    """The benchmark's sketch_profile report."""
+    from pfutil_spark.operators import sketch_agg as sa
+
+    return {
+        "kll": (F.col("size"), sa.kll_spec()),
+        "tdigest": (F.col("size"), sa.tdigest_spec()),
+        "cms": (F.xxhash64(F.col("path")), sa.cms_spec()),
+        "kmv": (F.xxhash64(F.col("content_sha")), sa.kmv_spec()),
+    }
+
+
+def test_profile_stage_p_runs_one_wave(spark, tmp_path):
+    """sketch_multi's stage P reads the parquet itself: over 4 row
+    groups of 75k rows on targetTasks=3 it plans 3 tasks, where the JVM
+    scan planned one per row group; the exact sketches' (CMS, KMV) merged
+    bytes equal the JVM scan's."""
+    from pfutil_spark.operators.sketch_agg import sketch_multi
+    from tests._spark_counts import spark_counts
+
+    d = str(tmp_path / "corpus")
+    _benchmark_shaped_corpus(d)
+    spark.conf.set("pfutil.pyscan.targetTasks", "3")
+    df = spark.read.parquet(d)
+
+    def report():
+        return _rows(
+            sketch_multi(df, _profile_metrics(), ["lang"]).select("lang", "cms", "kmv")
+        )
+
+    with spark_counts(spark) as c:
+        got = report()
+    assert c.stage_tasks[min(c.stage_tasks)] == 3
+    _with_pyscan(spark, False)
+    assert report() == got
+
+
+def _hashed_corpus(tmp_path) -> str:
+    """Strings of every length class (NULLs, empty, non-ASCII, past the
+    32-byte stripe) and binary, over 4 row groups."""
+    p = str(tmp_path / "hashed.parquet")
+    n = 30_000
+    words = ["", "a", "é", "src/main/java/Foo.java", "😀" * 9, "x" * 33, None]
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([f"g{i % 7}" for i in range(n)]),
+                "s": pa.array(
+                    [None if i % 11 == 0 else f"{words[i % 7] or ''}{i % 4000}"
+                     for i in range(n)]
+                ),
+                "b": pa.array([f"{i % 3000:x}".encode() for i in range(n)]),
+                "v": pa.array(range(n), type=pa.int64()),
+            }
+        ),
+        p,
+        row_group_size=7_500,
+    )
+    return p
+
+
+def test_pyscan_hashed_sketch_bytes_match_jvm_for_any_task_count(spark, tmp_path):
+    """CMS, KMV and Bloom over plain and null-safe xxhash64 columns:
+    merged bytes equal the JVM scan's for every task count."""
+    from pfutil_spark.operators import sketch_agg as sa
+
+    df = spark.read.parquet(_hashed_corpus(tmp_path))
+
+    def sketches():
+        multi = sa.sketch_multi(
+            df,
+            {
+                "cms": (F.xxhash64("s"), sa.cms_spec()),
+                "kmv": (F.xxhash64("b"), sa.kmv_spec()),
+            },
+            ["k"],
+        )
+        return [
+            _rows(multi),
+            _rows(sa.cms_sketch(df, "s", by=["k"])),
+            _rows(sa.kmv_sketch(df, "s", by=["k"])),
+            _rows(sa.bloom_sketch(df, "s", by=["k"], expected_n=5000)),
+        ]
+
+    pruned = df.select("k", F.when(F.col("s").isNotNull(), F.xxhash64("s")).alias("h"))
+    _with_pyscan(spark, False)
+    jvm = sketches()
+    _with_pyscan(spark, True)
+    plan = pyscan.try_parquet_pyscan(pruned, ["k", "h"])
+    assert plan is not None and plan.xxhash == {"h": True}
+    spark.conf.set("pfutil.pyscan.minRowsPerTask", "1000")
+    for target in range(1, 6):
+        spark.conf.set("pfutil.pyscan.targetTasks", str(target))
+        assert sketches() == jvm, target
+
+
+def test_pyscan_null_safe_hash_keeps_nulls(spark, tmp_path):
+    """Worker-side hashing: plain xxhash64 turns NULL into the seed (42),
+    the null-safe shape keeps it NULL, as the JVM projection does."""
+    df = spark.read.parquet(_hashed_corpus(tmp_path))
+    pruned = df.select(
+        F.xxhash64("s").alias("h"),
+        F.when(F.col("s").isNotNull(), F.xxhash64("s")).alias("hn"),
+    )
+    _with_pyscan(spark, True)
+    plan = pyscan.try_parquet_pyscan(pruned, ["h", "hn"])
+    assert plan is not None and plan.xxhash == {"h": False, "hn": True}
+    assert plan.arrow_types == {"h": "int64", "hn": "int64"}
+    first, end = plan.tasks[0]
+    batch = next(pyscan.read_spec_batches(plan, [pa.record_batch([pa.array([0])], ["id"])]))
+    length = plan.specs[first][3]
+    want = pruned.limit(length).collect()
+    assert batch.column("h").to_pylist() == [r["h"] for r in want]
+    assert batch.column("hn").to_pylist() == [r["hn"] for r in want]
+    assert batch.column("hn").null_count == sum(r["hn"] is None for r in want) > 0
+
+
+def test_pyscan_double_passthrough_matches_jvm(spark, tmp_path):
+    """Doubles pass through as raw values — NaN, -0.0 and NULL included —
+    so KLL and t-digest estimates equal the JVM scan's."""
+    from pfutil_spark.operators import sketch_agg as sa
+
+    p = str(tmp_path / "doubles.parquet")
+    vals = [float("nan"), -0.0, 0.0, None, 1.5, -2.25, float("inf"), 1e300, None]
+    # under KLL's k and t-digest's delta per group, so both sketches stay
+    # exact and their estimates cannot depend on the task split
+    n = 150
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([f"g{i % 3}" for i in range(n)]),
+                "x": pa.array(
+                    [vals[i % len(vals)] if i % 5 else i * 0.5 for i in range(n)],
+                    type=pa.float64(),
+                ),
+            }
+        ),
+        p,
+        row_group_size=20,
+    )
+    df = spark.read.parquet(p)
+    assert pyscan.try_parquet_pyscan(df.select("k", "x"), ["k", "x"]) is not None
+    qs = [0.0, 0.1, 0.5, 0.9, 1.0]
+
+    def estimates():
+        merged = sa.sketch_multi(
+            df, {"kll": (F.col("x"), sa.kll_spec()), "td": (F.col("x"), sa.tdigest_spec())},
+            ["k"],
+        )
+        rows = merged.select(
+            "k", sa.kll_quantiles_col(qs, "kll"), sa.tdigest_quantiles_col(qs, "td")
+        ).collect()
+        return sorted(repr(tuple(r)) for r in rows)
+
+    _with_pyscan(spark, False)
+    jvm = estimates()
+    _with_pyscan(spark, True)
+    spark.conf.set("pfutil.pyscan.minRowsPerTask", "1")
+    spark.conf.set("pfutil.pyscan.targetTasks", "3")
+    assert estimates() == jvm
+
+
+def test_pyscan_falls_back_on_unsupported_hashes(spark, tmp_path):
+    df = spark.read.parquet(_hashed_corpus(tmp_path))
+    s, v = F.col("s"), F.col("v")
+    declined = {
+        "two arguments": F.xxhash64("s", "b"),
+        "long argument": F.xxhash64("v"),
+        "computed argument": F.xxhash64(F.upper(s)),
+        "other attribute in the guard": F.when(v.isNotNull(), F.xxhash64(s)),
+        "isnull guard": F.when(s.isNull(), F.xxhash64(s)),
+        "else branch": F.when(s.isNotNull(), F.xxhash64(s)).otherwise(F.lit(7)),
+        "two branches": F.when(s.isNotNull(), F.xxhash64(s)).when(v > 3, F.lit(1)),
+        "hash of a hash": F.when(s.isNotNull(), F.xxhash64(F.xxhash64(s))),
+    }
+    for why, expr in declined.items():
+        pruned = df.select("k", expr.alias("h"))
+        assert pyscan.try_parquet_pyscan(pruned, ["k", "h"]) is None, why
+    # a seed other than 42 (SQL only exposes the default; build it in
+    # Catalyst directly)
+    jvm = spark._jvm
+    cat = jvm.org.apache.spark.sql.catalyst.expressions
+    attr = df.select("s")._jdf.queryExecution().analyzed().output().apply(0)
+    args = jvm.scala.jdk.javaapi.CollectionConverters.asScala([attr]).toSeq()
+    assert pyscan._xxhash64_attr(cat.XxHash64(args, 42)) is not None
+    assert pyscan._xxhash64_attr(cat.XxHash64(args, 7)) is None

@@ -381,6 +381,50 @@ class TestReviewFindings:
         assert np.array_equal(merged, half)  # pos+neg cancelled
 
 
+class TestCmsMergeBodies:
+    """cms.merge_groups_flat has a dense-matrix body and a sparse-items
+    body; each must emit the bytes of per-group decode / merge / encode
+    on every input shape, whichever the size rule would pick."""
+
+    D, W = 3, 64
+
+    def _states(self):
+        rng = np.random.default_rng(21)
+        states = []
+        for n in (0, 1, 3, 40, 500, 0, 2000, 7):  # v2 and v1 partials
+            st = cms.empty(self.D, self.W)
+            cms.update(st, rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64))
+            states.append(st)
+        return states
+
+    def _inputs(self):
+        s = self._states()
+        neg = cms.empty(self.D, self.W)
+        cms.update(neg, np.array([5, 7], dtype=np.int64))
+        mixed = [[s[2], s[4]], [s[6]], [s[3], s[6], s[1]], [s[4], s[4]], [s[7]]]
+        empty = [[s[0]], [s[0], s[5]], [s[5]]]
+        cancel = [[neg, -neg], [s[6], -s[6], s[2]], [neg, s[4]]]
+        return {"mixed v1/v2": mixed, "all empty": empty, "cancel to zero": cancel}
+
+    @pytest.mark.parametrize("body", ["matrix", "sparse"])
+    def test_bytes_match_per_group_merge(self, monkeypatch, body):
+        if body == "matrix":
+            monkeypatch.setattr(cms, "_MATRIX_MAX_FILL", 1 << 40)
+        else:
+            monkeypatch.setattr(cms, "_MATRIX_BUDGET", 0)
+        for name, groups in self._inputs().items():
+            bufs = [cms.encode(st) for grp in groups for st in grp]
+            codes = np.repeat(np.arange(len(groups)), [len(g) for g in groups])
+            data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+            offs = np.concatenate(([0], np.cumsum([len(b) for b in bufs])))
+            md, mo = cms.merge_groups_flat(data, offs, codes, len(groups), self.D, self.W)
+            want = [cms.encode(cms.merge(grp)) for grp in groups]
+            got = [bytes(md[mo[g] : mo[g + 1]]) for g in range(len(groups))]
+            assert got == want, name
+            if name == "mixed v1/v2":
+                assert {b[4] for b in bufs} == {1, 2}  # wire versions
+
+
 class TestNoPerGroupPython:
     """Structural gate: for vectorized specs, merge_sketch_batch must
     never call the scalar kernel entry points — passthrough singles and
