@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .sketch_common import read_le_flat, segment_ranks, to_u64, write_le_flat
+from .sketch_common import read_le_flat, segment_ranks, to_u64
 
 MAGIC = b"KMVS"
 DEFAULT_K = 2048
@@ -129,35 +129,76 @@ def merge_all(sketches: list[KmvSketch]) -> KmvSketch:
 # wire format is a direct dump of that state.
 # ---------------------------------------------------------------------------
 
-def _fold_pairs(
-    g: np.ndarray, h: np.ndarray, n_groups: int, k: int
+_HEAD0 = int.from_bytes(MAGIC, "little") | (1 << 32)  # magic + version 1
+
+
+def _fold_grouped(
+    cnt: np.ndarray, h: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(group, hash) pairs -> encoded per-group k-min-distinct sketches.
-    Returns ``(data, offsets)`` flat wire buffers (Arrow-binary-ready)."""
-    order = np.lexsort((h, g))
-    gs, hs = g[order], h[order]
-    if len(gs):
-        keep = np.empty(len(gs), dtype=bool)
-        keep[0] = True
-        keep[1:] = (gs[1:] != gs[:-1]) | (hs[1:] != hs[:-1])
-        gs, hs = gs[keep], hs[keep]
-        sel = segment_ranks(gs) < k
-        gs, hs = gs[sel], hs[sel]
-    counts = np.bincount(gs, minlength=n_groups).astype(np.int64)
+    """Hashes laid out group by group (``cnt[i]`` of group i, in group
+    order; ``h`` is sorted in place, so it must be the caller's own
+    copy) -> encoded per-group k-min-distinct sketches. Returns
+    ``(data, offsets)`` flat wire buffers (Arrow-binary-ready).
+
+    Each group's hashes are sorted as one row of a matrix: a group's
+    row width is its count rounded up to an eighth of the count's top
+    bit, groups of one width share a matrix, and one row-wise
+    ``np.sort`` per width sorts them all (padding costs at most 1/8 of
+    the entries; a merge of equal full partials needs none, so its
+    matrix is a view of ``h``). Sorting values this way is several
+    times faster than a ``lexsort`` of (group, hash)."""
+    n_groups = len(cnt)
+    top = np.zeros(n_groups, dtype=np.int64)
+    live = cnt > 0
+    top[live] = np.log2(cnt[live]).astype(np.int64)
+    gran = 1 << np.maximum(top - 3, 0)
+    width = -(-cnt // gran) * gran
+    widths, cls = np.unique(width, return_inverse=True)
+    if len(widths) > 1:  # lay the hashes out width by width
+        h = h[np.argsort(np.repeat(cls, cnt), kind="stable")]
+    by_cls = np.argsort(cls, kind="stable")
+    bounds = np.searchsorted(cls[by_cls], np.arange(len(widths) + 1))
+    out_cnt = np.zeros(n_groups, dtype=np.int64)
+    pieces = []
+    pos = 0
+    for c, w in enumerate(widths.tolist()):
+        gids = by_cls[bounds[c] : bounds[c + 1]]
+        n = cnt[gids]
+        vals = h[pos : pos + int(n.sum())]
+        pos += len(vals)
+        if w == 0:
+            continue
+        if (n == w).all():
+            m = vals.reshape(len(gids), w)
+            keep = np.ones(m.shape, dtype=bool)
+        else:
+            m = np.full((len(gids), w), _FULL, dtype=np.uint64)
+            keep = np.arange(w) < n[:, None]
+            m[keep] = vals
+        m.sort(axis=1)  # the padding (the max value) sorts after every hash
+        keep[:, 1:] &= m[:, 1:] != m[:, :-1]
+        nd = keep.sum(axis=1)
+        over = nd > k
+        if over.any():  # keep each row's k smallest: cut at its k-th
+            # a row's k-th distinct hash sits at most its duplicate count
+            # past column k - 1
+            cap = min(w, k + int((n - nd)[over].max()))
+            rank_t = np.int16 if cap <= np.iinfo(np.int16).max else np.int64
+            col = np.argmax(np.cumsum(keep[:, :cap], axis=1, dtype=rank_t) == k, axis=1)
+            kth = np.where(over, m[np.arange(len(gids)), col], _FULL)
+            keep &= m <= kth[:, None]
+        out_cnt[gids] = np.minimum(nd, k)
+        pieces.append((gids, m[keep]))  # row-major: group, then ascending
     offsets = np.zeros(n_groups + 1, dtype=np.int64)
-    np.cumsum(16 + 8 * counts, out=offsets[1:])
-    data = np.zeros(int(offsets[-1]), dtype=np.uint8)
-    hp = offsets[:-1]
-    for i, byte in enumerate(MAGIC):
-        data[hp + i] = byte
-    ones = np.ones(n_groups, dtype=np.int64)
-    write_le_flat(data, hp + 4, ones, 4)         # version
-    write_le_flat(data, hp + 8, ones * k, 4)     # k
-    write_le_flat(data, hp + 12, counts, 4)      # n entries
-    if len(gs):
-        pos = offsets[gs] + 16 + 8 * segment_ranks(gs)
-        write_le_flat(data, pos, hs, 8)          # sorted ascending per group
-    return data, offsets
+    np.cumsum(16 + 8 * out_cnt, out=offsets[1:])
+    words = np.empty(int(offsets[-1]) // 8, dtype="<u8")
+    hw = offsets[:-1] // 8
+    words[hw] = _HEAD0
+    words[hw + 1] = k | (out_cnt << 32)  # k, n entries
+    for gids, vals in pieces:
+        first = np.repeat(hw[gids] + 2, out_cnt[gids])
+        words[first + segment_ranks(first)] = vals
+    return words.view(np.uint8), offsets
 
 
 def fold_groups_hashes(
@@ -166,18 +207,22 @@ def fold_groups_hashes(
     """Grouped KMV fold: rows ``(inverse[i], hashes[i])`` -> one encoded
     sketch per group code 0..n_groups-1, byte-identical to per-group
     ``KmvSketch.update + encode`` in any order/partitioning."""
-    return _fold_pairs(
-        np.asarray(inverse, dtype=np.int64), to_u64(np.asarray(hashes)), n_groups, k
-    )
+    g = np.asarray(inverse, dtype=np.int64)
+    # a stable radix sort when the codes fit int16
+    key = g.astype(np.int16) if n_groups <= np.iinfo(np.int16).max else g
+    h = to_u64(np.asarray(hashes))[np.argsort(key, kind="stable")]
+    return _fold_grouped(np.bincount(g, minlength=n_groups), h, k)
 
 
 def entries_flat(
     data: np.ndarray, offsets: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Validated flat parse of many wire buffers -> ``(seg_ids, entries)``
-    (uint64, ascending within each segment). Raises like :func:`decode`
-    on any structurally invalid buffer; also enforces the uniform ``k``
-    the grouped merge requires (mirrors ``KmvSketch.merge``)."""
+    """Validated flat parse of many wire buffers -> ``(counts, entries)``:
+    each buffer's entry count, and every buffer's entries (uint64,
+    ascending within a buffer) in buffer order. Raises like
+    :func:`decode` on any structurally invalid buffer; also enforces the
+    uniform ``k`` the grouped merge requires (mirrors
+    ``KmvSketch.merge``)."""
     n = len(offsets) - 1
     lens = np.diff(offsets)
     if (lens < 16).any():
@@ -197,13 +242,20 @@ def entries_flat(
     nn = read_le_flat(data, hp + 12, 4).astype(np.int64)
     if (lens != 16 + 8 * nn).any() or (nn > kk).any():
         raise ValueError("Invalid KMV representation")
-    seg = np.repeat(np.arange(n, dtype=np.int64), nn)
-    ent = read_le_flat(data, offsets[seg] + 16 + 8 * segment_ranks(seg), 8)
-    if len(ent) > 1:
-        bad = (seg[1:] == seg[:-1]) & (ent[1:] <= ent[:-1])
-        if bad.any():
-            raise ValueError("Invalid KMV representation")  # not sorted distinct
-    return seg, ent
+    # every buffer is 16 + 8n bytes, so from offsets[0] on the span is
+    # little-endian words: two header words, then the buffer's entries
+    words = data[offsets[0] : offsets[-1]].view("<u8")
+    head = np.zeros(len(words), dtype=bool)
+    hw = (hp - offsets[0]) // 8
+    head[hw] = head[hw + 1] = True
+    ent = words[~head].astype(np.uint64, copy=False)
+    # entries must rise strictly within a buffer: every fall must be
+    # where a buffer starts
+    starts = (np.cumsum(nn) - nn)[nn > 0][1:]
+    falls = np.count_nonzero(ent[1:] <= ent[:-1])
+    if falls != np.count_nonzero(ent[starts] <= ent[starts - 1]):
+        raise ValueError("Invalid KMV representation")  # not sorted distinct
+    return nn, ent
 
 
 def merge_groups_flat(
@@ -216,9 +268,17 @@ def merge_groups_flat(
     """Grouped KMV merge: wire buffers labeled by ``group_codes`` fold to
     one sketch per group — byte-identical to ``merge_all`` over each
     group's decodes, in one vectorized pass."""
-    seg, ent = entries_flat(data, offsets, k)
-    g = np.asarray(group_codes, dtype=np.int64)[seg]
-    return _fold_pairs(g, ent, n_groups, k)
+    nn, ent = entries_flat(data, offsets, k)
+    codes = np.asarray(group_codes, dtype=np.int64)
+    if len(codes) > 1 and bool((codes[1:] < codes[:-1]).any()):
+        # lay the buffers out group by group (a merge task's are already)
+        order = np.argsort(codes, kind="stable")
+        starts = np.cumsum(nn) - nn
+        nn_o = nn[order]
+        ent = ent[np.repeat(starts[order] - (np.cumsum(nn_o) - nn_o), nn_o)
+                  + np.arange(len(ent))]
+    cnt = np.bincount(codes, weights=nn, minlength=n_groups).astype(np.int64)
+    return _fold_grouped(cnt, ent, k)
 
 
 def valid_flat(data: np.ndarray, offsets: np.ndarray, k: int) -> np.ndarray:

@@ -178,16 +178,28 @@ def _arrow_merge_stage(
     cols: list[str],
     schema: StructType,
     merge_partition,
+    partitions: int | None = None,
 ) -> DataFrame:
     """The merge stage of every sketch family: hash-repartition
     ``(keys..., cols...)`` on ``keys`` — the only Exchange, with no
-    per-partition Sort (unlike applyInPandas) and a partition count AQE
-    chooses (explicit counts measured within noise of its choice,
-    NOTES.md) — then combine each partition's Arrow batches into one
-    and yield ``merge_partition(batch)``. Sketch bytes cross Arrow with int32
-    offsets, so a partition over 2GB raises with the fix."""
+    per-partition Sort (unlike applyInPandas) — then combine each
+    partition's Arrow batches into one and yield
+    ``merge_partition(batch)``.
+
+    The partition count is AQE's (``REPARTITION_BY_COL``, coalesced by
+    compressed shuffle bytes) unless the caller passes ``partitions``:
+    ``StreamingHllState.update`` sizes its merge on the driver from the
+    state's bytes on disk and the batch's estimated size
+    (``streaming.hll_stream.merge_partitions``), so stage M runs that
+    many tasks. Sketch bytes cross Arrow with int32 offsets, so a
+    partition over 2GB raises with the fix."""
     pruned = df.select(*keys, *cols)
-    target = pruned.repartition(*[F.col(c) for c in keys]) if keys else pruned.repartition(1)
+    if not keys:
+        target = pruned.repartition(1)
+    elif partitions is None:
+        target = pruned.repartition(*[F.col(c) for c in keys])
+    else:
+        target = pruned.repartition(partitions, *[F.col(c) for c in keys])
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -200,7 +212,9 @@ def _arrow_merge_stage(
         except pa.lib.ArrowInvalid as e:  # int32 binary-offset overflow
             raise ValueError(
                 "merge partition exceeds 2GB of sketch bytes; raise "
-                "spark.sql.shuffle.partitions"
+                "spark.sql.shuffle.partitions (the cap on merge partitions) "
+                "or lower spark.sql.adaptive.advisoryPartitionSizeInBytes "
+                "(the bytes one merge partition is sized for)"
             ) from e
         yield merge_partition(batch)
 
@@ -277,10 +291,12 @@ def _merge_stage(
     sketch_col: str,
     count_version: int | None = None,
     estimate_col: str = "estimate",
+    partitions: int | None = None,
 ) -> DataFrame:
-    """The HLL merge stage (:func:`_arrow_merge_stage`): every partition
-    merges in one :func:`merge_record_batch` pass — canonical singles
-    pass through, the rest go through ``hll.merge_groups_flat``.
+    """The HLL merge stage (:func:`_arrow_merge_stage`, which
+    ``partitions`` is passed to): every partition merges in one
+    :func:`merge_record_batch` pass — canonical singles pass through,
+    the rest go through ``hll.merge_groups_flat``.
 
     ``count_version`` FUSES the PFCOUNT estimate into the same Python
     stage and emits (keys..., estimate) instead of the sketch — a
@@ -310,7 +326,9 @@ def _merge_stage(
         arrays.append(pa.array(est, type=pa.int64()))
         return pa.record_batch(arrays, names=keys + [estimate_col])
 
-    return _arrow_merge_stage(df, keys, [sketch_col], StructType(out_fields), merge_partition)
+    return _arrow_merge_stage(
+        df, keys, [sketch_col], StructType(out_fields), merge_partition, partitions
+    )
 
 
 def _salted_premerge(

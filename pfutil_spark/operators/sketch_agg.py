@@ -941,17 +941,32 @@ def spacesaving_topk_col(k: int, sketch_col: str = SKETCH_COL) -> Column:
 # ---------------------------------------------------------------------------
 
 def _hash_literals(df: DataFrame, items: Sequence) -> np.ndarray:
-    """xxhash64 of literal items, computed BY SPARK so it matches the
-    build-side hashing exactly. Over a one-row local relation the
-    optimizer folds the projection into a ``LocalTableScan``, so the
-    collect runs no Spark job."""
+    """Spark's ``xxhash64`` of literal items, as the build side hashed
+    them. ``str`` (its UTF-8 bytes), ``bytes`` and ``None`` (the seed)
+    are hashed by ``kernel/xxhash64.py``, which is bit-exact with Spark;
+    other literal types (numbers, booleans, dates, ...) are hashed BY
+    SPARK over a one-row local relation, which the optimizer folds into
+    a ``LocalTableScan``, so the collect runs no Spark job."""
     import pyarrow as pa
 
-    spark = df.sparkSession
-    rows = spark.createDataFrame(pa.table({"_": [0]})).select(
-        *[F.xxhash64(F.lit(it)).alias(f"h{i}") for i, it in enumerate(items)]
-    ).collect()[0]
-    return np.array([rows[f"h{i}"] for i in range(len(items))], dtype=np.int64)
+    from pfutil_spark.kernel.sketch_common import flat_buffers
+    from pfutil_spark.kernel.xxhash64 import SPARK_SEED, xxhash64_flat
+
+    out = np.full(len(items), SPARK_SEED, dtype=np.int64)  # None hashes to the seed
+    raw = {
+        i: it.encode("utf-8") if isinstance(it, str) else bytes(it)
+        for i, it in enumerate(items)
+        if isinstance(it, (str, bytes, bytearray))
+    }
+    if raw:
+        out[list(raw)] = xxhash64_flat(*flat_buffers(list(raw.values())))
+    rest = [i for i, it in enumerate(items) if it is not None and i not in raw]
+    if rest:
+        row = df.sparkSession.createDataFrame(pa.table({"_": [0]})).select(
+            *[F.xxhash64(F.lit(items[i])).alias(f"h{i}") for i in rest]
+        ).collect()[0]
+        out[rest] = [row[f"h{i}"] for i in rest]
+    return out
 
 
 def cms_count_for_hash_col(

@@ -3,8 +3,8 @@
 The mergeable-state contract makes streaming a corollary of the batch
 plan: each micro-batch reduces to per-group partial sketches (stage P,
 ``pf_partial``), which are unioned with the persisted sketch-state rows
-and folded by ONE merge (stage M, ``pf_merge``) into the next state
-generation via ``foreachBatch``. PFMERGE is a register-wise max —
+and folded by ONE merge (stage M, the body of ``pf_merge``) into the
+next state generation via ``foreachBatch``. PFMERGE is a register-wise max —
 associative, commutative and idempotent — so the raw partials need no
 merge of their own before meeting the state, and at-least-once batch
 delivery still yields exactly-correct sketches: a replayed micro-batch
@@ -14,13 +14,38 @@ even when the engine only guarantees at-least-once for the writes.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
-from pfutil_spark.operators.hll_agg import SKETCH_COL, pf_count_col, pf_merge, pf_partial
+from pfutil_spark.operators.hll_agg import SKETCH_COL, _merge_stage, pf_count_col, pf_partial
 from pfutil_spark.streaming._state import GenerationState
+
+
+def merge_partitions(
+    merge_bytes: int,
+    shuffle_partitions: int,
+    min_partitions: int,
+    advisory_bytes: int,
+    min_partition_bytes: int,
+) -> int:
+    """Tasks for a merge of ``merge_bytes`` bytes by AQE's
+    shuffle-coalescing rule: partitions of about ``advisory_bytes``, but
+    at least ``min_partitions`` of them while each keeps
+    ``min_partition_bytes``, and at most ``shuffle_partitions``.
+
+    AQE applies this rule to the compressed shuffle bytes once the
+    shuffle has run; applied to bytes known on the driver, it sizes the
+    exchange before the job, and it splits a merge that AQE would leave
+    to one Python task once it passes ``min_partition_bytes``."""
+    n = max(
+        1,
+        -(-merge_bytes // advisory_bytes),
+        min(min_partitions, -(-merge_bytes // min_partition_bytes)),
+    )
+    return min(shuffle_partitions, n)
 
 
 class StreamingHllState:
@@ -40,7 +65,13 @@ class StreamingHllState:
 
     * ``update()`` — stage P over the batch, union with the current
       generation, one Exchange, stage M, parquet write: 2 jobs, 3
-      stages.
+      stages. Stage M runs n tasks, where n is
+      :func:`merge_partitions` of the larger of the current
+      generation's bytes on disk and the batch's estimated size (AQE's
+      choice at the first commit; see ``_merge_partitions``), so each
+      generation is written as n parquet files and the next state scan,
+      and ``estimates()``, run n-wide. Stage P comes first in the union, so
+      its Python tasks start in the first wave.
     * ``current()`` — a parquet scan with the schema pinned from the
       manifest: no job (no schema-inference pass).
     * ``estimates()`` — that scan plus the PFCOUNT projection: 1 job.
@@ -113,6 +144,60 @@ class StreamingHllState:
             return None
         return self._read_gen(gen)
 
+    def _merge_partitions(self, gen: int, batch_df: DataFrame) -> int | None:
+        """Merge tasks for ``batch_df`` into generation ``gen``, on the
+        driver with no Spark job: :func:`merge_partitions` of the larger
+        of the generation's data files (the names Spark reads: not
+        starting with ``_`` or ``.``) and the optimizer's size estimate
+        of the batch columns stage P reads, with AQE's confs and its
+        minimum of partitions (``minPartitionNum``, else the default
+        parallelism, when ``parallelismFirst``; else 1).
+
+        The estimate counts the batch's input, typically several times
+        its partials (about 6x for the 20k-row batches of the
+        ``state_update`` benchmark), so summing it with the state
+        would oversize a merge that the state dominates; the larger of
+        the two sizes a merge from whichever side dominates it.
+
+        None, so AQE sizes the exchange from the real shuffle bytes,
+        before the first commit (a 400k-row base batch on a 4-core host:
+        2 tasks in 0.44 s where one took 0.53 s), when the batch's size
+        is unknown to the optimizer (its default size), and when AQE's
+        coalescing is off (the exchange keeps
+        ``spark.sql.shuffle.partitions``, as every other merge)."""
+        conf = self.spark.conf
+        sc = self.spark.sparkContext
+        to_bytes = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+        aqe = "spark.sql.adaptive."
+        if gen < 0 or not all(
+            conf.get(aqe + c).lower() == "true" for c in ("enabled", "coalescePartitions.enabled")
+        ):
+            return None
+        plan = batch_df.select(*self.by, self.element)._jdf.queryExecution().optimizedPlan()
+        batch_bytes = int(str(plan.stats().sizeInBytes()))
+        if batch_bytes >= to_bytes(conf.get("spark.sql.defaultSizeInBytes")):
+            return None
+        with os.scandir(self._gen_path(gen)) as files:
+            state_bytes = sum(
+                f.stat().st_size for f in files if not f.name.startswith(("_", "."))
+            )
+        coalesce = aqe + "coalescePartitions."
+        min_partitions = 1
+        if conf.get(coalesce + "parallelismFirst").lower() == "true":
+            min_partitions = int(
+                conf.get(coalesce + "minPartitionNum", None) or sc.defaultParallelism
+            )
+        return merge_partitions(
+            max(state_bytes, batch_bytes),
+            int(
+                conf.get(coalesce + "initialPartitionNum", None)
+                or conf.get("spark.sql.shuffle.partitions")
+            ),
+            min_partitions,
+            to_bytes(conf.get(aqe + "advisoryPartitionSizeInBytes")),
+            to_bytes(conf.get(coalesce + "minPartitionSize")),
+        )
+
     def update(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """Merge one (micro-)batch into the state: the batch's raw
         partials and the current generation's rows meet in ONE merge.
@@ -129,8 +214,9 @@ class StreamingHllState:
                     )
         rows = pf_partial(batch_df, self.element, self.by, self.version)
         if gen >= 0:
-            rows = self._read_gen(gen).unionByName(rows)
-        merged = pf_merge(rows, self.by)
+            rows = rows.unionByName(self._read_gen(gen))
+        n = self._merge_partitions(gen, batch_df)
+        merged = _merge_stage(rows, self.by, SKETCH_COL, partitions=n)
         merged.write.mode("overwrite").parquet(self._gen_path(gen + 1))
         manifest = None
         # a manifest without a marker is left from a crashed first commit

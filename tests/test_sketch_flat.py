@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pfutil_spark.kernel import bloom, cms, kll, kmv, spacesaving as ss, tdigest
+from pfutil_spark.kernel.sketch_common import flat_buffers
 from pfutil_spark.operators.sketch_agg import (
     SKETCH_COL,
     bloom_spec,
@@ -122,6 +123,36 @@ class TestKernelMergeParity:
                 for j in range(4)
             ]
             assert bytes(md[mo[g] : mo[g + 1]]) == enc(mrg(states))
+
+    def test_kmv_merge_shapes(self):
+        """The row-sort merge over its corner shapes: unsorted group
+        codes, groups of several widths, partials that share hashes,
+        truncation to k, the all-ones hash (the padding value) and
+        groups with no partial."""
+        rng = np.random.default_rng(11)
+        k = 16
+        pool = rng.integers(0, 2**63, 200, dtype=np.int64).astype(np.uint64)
+        pool[:3] = np.uint64(2**64 - 1), np.uint64(0), np.uint64(1)
+        bufs, codes = [], []
+        for _ in range(60):
+            g = int(rng.integers(0, 12))  # groups 12..13 get no partial
+            sk = kmv.KmvSketch(k).update(rng.choice(pool, int(rng.integers(0, 40))))
+            bufs.append(sk.encode())
+            codes.append(g)
+        data, offs = flat_buffers(bufs)
+        md, mo = kmv.merge_groups_flat(data, offs, np.array(codes), 14, k)
+        for g in range(14):
+            parts = [kmv.decode(b) for b, c in zip(bufs, codes) if c == g]
+            want = kmv.merge_all(parts) if parts else kmv.KmvSketch(k)
+            assert bytes(md[mo[g] : mo[g + 1]]) == want.encode()
+
+    def test_kmv_merge_rejects_unsorted_entries(self):
+        sk = kmv.KmvSketch(8).update(np.arange(1, 6, dtype=np.int64))
+        raw = bytearray(sk.encode())
+        raw[16:24], raw[24:32] = raw[24:32], raw[16:24]  # swap two entries
+        data, offs = flat_buffers([sk.encode(), bytes(raw)])
+        with pytest.raises(ValueError, match="Invalid KMV"):
+            kmv.merge_groups_flat(data, offs, np.array([0, 0]), 1, 8)
 
     def test_kmv_merge_rejects_corrupt_and_mismatched(self):
         _, inv, h = _pairs(7, n=1000, n_groups=4)
@@ -746,8 +777,6 @@ class TestNoPerGroupPython:
 
 
 def _flat_of(bufs):
-    from pfutil_spark.kernel.sketch_common import flat_buffers
-
     return flat_buffers(bufs)
 
 
@@ -1019,7 +1048,7 @@ class TestSpaceSavingV2:
 
 class TestSketchCommonHelpers:
     def test_gather_f8_runs(self):
-        from pfutil_spark.kernel.sketch_common import flat_buffers, gather_f8_runs
+        from pfutil_spark.kernel.sketch_common import gather_f8_runs
 
         rng = np.random.default_rng(3)
         runs = [rng.normal(size=int(n)) for n in rng.integers(0, 7, 30)]

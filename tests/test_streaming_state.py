@@ -1,7 +1,10 @@
-"""StreamingHllState: one merge per update, the manifest that pins the
-state's parameters and schema, the durable marker, and the plan shape
-(job counts) of update / estimates / current."""
+"""StreamingHllState: one merge per update, sized from the state's
+bytes on disk and the batch's estimated size, the manifest that pins
+the state's parameters and
+schema, the durable marker, and the plan shape (job, stage and task
+counts) of update / estimates / current."""
 
+import glob
 import json
 import os
 
@@ -9,10 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from pfutil_spark.operators.hll_agg import SKETCH_COL, pf_merge, pf_partial
+from pfutil_spark.operators.hll_agg import SKETCH_COL, pf_count_col, pf_merge, pf_partial
+from pfutil_spark.operators.sketch_agg import kmv_spec, sketch_multi_merge, sketch_multi_partial
 from pfutil_spark.streaming import StreamingHllState
 from pfutil_spark.streaming import _state
+from pfutil_spark.streaming.hll_stream import merge_partitions
 from tests._spark_counts import spark_counts
+from tests.conftest import plan_of
+
+MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+MB, GB = 1 << 20, 1 << 30
 
 
 def _rows(spark, n, seed, keys=40):
@@ -31,35 +40,151 @@ def _bytes_by_key(df):
     return {r["k"]: bytes(r[SKETCH_COL]) for r in df.collect()}
 
 
-def _reference(frames):
+def _union(frames):
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)
-    return _bytes_by_key(pf_merge(pf_partial(union, "u", ["k"]), ["k"]))
+    return union
+
+
+def _reference(frames):
+    return _bytes_by_key(pf_merge(pf_partial(_union(frames), "u", ["k"]), ["k"]))
+
+
+def _estimates(df):
+    return {r["k"]: r["estimate"] for r in df.collect()}
 
 
 @pytest.fixture
-def shuffle_partitions(spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+def set_conf(spark):
+    saved = {}
 
-    def set_to(n):
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    def set_to(key, value):
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, str(value))
 
     yield set_to
-    spark.conf.set("spark.sql.shuffle.partitions", old)
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+def _part_files(state):
+    return glob.glob(os.path.join(state._gen_path(state._current_gen()), "part-*"))
 
 
 @pytest.mark.parametrize("partitions", [1, 6])
-def test_single_merge_bytes_match_batch_merge(spark, tmp_path, shuffle_partitions, partitions):
+def test_single_merge_bytes_match_batch_merge(spark, tmp_path, set_conf, partitions):
     """base, three batches, then a replay of batch 2: the state's bytes
     equal one pf_merge(pf_partial(all rows)) — bytes depend neither on
     the partitioning nor on the order or grouping of the merges."""
-    shuffle_partitions(partitions)
+    set_conf("spark.sql.shuffle.partitions", partitions)
     base, (b1, b2, b3) = _batches(spark)
     state = StreamingHllState(spark, str(tmp_path / "s"), "u", by=("k",))
     for df in (base, b1, b2, b3, b2):
         state.update(df)
     assert _bytes_by_key(state.current()) == _reference([base, b1, b2, b3])
+
+
+def test_multi_task_state_merge_bytes_match_batch_merge(spark, tmp_path, set_conf):
+    """A state past the minimum partition size merges in n > 1 tasks and
+    is written as n files; base, three batches and a replay still give
+    the bytes of one pf_merge over all rows, and the estimates stay
+    those of the reference after every update."""
+    set_conf(MIN_PARTITION_SIZE, "1k")
+    base, (b1, b2, b3) = _batches(spark)
+    updates = [base, b1, b2, b3, b2]
+    state = StreamingHllState(spark, str(tmp_path / "s"), "u", by=("k",))
+    for i, df in enumerate(updates):
+        n = state._merge_partitions(state._current_gen(), df)
+        state.update(df)
+        assert n is None if i == 0 else len(_part_files(state)) == n
+        want = pf_merge(pf_partial(_union(updates[: min(i, 3) + 1]), "u", ["k"]), ["k"])
+        assert _bytes_by_key(state.current()) == _bytes_by_key(want)
+        assert _estimates(state.estimates()) == _estimates(
+            want.select("k", pf_count_col(SKETCH_COL).alias("estimate"))
+        )
+    assert n == min(spark.sparkContext.defaultParallelism, 8) > 1
+
+
+@pytest.mark.parametrize(
+    "merge_bytes,shuffle_partitions,min_partitions,want",
+    [
+        (0, 8, 3, 1),
+        (int(1.9 * MB), 8, 3, 2),
+        (10 * MB, 8, 3, 3),
+        (10 * GB, 200, 3, -(-10 * GB // (64 * MB))),
+        (10 * GB, 8, 3, 8),
+        (10 * MB, 2, 3, 2),
+        # parallelismFirst=false: AQE's minimum is one partition
+        (10 * MB, 8, 1, 1),
+        (100 * MB, 8, 1, 2),
+    ],
+)
+def test_merge_partition_rule(merge_bytes, shuffle_partitions, min_partitions, want):
+    """AQE's coalescing rule, at the default 64 MB advisory / 1 MB
+    minimum partition sizes; ``min_partitions`` is 3 slots when
+    ``parallelismFirst`` holds, else 1."""
+    got = merge_partitions(merge_bytes, shuffle_partitions, min_partitions, 64 * MB, MB)
+    assert got == want
+
+
+def test_merge_partitions_follow_aqe_confs(spark, tmp_path, set_conf):
+    """The state merge reads AQE's confs as AQE does, and leaves the
+    exchange to AQE where it cannot size it: AQE off, or a batch the
+    optimizer has no size for."""
+    set_conf(MIN_PARTITION_SIZE, "1k")
+    state = StreamingHllState(spark, str(tmp_path / "s"), "u", by=("k",))
+    batch = _rows(spark, 400, 1)
+    assert state._merge_partitions(-1, batch) is None  # before the first commit
+    state.update(_rows(spark, 3000, 0))
+    gen = state._current_gen()
+    slots = spark.sparkContext.defaultParallelism
+    assert state._merge_partitions(gen, batch) == min(slots, 8) > 1
+    unsized = spark.createDataFrame(batch.rdd, batch.schema)
+    assert state._merge_partitions(gen, unsized) is None
+    set_conf("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 3)
+    assert state._merge_partitions(gen, batch) == 3
+    set_conf("spark.sql.adaptive.coalescePartitions.minPartitionNum", 2)
+    assert state._merge_partitions(gen, batch) == 2
+    set_conf("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    assert state._merge_partitions(gen, batch) == 1
+    set_conf("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    assert state._merge_partitions(gen, batch) is None
+    set_conf("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    set_conf("spark.sql.adaptive.enabled", "false")
+    assert state._merge_partitions(gen, batch) is None
+
+
+def test_large_batch_into_small_state_splits_like_aqe(spark, tmp_path, set_conf):
+    """A batch far larger than its state is sized from the batch: the
+    merge runs at least the tasks AQE gives the same merge, and the
+    bytes stay those of one pf_merge over all rows."""
+    set_conf(MIN_PARTITION_SIZE, "16k")
+    set_conf("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism)
+    base, big = _rows(spark, 40, 0), _rows(spark, 60_000, 1)
+    state = StreamingHllState(spark, str(tmp_path / "s"), "u", by=("k",))
+    state.update(base)
+    with spark_counts(spark) as aqe:
+        pf_merge(pf_partial(big, "u", ["k"]).unionByName(state.current()), ["k"]).collect()
+    with spark_counts(spark) as upd:
+        state.update(big)
+    assert upd.stage_tasks[max(upd.stage_tasks)] >= aqe.stage_tasks[max(aqe.stage_tasks)] > 1
+    assert _bytes_by_key(state.current()) == _reference([base, big])
+
+
+def test_merge_plans_keep_aqe_partitioning(spark):
+    """Only the state merge sizes its own exchange: pf_merge and
+    sketch_multi_merge keep AQE's REPARTITION_BY_COL."""
+    rows = _rows(spark, 500, 0)
+    hll = pf_merge(pf_partial(rows, "u", ["k"]), ["k"])
+    specs = {"kmv": kmv_spec(64)}
+    partials = sketch_multi_partial(rows, {"kmv": (F.xxhash64("u"), specs["kmv"])}, by=["k"])
+    multi = sketch_multi_merge(partials, specs, by=["k"])
+    for df in (hll, multi):
+        assert "REPARTITION_BY_COL" in plan_of(df, "simple"), plan_of(df, "simple")
 
 
 def test_pinned_schema_equals_inferred(spark, tmp_path):
@@ -70,19 +195,40 @@ def test_pinned_schema_equals_inferred(spark, tmp_path):
     assert state.current().schema == spark.read.parquet(gen_dir).schema
 
 
-def test_plan_shape_counts(spark, tmp_path):
+def _update_counts(spark, tmp_path):
+    """Counts of one update() after the base commit, with the merge
+    task count the state and the batch call for, and of estimates() and
+    current()."""
     base, (b1, _, _) = _batches(spark)
     state = StreamingHllState(spark, str(tmp_path / "s"), "u", by=("k",))
     state.update(base)
+    n = state._merge_partitions(state._current_gen(), b1)
     with spark_counts(spark) as upd:
         state.update(b1)
     with spark_counts(spark) as est:
         state.estimates().collect()
     with spark_counts(spark) as cur:
         state.current()
-    assert upd.jobs <= 2, upd
+    return n, upd, est, cur
+
+
+def test_plan_shape_counts(spark, tmp_path):
+    """update(): 2 jobs, 3 stages, the last (merge + write) of n tasks."""
+    n, upd, est, cur = _update_counts(spark, tmp_path)
+    assert (upd.jobs, upd.stages) == (2, 3), upd
+    assert upd.stage_tasks[max(upd.stage_tasks)] == n == 1, upd
     assert est.jobs == 1, est
     assert cur.jobs == 0, cur
+
+
+def test_plan_shape_counts_multi_task_merge(spark, tmp_path, set_conf):
+    """A state past the minimum partition size: the same 2 jobs and 3
+    stages, with a merge stage of one task per slot."""
+    set_conf(MIN_PARTITION_SIZE, "1k")
+    n, upd, _, _ = _update_counts(spark, tmp_path)
+    assert (upd.jobs, upd.stages) == (2, 3), upd
+    assert n == min(spark.sparkContext.defaultParallelism, 8) > 1
+    assert upd.stage_tasks[max(upd.stage_tasks)] == n, upd
 
 
 def test_manifest_written_at_first_commit(spark, tmp_path):
